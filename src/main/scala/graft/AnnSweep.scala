@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN tuning sweep: top-1/top-k recall of the multi-probe LSH and IVF
@@ -62,14 +61,8 @@ object AnnSweep {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // pinned: ANN.md and the operating points above were swept at 8 cores
+    val spark = GraftSession(cores = Some(8))
     import spark.implicits._
 
     val emb = Tables.embeddings(spark, sfDir)

@@ -28,9 +28,9 @@ import org.apache.spark.sql.SparkSession
   * they create (the caller hasn't consumed yet — NEXT r9 #2); the scope
   * frees them at the one point where "consumed" is knowable.
   *
-  * Both driver mains use it: Verify wraps each query's write and Bench
-  * wraps each measured run, so neither accumulates blocks across the
-  * 95-query inventory.
+  * Verify wraps each query's write, Bench each measured run and
+  * `pipeline.Runner` each ingest run, so none of them accumulates blocks
+  * across the runs of one session.
   */
 object Barriers {
 

@@ -325,26 +325,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // the one knob a real deployment sizes to the data, not the box
-    // (r15 100× decade): partitions default to the thread count, but a
-    // scale probe raises them so each sort/agg partition fits in memory
-    // — the x205 100× run spilled 3 GB at 32 partitions and 0 at 256
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // events.parquet is TIMESTAMP(NANOS); session-build conf, not a
-      // loader side effect (Tables.eventsRaw enforces)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // warm-up: session init, codegen, parquet footer caches
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
@@ -426,13 +408,6 @@ object Bench {
       val host = (HostProbe.stealPctSince(statBefore), HostProbe.load1())
       (warm :+ last, shuffle, retry, host)
     }
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
 
     val hostStart = (HostProbe.procStat(), HostProbe.load1())
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -444,7 +419,7 @@ object Bench {
     val qsRaw = results.map { case (k, m, _, _, _, _, _) => "\"" + k + f"\":$m%.3f" }
       .mkString("{", ",", "}")
     val errs = results.map { case (k, _, _, e, _, _, _) =>
-      "\"" + k + "\":" + e.map(jsonStr).getOrElse("null")
+      "\"" + k + "\":" + e.map(Json.quote).getOrElse("null")
     }.mkString("{", ",", "}")
     val runs = results.map { case (k, _, s, _, _, _, _) =>
       "\"" + k + "\":" + s.map(v => f"$v%.3f").mkString("[", ",", "]")
@@ -570,7 +545,7 @@ object Bench {
         val st = if (still) "breach" else "match_on_recheck"
         rechecks(k) = f"""{"first_s":$firstMedian%.3f,"first_steal_pct":$firstSteal%.2f,""" +
           f""""recheck_s":$m2%.3f,"recheck_steal_pct":$steal2%.2f,"status":"$st"""" +
-          recheckErr.map(e => s""","recheck_error":${jsonStr(e)}""").getOrElse("") + "}"
+          recheckErr.map(e => s""","recheck_error":${Json.quote(e)}""").getOrElse("") + "}"
         if (recheckErr.isEmpty) adjudicated(k) = math.min(firstMedian, m2)
         (k, st)
       case other => other
@@ -646,7 +621,7 @@ object Bench {
               f""""recheck_s":$m2%.3f,"recheck_steal_pct":$steal2%.2f,"status":"$st"""" +
               second.map { case (m3, s3) =>
                 f""","recheck2_s":$m3%.3f,"recheck2_steal_pct":$s3%.2f""" }.getOrElse("") +
-              recheckErr.map(e => s""","recheck_error":${jsonStr(e)}""").getOrElse("") + "}"
+              recheckErr.map(e => s""","recheck_error":${Json.quote(e)}""").getOrElse("") + "}"
             if (recheckErr.isEmpty) adjudicated(k) = best
           }
         }
@@ -673,7 +648,7 @@ object Bench {
         (if (retried.isEmpty) ""
          else ",\"task_retries\":" + retried.map {
            case (k, _, _, _, _, (f, r, why), _) =>
-             "\"" + k + s"""\":{"failed":$f,"reattempted":$r,"reason":${jsonStr(why)}}"""
+             "\"" + k + s"""\":{"failed":$f,"reattempted":$r,"reason":${Json.quote(why)}}"""
          }.mkString("{", ",", "}"))
     // host-contention probe (r14, NEXT gap 2): hypervisor steal share and
     // 1-min loadavg, overall and per query — three r13 sweeps showed
@@ -816,7 +791,7 @@ object Bench {
     // tail yields the parsed medians + pin verdicts instead of null
     // (r13 VERDICT #7) — the detailed first line keeps every field.
     val errNonNull = results.flatMap { case (k, _, _, e, _, _, _) =>
-      e.map(msg => "\"" + k + "\":" + jsonStr(msg)) }
+      e.map(msg => "\"" + k + "\":" + Json.quote(msg)) }
       .mkString("{", ",", "}")
     val pinBreaches = deltas.filter(_._3).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")

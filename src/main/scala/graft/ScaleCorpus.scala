@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe corpus generator (VERDICT r12 #6): the committed testdata
@@ -25,15 +24,7 @@ object ScaleCorpus {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, mulStr) = args
     val mul = mulStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val docs = Tables.documents(spark, srcDir)
     val reps = spark.range(mul).select(col("id").cast("int").as("k"))
     docs.crossJoin(broadcast(reps))

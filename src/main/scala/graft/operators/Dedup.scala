@@ -1057,7 +1057,7 @@ object Dedup {
     * selective: the indexed volume drops by ~1/(1+t) per doc and hot
     * (stopword-ish) shingles fall out of the prefix entirely, shrinking
     * both shuffle volume and the worst hot-key bucket vs q51's full
-    * inverted index. MEASURED (DedupPrefixTiming, SCALING.md r11): on a
+    * inverted index. MEASURED (SCALING.md r11): on a
     * boilerplate-heavy corpus (35-word footer on 60% of docs,
     * sf0.1-sized) q51 takes 47.1 s, "hash" 11.9 s, "df" 3.18 s —
     * 14.8×/3.7×; on the natural corpus the three sit within ~25% and

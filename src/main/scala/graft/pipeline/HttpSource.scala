@@ -386,17 +386,6 @@ object HttpSource {
     * json.dumps(sort_keys=True), http_client.py:152). */
   def headersJson(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${escape(k)}": "${escape(v)}"""" }
+      .map { case (k, v) => s"${graft.Json.quote(k)}: ${graft.Json.quote(v)}" }
       .mkString("{", ", ", "}")
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 }

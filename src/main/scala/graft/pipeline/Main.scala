@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry (reference cli.py:26–58: `run --provider X [--limit N]`):
   *
   *   runMain graft.pipeline.Main run --provider sec_edgar [--limit 1]
@@ -40,16 +38,7 @@ object Main {
     val idModeName = opts.getOrElse("id-mode", "contiguous")
     val idMode = ProvenanceStore.idMode(idModeName)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(master = sys.env.get("SPARK_MASTER"))
     try {
       val res = Runner.run(spark, connector, limit, fixtures, warehouse, blobs,
         runs, live = live, config = config, idMode = idMode)

@@ -186,14 +186,8 @@ object GoldenSpec {
 /** Prints the current golden map — paste into [[GoldenSpec.expected]]. */
 object GoldenHashes {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // pinned at the test session's 4 cores, where GoldenSpec checks the map
+    val spark = GraftSession(cores = Some(4))
     // optional args narrow the regeneration to the named queries
     val wanted = if (args.isEmpty) GoldenSpec.queries
       else GoldenSpec.queries.filter(args.contains)

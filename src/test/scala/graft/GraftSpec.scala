@@ -103,6 +103,14 @@ class GraftSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(body.contains("SEC fixture artifact"))
   }
 
+  test("the shared session carries GraftSession's invariants") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sparkContext.uiWebUrl.isEmpty, "UI must be off")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+  }
+
   test("GraftExtensions injects without error") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)

@@ -288,6 +288,32 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(runJson.contains("\"status\": \"failed\""))
   }
 
+  test("Runner.run releases every RDD it caches or pins, on success and on failure") {
+    // the ids, not only the count: the context's registry holds its RDDs
+    // weakly, so the cleaner may drop an older suite's entry mid-run
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val count = Barriers.persistentRddCount(spark)
+    Runner.run(spark, SecEdgarConnector, 1, fixtures, tmpDir("wh"), tmpDir("blobs"),
+      tmpDir("runs"))
+    assert((persisted -- before).isEmpty, "a successful run left RDDs persisted")
+    assert(Barriers.persistentRddCount(spark) <= count)
+    intercept[Exception] {
+      Runner.run(spark, SecEdgarConnector, 1, fixtures,
+        "/proc/graft-invalid/warehouse", tmpDir("blobs"), tmpDir("runs"))
+    }
+    assert((persisted -- before).isEmpty, "a failed run left RDDs persisted")
+  }
+
+  test("run.json escapes the provider: a name with a quote and a backslash parses back") {
+    val res = Runner.run(spark, OddNameConnector, 1, fixtures, tmpDir("wh"),
+      tmpDir("blobs"), tmpDir("runs"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get(s"${res.runDir}/run.json").toFile)
+    assert(json.get("args").get("provider").asText() == OddNameConnector.name)
+    assert(json.get("status").asText() == res.status)
+  }
+
   test("attempts capture redacts sensitive headers") {
     val df = Seq(
       (Map("Authorization" -> "Bearer abc", "Content-Type" -> "application/json",
@@ -488,4 +514,17 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   * shares the JVM, so tests can observe per-partition behavior). */
 object HostRecorder {
   val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+}
+
+/** SecEdgarConnector under a name that JSON must escape. */
+object OddNameConnector extends Connector {
+  val name = "sec\"edgar\\odd"
+  val artifactFixture = SecEdgarConnector.artifactFixture
+  def plan(spark: org.apache.spark.sql.SparkSession, limit: Int) =
+    SecEdgarConnector.plan(spark, limit)
+  def metadataRequests(spark: org.apache.spark.sql.SparkSession,
+      items: org.apache.spark.sql.Dataset[Model.PlanItem]) =
+    SecEdgarConnector.metadataRequests(spark, items)
+  def extract(responses: org.apache.spark.sql.DataFrame) =
+    SecEdgarConnector.extract(responses)
 }

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared local session for all suites (getOrCreate reuses one JVM-wide
-  * session; Test/fork=true gives the suite JVM the JDK17 add-opens). */
+  * session; Test/fork=true gives the suite JVM the JDK17 add-opens).
+  * Pinned at 4 cores so plan and partition assertions do not move with
+  * the box; the warehouse is a temp dir for the bucketed-table specs. */
 trait SparkSessionTestWrapper {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(cores = Some(4),
+    warehouseDir = Some(java.nio.file.Files.createTempDirectory("graft-wh").toString))
 
   val sf001 = "/root/testdata/sf0.001"
 }
