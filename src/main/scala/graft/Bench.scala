@@ -1,9 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.annotation.{JsonIgnoreProperties, JsonInclude}
+import com.fasterxml.jackson.databind.{ObjectMapper, SerializationFeature}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints one serialized [[Bench.Record]] line with
+  * per-query seconds, then (opt-in) the scaling line, then the compact
+  * [[Bench.Tail]] last.
   *
   * Each query materializes fully through the `noop` sink (count() would
   * let Catalyst prune the projection work). A session warm-up query
@@ -18,40 +25,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  type Lane = (SparkSession, String) => DataFrame
+
   /** Headline set: one representative per operator family, held STABLE
     * across rounds so BENCH_r{N} totals stay comparable as the query
     * inventory grows. r5: q55 (exact all-pairs cosine, O(n²) BNLJ — still
     * oracle-checked in CORRECTNESS) replaced by q55b, the LSH-candidate
     * form whose (band, key) equi-join is the plan that survives 100 TB;
     * PlanSpec pins "no BroadcastNestedLoopJoin in any headline plan".
-    *
-    * r8 (DOCUMENTED BASELINE BREAK, r7 verdict item 7): +q74
-    * (decontamination — the curation representative) and +q78 (PPJoin
-    * prefix-filtered exact Jaccard), so the headline tracks the operator
-    * families that now dominate the engine's value. The pre-r8 12-query
-    * total is still emitted as `legacy12_total` (computed from the same
-    * run's medians) for one more round of cross-round continuity. */
-  val legacy12: Seq[String] = Seq(
+    * r8 added q74 (decontamination) and q78 (PPJoin exact Jaccard); r13
+    * added the production lanes x52/x55b beside the md5-oracle faces of
+    * q52/q55b. */
+  val headline: Seq[String] = Seq(
     "q01_pricing_summary", "q02_filter_predicates", "q03_join_revenue_topk",
     "q04_join_broadcast_dims", "q09_window_topk_per_group",
     "q24_exists_filtered", "q36_tumbling_window", "q41_quality_score",
     "q51_ngram_jaccard_pairs", "q52_minhash_lsh_pairs",
-    "q54_cosine_topk", "q55b_cosine_pairs_lsh")
-  /** r13: the q52/q55b DECLARED faces carry the md5-oracle price
-    * (salted lanes / md5 planes), so the headline ALSO measures their
-    * production lanes (x52/x55b) and the run emits `production12_total`
-    * — legacy12 with the two declared faces swapped for the lanes a
-    * deployment actually runs — so cross-round engine comparisons stay
-    * apples-to-apples while the declared faces keep their own pins. */
-  val headline: Seq[String] =
-    legacy12 ++ Seq("q74_decontamination", "q78_jaccard_prefix_filter",
-      "x52_minhash_lsh_pairs_xxhash", "x55b_cosine_pairs_lsh_native")
-
-  private val production12: Seq[String] = legacy12.map {
-    case "q52_minhash_lsh_pairs" => "x52_minhash_lsh_pairs_xxhash"
-    case "q55b_cosine_pairs_lsh" => "x55b_cosine_pairs_lsh_native"
-    case q => q
-  }
+    "q54_cosine_topk", "q55b_cosine_pairs_lsh", "q74_decontamination",
+    "q78_jaccard_prefix_filter", "x52_minhash_lsh_pairs_xxhash",
+    "x55b_cosine_pairs_lsh_native")
 
   /** Production hash-lane bench faces (VERDICT r12 #4): the declared
     * q52/q53/q55b/q65/q89/q98/q123/q169/q189/q204/q205/q208/q218 faces
@@ -64,7 +56,7 @@ object Bench {
     * with duplicate semantics); they run in the BENCH_ALL sweep (and by
     * name via SPARK_GRAFT_BENCH_ONLY) and are pinned in
     * bench_full_pins.json like every declared query. */
-  val productionLanes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
+  val productionLanes: Map[String, Lane] = Map(
     // documentsSpread (r17): the xxhash signature fold ran as one 0.92 s
     // task fused into the single-split scan (JobProfile; the r16 A/B that
     // left this lane alone was taken under session noise — re-measured
@@ -195,8 +187,6 @@ object Bench {
           a(0) += m.shuffleReadMetrics.totalBytesRead
           a(1) += m.shuffleWriteMetrics.bytesWritten
           a(2) += m.diskBytesSpilled
-          // peak execution memory is tracked PER TASK in onTaskEnd —
-          // this stage-level field is task-summed (see r15 ADVICE #2)
         }
         // a stage re-attempt re-counts every task's metrics — the exact
         // inflation mode; record it as taskFailures-equivalent weight
@@ -208,12 +198,11 @@ object Bench {
         }
       }
     }
-    /** (taskFailures, reAttemptedTasks, firstReason) for a group. */
-    def retryStats(group: String): (Long, Long, String) = {
+    def retryStats(group: String): Retries = {
       val a = retries.get(group)
       val (f, r) =
         if (a == null) (0L, 0L) else a.synchronized((a(0), a(1)))
-      (f, r, retryReason.getOrDefault(group, ""))
+      Retries(f, r, retryReason.getOrDefault(group, ""))
     }
     private def snap(group: String): (Long, Long, Long, Long) =
       agg.get(group) match {
@@ -222,7 +211,7 @@ object Bench {
       }
     /** Listener events are async: settle = two identical 100 ms reads
       * (bounded) before snapshotting the group's totals. */
-    def settled(group: String): (Long, Long, Long, Long) = {
+    def settled(group: String): Shuffle = {
       var prev = (-1L, -1L, -1L, -1L)
       var cur = snap(group)
       var waited = 0
@@ -230,7 +219,8 @@ object Bench {
         Thread.sleep(100); waited += 100
         prev = cur; cur = snap(group)
       }
-      cur
+      val (rd, wr, sp, pk) = cur
+      Shuffle(wr / 1e6, rd / 1e6, sp / 1e6, pk / 1e6)
     }
   }
 
@@ -272,542 +262,445 @@ object Bench {
     // q51/q52/q55b/q74 re-pin)
     "x52_minhash_lsh_pairs_xxhash" -> 1.2, "x55b_cosine_pairs_lsh_native" -> 6.5)
 
-  /** Coarse per-query wall-clock budget for the FULL-inventory sweep
-    * (VERDICT r10 #3): medians pinned from a committed sf0.1 run live in
-    * `bench_full_pins.json` (override: SPARK_GRAFT_BENCH_PINS). In
-    * SPARK_GRAFT_BENCH_ALL=1 mode at sf0.1, a query whose median exceeds
-    * max(1 s, 2 × pin) fails the run — so a regression in any of the
-    * ~200 non-headline queries is a machine-readable rc, not a number
-    * only a human diffing SCALING.md prose would catch. Wall-clock is
-    * noisy (unlike the shuffle pins), hence the loose 2× band and the
-    * 1 s floor; an intentional slowdown updates the pin in the same
-    * commit (tools/pin_bench.py regenerates from a BENCH_FULL artifact).
-    * Calibrated for the DEFAULT runs=3 median protocol: at
-    * SPARK_GRAFT_BENCH_RUNS=1 the single sample carries per-query
-    * codegen compilation and sub-second queries can false-breach
-    * (measured: 5/202 at runs=1, 0/202 at runs=3 on the same box). */
-  // read once per process: the budget-pin and sweep-allowance loaders
-  // share one snapshot of the file (r15 review finding)
-  private lazy val pinsText: String = {
-    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_PINS", "bench_full_pins.json")
-    val f = new java.io.File(path)
-    if (!f.exists()) ""
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  /** Shuffle volume of a lane's measured run in MB, as measured; the
+    * record rounds it to 0.1 MB. */
+  case class Shuffle(write_mb: Double, read_mb: Double, spill_mb: Double,
+      peak_exec_mb: Double)
+  /** Task failures and re-attempted tasks over all of a lane's runs, with
+    * the first failure reason. */
+  case class Retries(failed: Long, reattempted: Long, reason: String)
+  /** Hypervisor steal share across a lane's runs and the loadavg after. */
+  case class Host(steal_pct: Double, load1: Double)
+  /** Everything measured for one lane: its median, samples, first error,
+    * the measured run's shuffle, retries and host contention. */
+  case class LaneResult(name: String, median: Double, samples: Seq[Double],
+      error: Option[String], shuffle: Shuffle, retries: Retries, host: Host)
+  /** One re-sample of a lane: its median, steal share and first error. */
+  case class Recheck(median: Double, steal: Double, error: Option[String])
+  /** A `budget_rechecks` entry: the first pass, every re-sample and the
+    * verdict. */
+  case class Adjudication(first_s: Double, first_steal_pct: Double,
+      recheck_s: Double, recheck_steal_pct: Double, status: String,
+      recheck2_s: Option[Double], recheck2_steal_pct: Option[Double],
+      recheck_error: Option[String], recheck2_error: Option[String])
+  case class HostSummary(cpus: Int, steal_pct: Double, load1_start: Double,
+      load1_end: Double, per_query: Map[String, Host])
+
+  /** The detailed first line. `failed`, `notes` (stderr verdicts) and
+    * `streaks` (the next recheck-history state) are not printed. */
+  @JsonIgnoreProperties(Array("failed", "notes", "streaks"))
+  case class Record(metric: String = "total", value: Double,
+      value_raw: Double, unit: String = "sec", queries: Map[String, Double],
+      queries_raw: Map[String, Double],
+      adjudication_diverged: Seq[String], runs: Map[String, Seq[Double]],
+      p95: Map[String, Double], shuffle: Map[String, Shuffle],
+      shuffle_delta_vs_pinned: Option[Map[String, Any]],
+      shuffle_pin_status: Option[Map[String, String]],
+      sweep_shuffle_allowance: Option[Map[String, Double]],
+      median_budget_status: Option[Map[String, String]],
+      budget_rechecks: Option[Map[String, Adjudication]],
+      task_retry_total: Long, task_retries: Option[Map[String, Retries]],
+      host: HostSummary, errors: Map[String, Option[String]],
+      runs_per_query: Int, sf: String,
+      failed: Boolean, notes: Seq[String], streaks: Option[Map[String, Int]]) {
+
+    /** The compact last line: the committed artifact is a bounded tail
+      * capture of the output, so whatever prints last is what survives
+      * (r9 lost its medians when the one full line outgrew the window).
+      * Errors and breaches are compact exception maps, normally empty. */
+    def tail: Tail = {
+      val rechecked = budget_rechecks.toSeq.flatten.count(_._2.recheck_error.isEmpty)
+      Tail(value = value, value_raw = value_raw, queries = queries,
+        errors = errors.collect { case (k, Some(e)) => k -> e },
+        shuffle_pin_breaches =
+          shuffle_pin_status.toSeq.flatten.collect { case (k, "breach") => k }.sorted,
+        budget_breaches = median_budget_status.toSeq.flatten
+          .collect { case (k, "breach" | "breach_on_repeat") => k }.sorted,
+        task_retry_total = task_retry_total, steal_pct = host.steal_pct,
+        rechecked_lanes = Option(rechecked).filter(_ > 0),
+        adjudication_diverged = adjudication_diverged, sf = sf)
+    }
   }
 
-  private def loadFullPins(): Map[String, Double] =
-    // [qx] — the x-lane production faces are pinned too (a q-only
-    // match silently left all 13 x-lanes "unpinned", r13 VERDICT #2)
-    "\"([qx][^\"]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(pinsText)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  case class Tail(metric: String = "total", value: Double, value_raw: Double,
+      unit: String = "sec", queries: Map[String, Double],
+      errors: Map[String, String], shuffle_pin_breaches: Seq[String],
+      budget_breaches: Seq[String], task_retry_total: Long, steal_pct: Double,
+      rechecked_lanes: Option[Int], adjudication_diverged: Seq[String],
+      sf: String)
 
-  /** Sweep-context shuffle allowances (r14 VERDICT #1): a lane with a
-    * REPRODUCED, root-caused sweep-only shuffle delta records its
-    * expected multiplier in bench_full_pins.json under a `"sweep:<lane>"`
-    * key (the prefix keeps it out of the budget-pin regex above). In
-    * BENCH_ALL mode the lane's acceptable write band becomes
-    * [pin − tol, pin × allowance + 0.2 MB] — so the committed sweep
-    * artifact reads "match" for the DOCUMENTED delta and the gate
-    * re-arms for anything beyond it (a perpetual "breach"-by-design
-    * entry would camouflage a new, unrelated regression). Fresh-session
-    * headline runs ignore allowances entirely: their byte-exact pins
-    * stay the tight ±20% band.
+  @JsonIgnoreProperties(Array("failed"))
+  case class Scaling(metric: String = "scaling_slopes",
+      slopes: Map[String, Double],
+      seconds_by_sf: Map[String, Map[String, Double]], runs_per_query: Int,
+      failed: Boolean)
+
+  /** The one serializer and parser for every Bench record and pin file:
+    * map entries sorted by key, absent options omitted, `null` kept for a
+    * map value (a lane without an error). */
+  private[graft] val mapper: ObjectMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+    .defaultPropertyInclusion(JsonInclude.Value.construct(
+      JsonInclude.Include.NON_ABSENT, JsonInclude.Include.ALWAYS))
+    .build()
+
+  def json(value: Any): String = mapper.writeValueAsString(value)
+
+  private def round(x: Double, places: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(places, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def s3(x: Double) = round(x, 3)
+  private def r2(x: Double) = round(x, 2)
+  private def r1(x: Double) = round(x, 1)
+
+  /** `bench_full_pins.json` (override: SPARK_GRAFT_BENCH_PINS), medians
+    * pinned from a committed sf0.1 run (VERDICT r10 #3). In BENCH_ALL mode
+    * at sf0.1 a query whose median exceeds max(1 s, 2 × pin) fails the
+    * run, so a regression in any non-headline query is a machine-readable
+    * rc. Wall-clock is noisy, hence the loose band; tools/pin_bench.py
+    * regenerates the pins in the commit that changes the speed. Calibrated
+    * for runs=3: at SPARK_GRAFT_BENCH_RUNS=1 the single sample carries
+    * codegen and sub-second queries can false-breach (5/202 vs 0/202).
     *
-    * The one current entry is x55b's 1.4× (measured +35%, SCALING.md
-    * "x55b sweep-context shuffle" section): under late-sweep memory
-    * pressure AQE re-plans one barriered join — a localCheckpoint'd
-    * side's in-memory size estimate crosses the broadcast threshold →
-    * SMJ, +2 MB sort shuffle — while every fresh headline session
-    * matches the 6.0 MB pin exactly. */
-  private def loadSweepShuffleAllowances(): Map[String, Double] =
-    "\"sweep:([^\"]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(pinsText)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    * Keys prefixed `sweep:` are sweep-context shuffle allowances (r14
+    * VERDICT #1): a REPRODUCED, root-caused sweep-only shuffle delta
+    * widens that lane's BENCH_ALL write band to [pin − tol, pin ×
+    * allowance + 0.2 MB], and the gate re-arms beyond it; headline runs
+    * keep the ±20% band. The one entry is x55b's 1.4× (SCALING.md "x55b
+    * sweep-context shuffle": late-sweep AQE re-plans one join to SMJ). */
+  case class Pins(budget: Map[String, Double], sweepAllowance: Map[String, Double])
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = GraftSession()
+  object Pins {
+    val empty: Pins = Pins(Map.empty, Map.empty)
 
+    def load(path: String): Pins = readIfExists(path).fold(empty) { text =>
+      val (allow, budget) = numericFields(text).partition(_._1.startsWith("sweep:"))
+      Pins(budget.map { case (k, v) => k -> v.asDouble }.toMap,
+        allow.map { case (k, v) => k.stripPrefix("sweep:") -> v.asDouble }.toMap)
+    }
+  }
+
+  private def numericFields(text: String) =
+    mapper.readTree(text).properties().asScala.toSeq
+      .filter(_.getValue.isNumber).map(e => e.getKey -> e.getValue)
+
+  private def readIfExists(path: String): Option[String] = {
+    val f = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(f)) None
+    else Some(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+  }
+
+  /** What a run is judged against: the mode (full sweep or headline), the
+    * shuffle and budget pins (empty off the pinned SF) and the sweep's
+    * recheck streaks from the previous invocation. */
+  case class Gates(sweep: Boolean = false,
+      shufflePins: Map[String, Double] = Map.empty,
+      pins: Pins = Pins.empty, streaks: Map[String, Int] = Map.empty)
+
+  /** Assemble the record from measured lanes. `recheck(lane, n)` takes
+    * the n-th re-sample of a lane; `host` is read after the rechecks so
+    * the overall steal window covers them. */
+  def record(results: Seq[LaneResult], sf: String, runsPerQuery: Int,
+      gates: Gates, recheck: (String, Int) => Recheck,
+      host: => HostSummary): Record = {
+    val lanes = results.sortBy(_.name)
+    val pins = gates.pins.budget
+
+    // committed-artifact self-check: measured shuffle write vs the pinned
+    // expectation, as a relative delta (0.2 MB absolute floor absorbs AQE
+    // coalescing jitter on the near-zero pins). A query that errored
+    // shuffled 0 bytes because it DID NOT RUN — it reads "did_not_run",
+    // never a vacuous 0.00 (r9 ADVICE). Sweep allowances replace the
+    // relative tolerance on the high side, in BENCH_ALL only.
+    val allowance = if (gates.sweep) gates.pins.sweepAllowance else Map.empty[String, Double]
+    val shufflePinned = lanes.flatMap { r =>
+      gates.shufflePins.get(r.name).map { pin =>
+        val mb = r.shuffle.write_mb
+        val tol = math.max(0.2, 0.2 * pin)
+        val hi = allowance.get(r.name).fold(pin + tol)(a => pin * a + 0.2)
+        val breach = r.error.isEmpty && (mb > hi || mb < pin - tol)
+        (r, pin, breach)
+      }
+    }
+
+    // Mechanized contention adjudication (r14 VERDICT #7): a slow lane
+    // re-runs immediately under a fresh job group and the record carries
+    // every sample (median + steal window). An errored recheck is not a
+    // reproduced slowdown, but it never clears the lane either. The
+    // adjudicated median is the min of the error-free medians actually
+    // measured, never an extrapolation.
+    def adjudicate(r: LaneResult, trigger: Double, rechecks: Int,
+        slow: String): (Adjudication, Option[Double]) = {
+      val first = recheck(r.name, 1)
+      val second =
+        if (rechecks > 1 && first.error.isEmpty && first.median > trigger)
+          Some(recheck(r.name, 2))
+        else None
+      val clean2 = second.filter(_.error.isEmpty)
+      val best = (Seq(r.median, first.median) ++ clean2.map(_.median)).min
+      val status =
+        if (first.error.isDefined || best > trigger) slow else "match_on_recheck"
+      (Adjudication(s3(r.median), r2(r.host.steal_pct), s3(first.median),
+        r2(first.steal), status, clean2.map(c => s3(c.median)),
+        clean2.map(c => r2(c.steal)), first.error, second.flatMap(_.error)),
+        if (first.error.isEmpty) Some(best) else None)
+    }
+
+    // The modes gate rc differently on purpose: byte-exact shuffle pins
+    // assume a fresh session (a 200-query sweep inflates stage metrics via
+    // re-attempts), so the sweep gates on budgets, rechecking each breach
+    // once. Headline mode (r15 VERDICT next-#2, r17) rechecks a lane above
+    // 1.3× its pin, twice if the first recheck is still slow (a storm can
+    // cover both); informational, its rc gates on errors + shuffle pins.
+    val budget0: Seq[(String, String)] =
+      if (!gates.sweep || pins.isEmpty) Nil
+      else lanes.map { r =>
+        r.name -> (if (r.error.isDefined) "did_not_run"
+          else pins.get(r.name) match {
+            case None => "unpinned" // new query — pin it with tools/pin_bench.py
+            case Some(pin) if r.median > math.max(1.0, 2.0 * pin) => "breach"
+            case Some(_) => "match"
+          })
+      }
+    val adjudications: Map[String, (Adjudication, Option[Double])] =
+      if (gates.sweep) lanes.filter(r => budget0.contains(r.name -> "breach"))
+        .map(r => r.name -> adjudicate(r, math.max(1.0, 2.0 * pins(r.name)), 1, "breach"))
+        .toMap
+      else lanes.flatMap { r =>
+        pins.get(r.name).map(pin => math.max(1.0, 1.3 * pin))
+          .filter(trigger => r.error.isEmpty && r.median > trigger)
+          .map(trigger => r.name -> adjudicate(r, trigger, 2, "slow_on_recheck"))
+      }.toMap
+
+    // Cross-sweep streak escalation (r15 ADVICE #3): a lane that needs a
+    // recheck to pass in two consecutive sweeps escalates to
+    // breach_on_repeat (rc-failing) — it then either reproduces on a
+    // fresh-session headline (real) or comes back as a clean match
+    // (storm), which resets the streak.
+    val budget = budget0.map { case (k, st) =>
+      val s = adjudications.get(k).fold(st)(_._1.status)
+      if (s == "match_on_recheck" && gates.streaks.getOrElse(k, 0) >= 1) k -> "breach_on_repeat"
+      else k -> s
+    }
+    val streaks =
+      if (budget.isEmpty) None
+      else Some(budget.collect {
+        case (k, "match_on_recheck") => k -> (gates.streaks.getOrElse(k, 0) + 1)
+      }.toMap)
+
+    // `queries` and `value` are the ADJUDICATED medians (r17): a rechecked
+    // lane reports the min of its measured medians, every other lane its
+    // plain median; `queries_raw` keeps the uncorrected ones. A lane whose
+    // two medians still differ by ≥ 1.3× is listed, not hidden.
+    val adjusted = lanes.map(r =>
+      r.name -> adjudications.get(r.name).flatMap(_._2).getOrElse(r.median)).toMap
+    val diverged = lanes.collect {
+      case r if adjusted(r.name) > 0 && r.median / adjusted(r.name) >= 1.3 => r.name
+    }
+    // re-attempt accounting (VERDICT r12 #2): a clean run proves itself
+    // with task_retry_total 0; otherwise counts and the first reason ship
+    val retried = lanes.filter(r => r.retries.failed + r.retries.reattempted > 0)
+
+    val notes = budget.collect {
+      case (k, "breach") => f"[bench] MEDIAN BUDGET BREACH $k: >2x its " +
+        f"${pins(k)}%.2f s pin, REPRODUCED on recheck (budget_rechecks): fix it " +
+        "or update bench_full_pins.json in the same commit"
+      case (k, "breach_on_repeat") => s"[bench] REPEATED TRANSIENT BREACH $k: " +
+        "needed a recheck in this AND the previous sweep; confirm with a " +
+        "fresh-session headline run (a clean match resets the streak)"
+      case (k, "match_on_recheck") => s"[bench] transient budget breach $k " +
+        "vanished on recheck (budget_rechecks); the pin stands"
+    } ++ shufflePinned.collect { case (r, pin, true) =>
+      f"[bench] SHUFFLE REGRESSION ${r.name}: ${r.shuffle.write_mb}%.1f MB " +
+        f"written vs pinned $pin%.1f MB: " + (if (gates.sweep)
+          "informational in BENCH_ALL (verify with a headline run)"
+        else "plan changed; fix it or update the pin in the same commit")
+    }
+    val failed = lanes.exists(_.error.isDefined) ||
+      budget.exists(b => b._2 == "breach" || b._2 == "breach_on_repeat") ||
+      (!gates.sweep && shufflePinned.exists(_._3))
+
+    def someIf[T](cond: Boolean)(v: => T): Option[T] = if (cond) Some(v) else None
+    def byName[T](f: LaneResult => T): Map[String, T] = lanes.map(r => r.name -> f(r)).toMap
+    Record(
+      value = s3(adjusted.values.sum), value_raw = s3(lanes.map(_.median).sum),
+      queries = adjusted.map { case (k, v) => k -> s3(v) },
+      queries_raw = byName(r => s3(r.median)),
+      adjudication_diverged = diverged, runs = byName(_.samples.map(s3)),
+      // p95: nearest rank over the in-process samples (≈max at 3 runs)
+      p95 = byName { r =>
+        val s = r.samples.sorted
+        s3(s(math.min(s.size - 1, math.ceil(0.95 * s.size).toInt - 1)))
+      },
+      shuffle = byName { case LaneResult(_, _, _, _, Shuffle(wr, rd, sp, pk), _, _) =>
+        Shuffle(r1(wr), r1(rd), r1(sp), r1(pk))
+      },
+      shuffle_delta_vs_pinned = someIf(shufflePinned.nonEmpty)(shufflePinned.map {
+        case (r, _, _) if r.error.isDefined => r.name -> "did_not_run"
+        case (r, pin, breach) =>
+          r.name -> r2(if (breach) (r.shuffle.write_mb - pin) / math.max(pin, 0.1) else 0.0)
+      }.toMap),
+      shuffle_pin_status = someIf(shufflePinned.nonEmpty)(shufflePinned.map {
+        case (r, _, breach) => r.name ->
+          (if (r.error.isDefined) "did_not_run" else if (breach) "breach" else "match")
+      }.toMap),
+      sweep_shuffle_allowance = someIf(shufflePinned.nonEmpty && allowance.nonEmpty)(
+        allowance.map { case (k, a) => k -> r2(a) }),
+      median_budget_status = someIf(budget.nonEmpty)(budget.toMap),
+      budget_rechecks = someIf(adjudications.nonEmpty)(adjudications.map {
+        case (k, (a, _)) => k -> a }),
+      task_retry_total = retried.map(r => r.retries.failed + r.retries.reattempted).sum,
+      task_retries = someIf(retried.nonEmpty)(retried.map(r => r.name -> r.retries).toMap),
+      host = host, errors = byName(_.error),
+      runs_per_query = runsPerQuery, sf = sf,
+      failed = failed, notes = notes, streaks = streaks)
+  }
+
+  /** Run `lanes` on `sfDir`, `runsPerQuery` times each, and judge them
+    * against the committed pins. `sweep` is the full-inventory mode
+    * (SPARK_GRAFT_BENCH_ALL): budget gate, shuffle allowances and the
+    * recheck-streak file at `historyPath`, which it rewrites. */
+  def run(spark: SparkSession, sfDir: String, lanes: Map[String, Lane],
+      runsPerQuery: Int, sweep: Boolean = false,
+      pinsPath: String = "bench_full_pins.json",
+      historyPath: String = "bench_recheck_history.json"): Record = {
     // warm-up: session init, codegen, parquet footer caches
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
+    val sc = spark.sparkContext
+    val cost = new CostListener
+    sc.addSparkListener(cost)
+    try {
+      /** `runsPerQuery` timed samples; shuffle metrics from the LAST run
+        * only (deterministic per plan). Every run gets a unique job-group
+        * id, so stragglers from warm runs sit in their own groups and
+        * cannot inflate the measurement. The steal share covers this
+        * lane's runs, so a roving contention window self-diagnoses. */
+      def sample(name: String, tag: String): LaneResult = {
+        val before = HostProbe.procStat()
+        val groups = (1 until runsPerQuery).map(i => s"$tag#warm$i") :+ s"$tag#measured"
+        val runs = groups.map { g =>
+          sc.setJobGroup(g, s"bench $g")
+          try time(spark, tag, sfDir, lanes(name)) finally sc.clearJobGroup()
+        }
+        val shuffle = cost.settled(groups.last)
+        val rs = groups.map(cost.retryStats)
+        LaneResult(name, median(runs.map(_._1)), runs.map(_._1),
+          runs.flatMap(_._2).headOption, shuffle,
+          Retries(rs.map(_.failed).sum, rs.map(_.reattempted).sum,
+            rs.map(_.reason).find(_.nonEmpty).getOrElse("")),
+          Host(HostProbe.stealPctSince(before), HostProbe.load1()))
+      }
+      def recheck(name: String, n: Int): Recheck = {
+        val r = sample(name, name + (if (n == 1) "#recheck" else s"#recheck$n"))
+        Recheck(r.median, r.host.steal_pct, r.error)
+      }
 
+      val (statStart, load1Start) = (HostProbe.procStat(), HostProbe.load1())
+      val results = lanes.keys.toSeq.sorted.map(name => sample(name, name))
+      val atPinnedSf = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+      val pins = if (atPinnedSf) Pins.load(pinsPath) else Pins.empty
+      val streaks =
+        if (!sweep || pins.budget.isEmpty) Map.empty[String, Int]
+        else readIfExists(historyPath).fold(Map.empty[String, Int])(
+          numericFields(_).map { case (k, v) => k -> v.asInt }.toMap)
+      val gates = Gates(sweep,
+        if (atPinnedSf) pinnedShuffleWriteMb else Map.empty, pins, streaks)
+      val rec = record(results, sfDir, runsPerQuery, gates, recheck,
+        HostSummary(Runtime.getRuntime.availableProcessors,
+          r2(HostProbe.stealPctSince(statStart)), r1(load1Start),
+          r1(HostProbe.load1()),
+          results.map(r => r.name -> Host(r2(r.host.steal_pct), r1(r.host.load1))).toMap))
+      rec.streaks.foreach(s => java.nio.file.Files.write(
+        java.nio.file.Paths.get(historyPath), (json(s) + "\n").getBytes("UTF-8")))
+      rec
+    } finally sc.removeSparkListener(cost)
+  }
+
+  /** SPARK_GRAFT_BENCH_SCALING=1: rerun the lanes at the other scale
+    * factors and report each query's log-log slope (elapsed vs sf). Slope
+    * ≈ 1 is linear scaling, ≪ 1 is fixed-overhead-dominated at these
+    * sizes, and ≫ 1 flags a super-linear operator — the local stand-in
+    * for "would this plan survive a 100× scale-up". */
+  def scaling(spark: SparkSession, sfDir: String, lanes: Map[String, Lane],
+      runsPerQuery: Int): Scaling = {
+    val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", sfDir)
+      .distinct.filter(d => new java.io.File(d).exists())
+    val sfOf = (d: String) => d.split("sf").last.toDouble
+    val names = lanes.keys.toSeq.sorted
+    val sampled = sfDirs.map { d =>
+      d -> names.map { name =>
+        val s = (1 to runsPerQuery).map(_ => time(spark, name, d, lanes(name)))
+        name -> (median(s.map(_._1)), s.exists(_._2.isDefined))
+      }.toMap
+    }.toMap
+    val slopes = names.map { name =>
+      // least-squares slope of ln(t) on ln(sf)
+      val pts = sfDirs.map(d => (math.log(sfOf(d)), math.log(sampled(d)(name)._1)))
+      val n = pts.size.toDouble
+      val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
+      val sxy = pts.map(p => p._1 * p._2).sum
+      val sxx = pts.map(p => p._1 * p._1).sum
+      name -> r2((n * sxy - sx * sy) / (n * sxx - sx * sx))
+    }.toMap
+    Scaling(slopes = slopes,
+      seconds_by_sf = sfDirs.map(d =>
+        f"${sfOf(d)}%.3f" -> sampled(d).map { case (k, v) => k -> s3(v._1) }).toMap,
+      runs_per_query = runsPerQuery,
+      failed = sampled.values.exists(_.values.exists(_._2)))
+  }
+
+  /** A failed query must NOT silently become a (fast) timing: the error
+    * is carried per query in the record (`errors`) and the process exits
+    * non-zero. A barrier scope per run frees run N's blocks before run
+    * N+1, so repeated runs measure the plan, not storage pressure. */
+  private def time(spark: SparkSession, name: String, dir: String,
+      fn: Lane): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err =
+      try {
+        Barriers.withBarrierScope(spark) {
+          fn(spark, dir).write.mode("overwrite").format("noop").save()
+        }
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed at $dir: ${e.getMessage}")
+        Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+      }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val env = sys.env
+    val sfDir = env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val runsPerQuery = env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val sweep = env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
     // SPARK_GRAFT_BENCH_ONLY=q51_x,q78_y narrows to named queries (A/B
     // comparisons); SPARK_GRAFT_BENCH_ALL=1 runs the full inventory;
     // default is the pinned headline set
     val benchable = SparkEntry.queries ++ productionLanes
-    val base = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
+    val lanes = env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(names) =>
         val want = names.split(',').map(_.trim).filter(_.nonEmpty).toSet
         val missing = want -- benchable.keySet
         require(missing.isEmpty, s"unknown bench queries: ${missing.mkString(",")}")
         benchable.view.filterKeys(want).toMap
       case None =>
-        if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")) benchable
-        else benchable.view.filterKeys(headline.toSet).toMap
+        if (sweep) benchable else benchable.view.filterKeys(headline.toSet).toMap
     }
-    // test hook for the fail-loudly contract: rc must be non-zero and the
-    // JSON must carry the error when any query throws
-    val selected =
-      if (sys.env.get("SPARK_GRAFT_BENCH_INJECT_FAIL").contains("1"))
-        base + ("zz_injected_failure" ->
-          ((s: SparkSession, _: String) => s.sql("SELECT raise_error('injected bench failure')")))
-      else base
-
-    val cost = new CostListener
-    spark.sparkContext.addSparkListener(cost)
-
-    // a failed query must NOT silently become a (fast) timing: the error is
-    // carried per-query in the JSON (`errors`) and the process exits
-    // non-zero, so a broken query reads as broken, not as a speedup
-    def time(name: String, dir: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
-      // barrier scope per run: blocks from run N are gone before run N+1
-      // starts, so repeated runs measure the plan, not storage pressure
-      val t0 = System.nanoTime()
-      val err =
-        try {
-          Barriers.withBarrierScope(spark) {
-            fn(spark, dir).write.mode("overwrite").format("noop").save()
-          }
-          None
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed at $dir: ${e.getMessage}")
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-        }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-    /** `runs` timed samples; shuffle metrics captured from the LAST run
-      * only (they are deterministic per plan). Every run gets a unique
-      * job-group id, so the last run's metrics are read from ITS group —
-      * stragglers from warm runs sit in their own groups and cannot
-      * inflate the measurement (exact attribution, no reset races). */
-    def sampleQuery(name: String, dir: String, runs: Int,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Seq[(Double, Option[String])], (Long, Long, Long, Long), (Long, Long, String),
-           (Double, Double)) = {
-      def grouped(tag: String): (Double, Option[String]) = {
-        spark.sparkContext.setJobGroup(tag, s"bench $tag")
-        try time(name, dir, fn)
-        finally spark.sparkContext.clearJobGroup()
-      }
-      val statBefore = HostProbe.procStat()
-      val warm = (1 until runs).map(i => grouped(s"$name#warm$i"))
-      val lastGroup = s"$name#measured"
-      val last = grouped(lastGroup)
-      val shuffle = cost.settled(lastGroup)
-      // re-attempt accounting over ALL the query's runs (warm + measured)
-      val rs = (1 until runs).map(i => cost.retryStats(s"$name#warm$i")) :+
-        cost.retryStats(lastGroup)
-      val retry = (rs.map(_._1).sum, rs.map(_._2).sum,
-        rs.map(_._3).find(_.nonEmpty).getOrElse(""))
-      // host-contention attribution (r14, NEXT gap 2): hypervisor steal
-      // share across THIS query's runs + 1-min loadavg at its end, so a
-      // roving inflation window in a long sweep self-diagnoses from the
-      // committed artifact instead of needing a same-day re-run
-      val host = (HostProbe.stealPctSince(statBefore), HostProbe.load1())
-      (warm :+ last, shuffle, retry, host)
-    }
-
-    val hostStart = (HostProbe.procStat(), HostProbe.load1())
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (sampled, shuffleCost, retry, host) = sampleQuery(name, sfDir, runsPerQuery, fn)
-      val samples = sampled.map(_._1)
-      (name, median(samples), samples, sampled.flatMap(_._2).headOption,
-        shuffleCost, retry, host)
-    }
-    val qsRaw = results.map { case (k, m, _, _, _, _, _) => "\"" + k + f"\":$m%.3f" }
-      .mkString("{", ",", "}")
-    val errs = results.map { case (k, _, _, e, _, _, _) =>
-      "\"" + k + "\":" + e.map(Json.quote).getOrElse("null")
-    }.mkString("{", ",", "}")
-    val runs = results.map { case (k, _, s, _, _, _, _) =>
-      "\"" + k + "\":" + s.map(v => f"$v%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // p95 (nearest-rank over the in-process samples; ≈max at 3 runs) —
-    // the dispersion companion to the reported p50
-    val p95s = results.map { case (k, _, s, _, _, _, _) =>
-      val sorted = s.sorted
-      val p95 = sorted(math.min(sorted.size - 1, math.ceil(0.95 * sorted.size).toInt - 1))
-      "\"" + k + f"\":$p95%.3f"
-    }.mkString("{", ",", "}")
-    // per-query physical cost from the last run (deterministic per plan):
-    // shuffle write MB — the number the scale design minimizes — plus
-    // read MB and spill MB when nonzero
-    val shuffles = results.map { case (k, _, _, _, (rd, wr, sp, pk), _, _) =>
-      "\"" + k + "\":" + f"{\"write_mb\":${wr / 1e6}%.1f," +
-        f"\"read_mb\":${rd / 1e6}%.1f,\"spill_mb\":${sp / 1e6}%.1f," +
-        f"\"peak_exec_mb\":${pk / 1e6}%.1f}"
-    }.mkString("{", ",", "}")
-    // committed-artifact self-check: measured shuffle write vs the pinned
-    // expectation, as a relative delta (0.2 MB absolute floor absorbs AQE
-    // coalescing jitter on the near-zero pins). All zeros = the committed
-    // plans still shuffle exactly what they did when pinned; any breach
-    // fails the run loudly below.
-    val atPinnedSf = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
-    val benchAll = sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    // sweep-context allowances apply ONLY in BENCH_ALL (see
-    // loadSweepShuffleAllowances); headline sessions keep exact pins
-    val sweepAllow =
-      if (benchAll && atPinnedSf) loadSweepShuffleAllowances()
-      else Map.empty[String, Double]
-    // a query that errored shuffled 0 bytes because it DID NOT RUN — its
-    // pin entry must read "did_not_run", never a vacuous 0.00 that a
-    // summary could quote as "plan unchanged" (r9 ADVICE)
-    val deltas = results.flatMap { case (k, _, _, err, (_, wr, _, _), _, _) =>
-      pinnedShuffleWriteMb.get(k).filter(_ => atPinnedSf).map { pin =>
-        val mb = wr / 1e6
-        val diff = mb - pin
-        val ran = err.isEmpty
-        val tol = math.max(0.2, 0.2 * pin)
-        val hi = sweepAllow.get(k) match {
-          // the allowance REPLACES the relative tolerance on the high
-          // side (the pin author folded the documented delta in); 0.2 MB
-          // absolute floor absorbs AQE coalescing jitter as usual
-          case Some(a) => pin * a + 0.2
-          case None => pin + tol
-        }
-        val breach = ran && (mb > hi || mb < pin - tol)
-        (k, if (breach) diff / math.max(pin, 0.1) else 0.0, breach, mb, ran)
-      }
-    }
-    val deltaJson =
-      if (deltas.isEmpty) ""
-      else "," + "\"shuffle_delta_vs_pinned\":" + deltas.map {
-        case (k, d, _, _, ran) =>
-          "\"" + k + "\":" + (if (ran) f"$d%.2f" else "\"did_not_run\"")
-      }.mkString("{", ",", "}") +
-        ",\"shuffle_pin_status\":" + deltas.map {
-          case (k, _, breach, _, ran) =>
-            val st = if (!ran) "did_not_run" else if (breach) "breach" else "match"
-            "\"" + k + "\":\"" + st + "\""
-        }.mkString("{", ",", "}") +
-        // self-documenting artifact: any allowance that widened a band
-        // this run is recorded beside the statuses it affected
-        (if (sweepAllow.isEmpty) ""
-         else ",\"sweep_shuffle_allowance\":" + sweepAllow.toSeq.sorted.map {
-           case (k, a) => "\"" + k + f"\":$a%.2f"
-         }.mkString("{", ",", "}"))
-    // full-inventory median budget gate (only in BENCH_ALL mode at the
-    // pinned SF — headline runs keep their own tighter shuffle pins).
-    // The two artifacts carry DIFFERENT rc gates on purpose: the
-    // byte-exact shuffle pins assume the fresh-session headline protocol
-    // (in a 200-query session, stage metrics can inflate via task
-    // re-attempts — measured: q55b wrote 8.1 MB vs its 6.0 MB pin in one
-    // full sweep while the same day's headline run matched exactly), so
-    // BENCH_ALL reports shuffle deltas informationally and gates rc on
-    // the run-length-calibrated median budgets instead.
-    // pins load for BOTH modes at the pinned SF (r16): BENCH_ALL gates rc
-    // on them; headline mode uses them only as the contention-recheck
-    // trigger below — headline rc still gates on errors + shuffle pins
-    val fullPins = if (atPinnedSf) loadFullPins() else Map.empty[String, Double]
-    val budget0 = if (!benchAll || fullPins.isEmpty) Seq.empty else results.map {
-      case (k, m, _, err, _, _, _) =>
-        val status =
-          if (err.isDefined) "did_not_run"
-          else fullPins.get(k) match {
-            case None => "unpinned" // new query — pin it with tools/pin_bench.py
-            case Some(pin) if m > math.max(1.0, 2.0 * pin) => "breach"
-            case Some(_) => "match"
-          }
-        (k, status)
-    }
-    // Mechanized contention adjudication (r14 VERDICT #7): rounds 13–14
-    // repeatedly saw transient box-state inflation (2–3× single lanes,
-    // zero retries, shuffle bytes constant) that took a manual
-    // fresh-session A/B to adjudicate before restoring the pins. The
-    // sweep now runs that A/B itself: every budget breach re-runs ONCE,
-    // immediately, under a fresh job group, and the artifact records
-    // BOTH samples (median + steal window). A breach that vanishes on
-    // recheck reads "match_on_recheck" (informational — the pin stands,
-    // the artifact shows why); a breach that reproduces stays "breach"
-    // and fails rc. No pin gets restored by hand without the artifact
-    // showing the evidence.
-    val rechecks = scala.collection.mutable.LinkedHashMap[String, String]()
-    // quiet-box estimate per rechecked lane: min of the two medians.
-    // Surfaced as queries_adjudicated/total_adjudicated (r15 VERDICT
-    // next-#3) so cross-round totals stop absorbing storm noise — the
-    // regression GATE still judges the recheck sample alone.
-    val adjudicated = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val budget1 = budget0.map {
-      case (k, "breach") =>
-        val (firstMedian, firstSteal) = results.find(_._1 == k)
-          .map(r => (r._2, r._7._1)).getOrElse((0.0, 0.0))
-        val (sampled2, _, _, (steal2, _)) =
-          sampleQuery(k + "#recheck", sfDir, runsPerQuery, selected(k))
-        val m2 = median(sampled2.map(_._1))
-        val pin = fullPins(k)
-        // an ERRORED recheck is not a reproduced slowdown: keep the
-        // breach (rc fails either way) but record the error instead of
-        // implying the timing reproduced (r15 review finding)
-        val recheckErr = sampled2.flatMap(_._2).headOption
-        val still = recheckErr.isDefined || m2 > math.max(1.0, 2.0 * pin)
-        val st = if (still) "breach" else "match_on_recheck"
-        rechecks(k) = f"""{"first_s":$firstMedian%.3f,"first_steal_pct":$firstSteal%.2f,""" +
-          f""""recheck_s":$m2%.3f,"recheck_steal_pct":$steal2%.2f,"status":"$st"""" +
-          recheckErr.map(e => s""","recheck_error":${Json.quote(e)}""").getOrElse("") + "}"
-        if (recheckErr.isEmpty) adjudicated(k) = math.min(firstMedian, m2)
-        (k, st)
-      case other => other
-    }
-    // Cross-sweep streak escalation (r15 ADVICE #3): a genuinely
-    // intermittent regression (bimodal timing, warm-cache-masked) could
-    // pass EVERY single same-JVM recheck and never fail rc. Streaks of
-    // match_on_recheck per lane persist across sweep invocations in a
-    // small committed state file; a lane that needs a recheck to pass in
-    // two consecutive sweeps escalates to breach_on_repeat (rc-failing) —
-    // it then either reproduces on a fresh-session headline (real) or
-    // comes back as a clean match (storm), which resets the streak.
-    val historyPath = sys.env.getOrElse("SPARK_GRAFT_RECHECK_HISTORY",
-      "bench_recheck_history.json")
-    val budget = if (!benchAll || budget1.isEmpty) budget1 else {
-      val hf = new java.io.File(historyPath)
-      val prior: Map[String, Int] =
-        if (!hf.exists()) Map.empty
-        else "\"([^\"]+)\"\\s*:\\s*([0-9]+)".r
-          .findAllMatchIn(new String(
-            java.nio.file.Files.readAllBytes(hf.toPath), "UTF-8"))
-          .map(m => m.group(1) -> m.group(2).toInt).toMap
-      val escalated = budget1.map {
-        case (k, "match_on_recheck") if prior.getOrElse(k, 0) >= 1 =>
-          (k, "breach_on_repeat")
-        case other => other
-      }
-      // match / breach / breach_on_repeat all reset the streak
-      val next = escalated.collect {
-        case (k, "match_on_recheck") => k -> (prior.getOrElse(k, 0) + 1)
-      }.toMap
-      java.nio.file.Files.write(hf.toPath, next.toSeq.sorted
-        .map { case (k, n) => s""""$k":$n""" }
-        .mkString("{", ",", "}\n").getBytes("UTF-8"))
-      escalated
-    }
-    // Headline contention self-defense (r15 VERDICT next-#2): the sweep's
-    // recheck pass, ported to headline mode. A headline lane whose median
-    // exceeds 1.3× its committed sweep pin re-runs ONCE immediately and
-    // both samples land in budget_rechecks — so a driver headline taken
-    // during a contention storm carries its own adjudication (r15's
-    // committed 13.9 s vs fresh-box 11.4 s needed a manual re-run).
-    // r17: a SECOND recheck when the first recheck is still above the
-    // trigger — the r16 driver artifact showed a storm can cover a lane's
-    // first pass AND its recheck (q78 9.0 s twice at 32 cores while the
-    // same session's 8-core run read 3.0 s and every fresh session reads
-    // ~1.9 s); one more time-distanced sample bounds that failure mode.
-    // Every sample is recorded; the adjudicated value is the min of the
-    // medians actually measured, never an extrapolation.
-    // Informational: headline rc still gates only on errors+shuffle pins.
-    if (!benchAll && fullPins.nonEmpty) {
-      results.foreach { case (k, m, _, err, _, _, (steal1, _)) =>
-        fullPins.get(k).foreach { pin =>
-          val trigger = math.max(1.0, 1.3 * pin)
-          if (err.isEmpty && m > trigger) {
-            val (sampled2, _, _, (steal2, _)) =
-              sampleQuery(k + "#recheck", sfDir, runsPerQuery, selected(k))
-            val m2 = median(sampled2.map(_._1))
-            val recheckErr = sampled2.flatMap(_._2).headOption
-            val second: Option[(Double, Double)] =
-              if (recheckErr.isEmpty && m2 > trigger) {
-                val (sampled3, _, _, (steal3, _)) =
-                  sampleQuery(k + "#recheck2", sfDir, runsPerQuery, selected(k))
-                if (sampled3.flatMap(_._2).isEmpty)
-                  Some((median(sampled3.map(_._1)), steal3))
-                else None
-              } else None
-            val best = (Seq(m, m2) ++ second.map(_._1)).min
-            val st =
-              if (recheckErr.isDefined || best > trigger) "slow_on_recheck"
-              else "match_on_recheck"
-            rechecks(k) = f"""{"first_s":$m%.3f,"first_steal_pct":$steal1%.2f,""" +
-              f""""recheck_s":$m2%.3f,"recheck_steal_pct":$steal2%.2f,"status":"$st"""" +
-              second.map { case (m3, s3) =>
-                f""","recheck2_s":$m3%.3f,"recheck2_steal_pct":$s3%.2f""" }.getOrElse("") +
-              recheckErr.map(e => s""","recheck_error":${Json.quote(e)}""").getOrElse("") + "}"
-            if (recheckErr.isEmpty) adjudicated(k) = best
-          }
-        }
-      }
-    }
-    val budgetJson =
-      (if (budget.isEmpty) ""
-      else ",\"median_budget_status\":" + budget.map {
-        case (k, st) => "\"" + k + "\":\"" + st + "\""
-      }.mkString("{", ",", "}")) +
-        (if (rechecks.isEmpty) ""
-         else ",\"budget_rechecks\":" + rechecks.map {
-           case (k, j) => "\"" + k + "\":" + j
-         }.mkString("{", ",", "}"))
-    // re-attempt accounting (VERDICT r12 #2): whenever a query saw task
-    // failures, re-attempted tasks, or stage re-attempts across its runs,
-    // ship the counts AND the first failure reason — so a shuffle-pin
-    // delta in a long sweep is attributable to measured retries instead
-    // of an unverified story, and a clean sweep proves itself with
-    // task_retry_total: 0.
-    val retried = results.filter { case (_, _, _, _, _, (f, r, _), _) => f + r > 0 }
-    val retryJson =
-      s""","task_retry_total":${retried.map { case (_, _, _, _, _, (f, r, _), _) => f + r }.sum}""" +
-        (if (retried.isEmpty) ""
-         else ",\"task_retries\":" + retried.map {
-           case (k, _, _, _, _, (f, r, why), _) =>
-             "\"" + k + s"""\":{"failed":$f,"reattempted":$r,"reason":${Json.quote(why)}}"""
-         }.mkString("{", ",", "}"))
-    // host-contention probe (r14, NEXT gap 2): hypervisor steal share and
-    // 1-min loadavg, overall and per query — three r13 sweeps showed
-    // roving window-shaped inflation (2-10x single samples, zero retries,
-    // shuffle bytes constant); this field lets the committed artifact
-    // name the contention window instead of inferring it from deltas
-    // ONE post-run sample reused by both printed lines (r14 ADVICE: two
-    // separate /proc/stat reads made the same run report two slightly
-    // different overall steal values)
-    val overallStealPct = HostProbe.stealPctSince(hostStart._1)
-    val hostJson = {
-      val perQ = results.map { case (k, _, _, _, _, _, (steal, load1)) =>
-        "\"" + k + f"""\":{"steal_pct":$steal%.2f,"load1":$load1%.1f}"""
-      }.mkString("{", ",", "}")
-      f""","host":{"cpus":${Runtime.getRuntime.availableProcessors},""" +
-        f""""steal_pct":$overallStealPct%.2f,""" +
-        f""""load1_start":${hostStart._2}%.1f,"load1_end":${HostProbe.load1()}%.1f,""" +
-        s""""per_query":$perQ}"""
-    }
-    // r17 MEASUREMENT FIX (r15 VERDICT next-#3, completed): the `queries`
-    // map and every total are now the ADJUDICATED medians — a rechecked
-    // lane reports the min of the medians actually measured (first pass +
-    // recheck(s)), every other lane its plain median. The r16 driver
-    // artifact published contention-contaminated medians in `queries`
-    // (q74 8.67 s vs its own queries_adjudicated 1.54 s) and the round
-    // read as a 0.64× regression on numbers the artifact itself had
-    // already adjudicated. The UNcorrected medians stay in `queries_raw`
-    // (and every individual sample in `runs`), so nothing is discarded;
-    // on a clean run the two maps are identical. Rechecks recompute the
-    // query end-to-end from parquet — nothing is cached across runs.
-    val adjMedians = results.map {
-      case (k, m, _, _, _, _, _) => k -> adjudicated.getOrElse(k, m)
-    }
-    val adjOf = adjMedians.toMap
-    val qs = adjMedians.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = adjMedians.map(_._2).sum
-    val totalRaw = results.map(_._2).sum
-    // queries_adjudicated kept for cross-round artifact continuity (same
-    // values as `queries` since r17); omitted on a clean run as before.
-    val adjJson = if (adjudicated.isEmpty) "" else {
-      f""","queries_adjudicated":$qs,"total_adjudicated":$total%.3f""" +
-        (if (production12.forall(selected.contains))
-          f""","production12_total_adjudicated":${adjMedians.collect { case (k, v) if production12.contains(k) => v }.sum}%.3f"""
-        else "")
-    }
-    // pre-r8 12-query total from the same run's medians — cross-round
-    // continuity across the documented r8 headline break; only emitted
-    // when the run actually covers the legacy set (not BENCH_ONLY slices).
-    // Adjudicated like the headline totals; _raw variants carry the
-    // uncorrected sums whenever any lane was rechecked.
-    val legacyTotal =
-      (if (legacy12.forall(selected.contains))
-        f""","legacy12_total":${legacy12.map(adjOf).sum}%.3f"""
-      else "") +
-        (if (production12.forall(selected.contains))
-          f""","production12_total":${production12.map(adjOf).sum}%.3f"""
-        else "") +
-        (if (adjudicated.isEmpty) ""
-        else {
-          val raw = results.map { case (k, m, _, _, _, _, _) => k -> m }.toMap
-          (if (legacy12.forall(selected.contains))
-            f""","legacy12_total_raw":${legacy12.map(raw).sum}%.3f"""
-          else "") +
-            (if (production12.forall(selected.contains))
-              f""","production12_total_raw":${production12.map(raw).sum}%.3f"""
-            else "")
-        })
-    println(f"""{"metric":"total","value":$total%.3f,"value_raw":$totalRaw%.3f,"unit":"sec","queries":$qs,"queries_raw":$qsRaw,"runs":$runs,"p95":$p95s,"shuffle":$shuffles$deltaJson$budgetJson$retryJson$hostJson$adjJson,"errors":$errs,"runs_per_query":$runsPerQuery$legacyTotal,"sf":"$sfDir"}""")
-    var anyFailed = results.exists(_._4.isDefined)
-    budget.filter(_._2 == "breach").foreach { case (k, _) =>
-      val m = results.find(_._1 == k).map(_._2).getOrElse(0.0)
-      System.err.println(f"[bench] MEDIAN BUDGET BREACH $k: $m%.2f s vs pinned " +
-        f"${fullPins(k)}%.2f s (>2x, REPRODUCED on immediate recheck — see " +
-        "budget_rechecks) — fix the regression or update " +
-        "bench_full_pins.json in the same commit")
-      anyFailed = true
-    }
-    budget.filter(_._2 == "breach_on_repeat").foreach { case (k, _) =>
-      System.err.println(s"[bench] REPEATED TRANSIENT BREACH $k: passed its " +
-        s"same-JVM recheck in this AND the previous sweep ($historyPath) — " +
-        "an intermittent regression can hide behind warm rechecks; confirm " +
-        "with a fresh-session headline run (clean match resets the streak) " +
-        "or fix/update the pin")
-      anyFailed = true
-    }
-    budget.filter(_._2 == "match_on_recheck").foreach { case (k, _) =>
-      System.err.println(s"[bench] transient budget breach $k vanished on " +
-        "immediate recheck (both samples in budget_rechecks) — pin stands")
-    }
-    deltas.filter(_._3).foreach { case (k, d, _, mb, _) =>
-      System.err.println(f"[bench] SHUFFLE REGRESSION $k: $mb%.1f MB written vs " +
-        f"pinned ${pinnedShuffleWriteMb(k)}%.1f MB (delta ${d * 100}%.0f%%) — " +
-        (if (benchAll) "informational in BENCH_ALL (re-attempt inflation; " +
-          "verify with a headline run)"
-        else "plan changed; fix it or update the pin in the same commit"))
-      if (!benchAll) anyFailed = true
-    }
-
-    // SPARK_GRAFT_BENCH_SCALING=1: rerun the headline at the other scale
-    // factors and report each query's log-log slope (elapsed vs sf). Slope
-    // ≈ 1 is linear scaling, ≪ 1 is fixed-overhead-dominated at these
-    // sizes, and ≫ 1 flags a super-linear operator — the local stand-in
-    // for "would this plan survive a 100× scale-up". Opt-in extra line;
-    // the driver's one-line contract above is unchanged.
-    if (sys.env.get("SPARK_GRAFT_BENCH_SCALING").contains("1")) {
-      val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", sfDir)
-        .distinct.filter(d => new java.io.File(d).exists())
-      val sfOf = (d: String) => d.split("sf").last.toDouble
-      val byDir = sfDirs.map { d =>
-        d -> selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-          val sampled = (1 to runsPerQuery).map(_ => time(name, d, fn))
-          if (sampled.exists(_._2.isDefined)) anyFailed = true
-          name -> median(sampled.map(_._1))
-        }.toMap
-      }.toMap
-      val slopes = selected.keySet.toSeq.sorted.map { name =>
-        // least-squares slope of ln(t) on ln(sf)
-        val pts = sfDirs.map(d => (math.log(sfOf(d)), math.log(byDir(d)(name))))
-        val n = pts.size.toDouble
-        val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
-        val sxy = pts.map(p => p._1 * p._2).sum
-        val sxx = pts.map(p => p._1 * p._1).sum
-        val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-        "\"" + name + f"\":$slope%.2f"
-      }.mkString("{", ",", "}")
-      val perSf = sfDirs.map { d =>
-        "\"" + f"${sfOf(d)}%.3f" + "\":" + byDir(d).toSeq.sorted
-          .map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"scaling_slopes","slopes":$slopes,"seconds_by_sf":$perSf,"runs_per_query":$runsPerQuery}""")
-    }
-    // the LAST line is a compact restatement of the headline numbers —
-    // the committed artifact is a bounded tail capture of this output, so
-    // whatever prints last is what survives. r9 lost its per-query medians
-    // because the one full line outgrew the capture window; this line is
-    // small and prints after everything else. r14: metric renamed
-    // "medians_final" → "total" and errors/breaches carried as COMPACT
-    // exception maps (normally empty), so the driver's json.loads of the
-    // tail yields the parsed medians + pin verdicts instead of null
-    // (r13 VERDICT #7) — the detailed first line keeps every field.
-    val errNonNull = results.flatMap { case (k, _, _, e, _, _, _) =>
-      e.map(msg => "\"" + k + "\":" + Json.quote(msg)) }
-      .mkString("{", ",", "}")
-    val pinBreaches = deltas.filter(_._3).map("\"" + _._1 + "\"")
-      .mkString("[", ",", "]")
-    val budgetBreaches = budget
-      .filter(b => b._2 == "breach" || b._2 == "breach_on_repeat")
-      .map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val retryTotal = retried.map { case (_, _, _, _, _, (f, r, _), _) => f + r }.sum
-    // compact tail: `queries`/`value` are the adjudicated medians since
-    // r17 (see the measurement-fix note above); value_raw restates the
-    // uncorrected total, rechecked_lanes says how many medians differ
-    val adjTail = if (adjudicated.isEmpty) "" else {
-      f""","total_adjudicated":$total%.3f,"rechecked_lanes":${adjudicated.size}"""
-    }
-    println(f"""{"metric":"total","value":$total%.3f,"value_raw":$totalRaw%.3f,"unit":"sec","queries":$qs,"errors":$errNonNull,"shuffle_pin_breaches":$pinBreaches,"budget_breaches":$budgetBreaches,"task_retry_total":$retryTotal,"steal_pct":$overallStealPct%.2f$legacyTotal$adjTail,"sf":"$sfDir"}""")
+    val spark = GraftSession()
+    val rec = run(spark, sfDir, lanes, runsPerQuery, sweep,
+      env.getOrElse("SPARK_GRAFT_BENCH_PINS", "bench_full_pins.json"),
+      env.getOrElse("SPARK_GRAFT_RECHECK_HISTORY", "bench_recheck_history.json"))
+    println(json(rec))
+    rec.notes.foreach(System.err.println)
+    val scaled =
+      if (!env.get("SPARK_GRAFT_BENCH_SCALING").contains("1")) None
+      else Some(scaling(spark, sfDir, lanes, runsPerQuery))
+    scaled.foreach(s => println(json(s)))
+    println(json(rec.tail))
     spark.stop()
-    if (anyFailed) sys.exit(1)
+    if (rec.failed || scaled.exists(_.failed)) sys.exit(1)
   }
 
   private def median(xs: Seq[Double]): Double = {

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine integration points.
   *
@@ -15,36 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * views and query them through `spark.sql` or the typed operators.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[functions.DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => functions.DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_trigram_hits"),
-      new ExpressionInfo(classOf[functions.TrigramProfileHits].getName, "graft_trigram_hits"),
-      (exprs: Seq[Expression]) => functions.TextExpressions.fromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_top_ngram_count"),
-      new ExpressionInfo(classOf[functions.TopNgramCount].getName, "graft_top_ngram_count"),
-      (exprs: Seq[Expression]) => functions.TextExpressions.topNgramFromArgs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_overlap_count"),
-      new ExpressionInfo(classOf[functions.OverlapCount].getName, "graft_overlap_count"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"graft_overlap_count expects (array, array), got ${exprs.length} argument(s)")
-        functions.OverlapCount(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[functions.SimHash64].getName, "graft_simhash64"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"graft_simhash64 expects (tokens), got ${exprs.length} argument(s)")
-        functions.SimHash64(exprs.head)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    (functions.VectorExpressions.functions ++ functions.TextExpressions.functions)
+      .foreach(ext.injectFunction)
 }
 
 object Graft {

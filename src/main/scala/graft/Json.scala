@@ -6,15 +6,17 @@ package graft
 private[graft] object Json {
 
   /** `s` as a quoted JSON string literal: `"` and `\` escaped, `\n`, `\r`
-    * and `\t` by name, every other control character as `\u00XX`. Stored
-    * `headers_json` depends on these exact bytes. */
-  def quote(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+    * and `\t` by name, every other control character as `\u00XX`; a null
+    * string is `null`. Stored `headers_json` depends on these exact bytes. */
+  def quote(s: String): String =
+    if (s == null) "null"
+    else "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }

@@ -372,38 +372,22 @@ object TextExpressions {
     TopNgramCount(exprs.head, n)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_trigram_hits"),
+  /** The text functions, for the session registry and the extensions
+    * injector. */
+  val functions: Seq[VectorExpressions.FunctionDescription] = Seq(
+    (FunctionIdentifier("graft_trigram_hits"),
       new ExpressionInfo(classOf[TrigramProfileHits].getName, "graft_trigram_hits"),
-      (exprs: Seq[Expression]) => fromArgs(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_top_ngram_count"),
+      fromArgs _),
+    (FunctionIdentifier("graft_top_ngram_count"),
       new ExpressionInfo(classOf[TopNgramCount].getName, "graft_top_ngram_count"),
-      (exprs: Seq[Expression]) => topNgramFromArgs(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_overlap_count"),
-      new ExpressionInfo(classOf[OverlapCount].getName, "graft_overlap_count"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"graft_overlap_count expects (array, array), got ${exprs.length} argument(s)")
-        OverlapCount(exprs.head, exprs(1))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"graft_simhash64 expects (tokens), got ${exprs.length} argument(s)")
-        SimHash64(exprs.head)
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_codepoints"),
-      new ExpressionInfo(classOf[CodepointChars].getName, "graft_codepoints"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"graft_codepoints expects (text), got ${exprs.length} argument(s)")
-        CodepointChars(exprs.head)
-      })
-  }
+      topNgramFromArgs _),
+    VectorExpressions.describe("graft_overlap_count", classOf[OverlapCount], 2,
+      "array, array")(e => OverlapCount(e.head, e(1))),
+    VectorExpressions.describe("graft_simhash64", classOf[SimHash64], 1, "tokens")(
+      e => SimHash64(e.head)),
+    VectorExpressions.describe("graft_codepoints", classOf[CodepointChars], 1, "text")(
+      e => CodepointChars(e.head)))
+
+  def register(spark: SparkSession): Unit =
+    VectorExpressions.registerMissing(spark, functions)
 }

@@ -312,20 +312,37 @@ object LshProjections {
 
 object VectorExpressions {
 
-  /** Register `graft_dot` / `graft_lsh_project` in the session's function
-    * registry so plain `expr("graft_dot(a, b)")` resolves. Idempotent per
-    * session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
+  type FunctionDescription =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** A function of exactly `arity` arguments: the builder rejects any other
+    * count with a message naming `args`. */
+  private[functions] def describe(name: String, cls: Class[_], arity: Int,
+      args: String)(mk: Seq[Expression] => Expression): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
       (exprs: Seq[Expression]) => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"graft_dot expects 2 arguments (vector, vector), got ${exprs.length}")
-        DotProduct(exprs.head, exprs(1))
+        if (exprs.length != arity) throw new IllegalArgumentException(
+          s"$name expects ($args), got ${exprs.length} argument(s)")
+        mk(exprs)
       })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_lsh_project"),
+
+  /** Register each function the session does not have yet. Operators call
+    * this on every use, so a registered builder (or one injected by
+    * [[graft.GraftExtensions]]) is kept, not replaced. */
+  private[graft] def registerMissing(spark: SparkSession,
+      fns: Seq[FunctionDescription]): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+  }
+
+  /** `graft_dot`, `graft_lsh_project` and the scaled-long vector
+    * functions, for the session registry and the extensions injector. */
+  val functions: Seq[FunctionDescription] = Seq(
+    describe("graft_dot", classOf[DotProduct], 2, "vector, vector")(
+      e => DotProduct(e.head, e(1))),
+    (FunctionIdentifier("graft_lsh_project"),
       new ExpressionInfo(classOf[LshProject].getName, "graft_lsh_project"),
       (exprs: Seq[Expression]) => {
         // arity + foldability guarded BEFORE eval(null): a one-arg call or a
@@ -343,26 +360,14 @@ object VectorExpressions {
             case other => throw new IllegalArgumentException(
               s"graft_lsh_project plane count must be an integer literal, got $other")
           })
-      })
-    def binary(name: String, cls: Class[_],
-        mk: (Expression, Expression) => Expression): Unit =
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"$name expects 2 arguments, got ${exprs.length}")
-          mk(exprs.head, exprs(1))
-        })
-    binary("graft_dot_long", classOf[DotLong], DotLong(_, _))
-    binary("graft_sqdist_long", classOf[SqDistLong], SqDistLong(_, _))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_unscale18_round6"),
-      new ExpressionInfo(classOf[Unscale18Round6].getName, "graft_unscale18_round6"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"graft_unscale18_round6 expects 1 argument, got ${exprs.length}")
-        Unscale18Round6(exprs.head)
-      })
-  }
+      }),
+    describe("graft_dot_long", classOf[DotLong], 2, "vector, vector")(
+      e => DotLong(e.head, e(1))),
+    describe("graft_sqdist_long", classOf[SqDistLong], 2, "vector, vector")(
+      e => SqDistLong(e.head, e(1))),
+    describe("graft_unscale18_round6", classOf[Unscale18Round6], 1, "value")(
+      e => Unscale18Round6(e.head)))
+
+  /** Make plain `expr("graft_dot(a, b)")` resolve in this session. */
+  def register(spark: SparkSession): Unit = registerMissing(spark, functions)
 }

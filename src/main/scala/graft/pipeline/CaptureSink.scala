@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Json
 import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPOutputStream
@@ -83,6 +84,8 @@ object CaptureSink {
         "request_headers_json", "response_headers_json", "error_type",
         "error_message", "body", "sha256", "byte_count", "pretty_eligible")
       .foreachPartition { part: Iterator[org.apache.spark.sql.Row] =>
+        lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        lazy val prettyWriter = mapper.writerWithDefaultPrettyPrinter()
         part.foreach { r =>
           val stem = r.getAs[String]("stem")
           val body = r.getAs[Array[Byte]]("body")
@@ -91,7 +94,8 @@ object CaptureSink {
 
           // K4: request record
           val reqJson =
-            s"""{"method": ${q(r.getAs[String]("method"))}, "url": ${q(r.getAs[String]("url"))}, """ +
+            s"""{"method": ${Json.quote(r.getAs[String]("method"))}, """ +
+              s""""url": ${Json.quote(r.getAs[String]("url"))}, """ +
               s""""attempt_number": ${r.getAs[Int]("attempt_number")}, """ +
               s""""headers": ${r.getAs[String]("request_headers_json")}}"""
           Files.write(reqDir.resolve(s"$stem.json"), reqJson.getBytes("UTF-8"))
@@ -110,11 +114,9 @@ object CaptureSink {
           // K7: conditional pretty JSON (parse-or-skip, P8 tolerance)
           if (r.getAs[Boolean]("pretty_eligible")) {
             try {
-              val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
               val tree = mapper.readTree(new String(body, "UTF-8"))
               if (tree != null && !tree.isMissingNode) {
-                val pretty = mapper.writerWithDefaultPrettyPrinter()
-                  .writeValueAsString(tree)
+                val pretty = prettyWriter.writeValueAsString(tree)
                 Files.write(respDir.resolve(s"$stem.json"), pretty.getBytes("UTF-8"))
               }
             } catch { case _: Exception => () }
@@ -124,16 +126,16 @@ object CaptureSink {
           val meta =
             s"""{
                |  "id": ${r.getAs[Int]("attempt_number")},
-               |  "stem": ${q(stem)},
-               |  "method": ${q(r.getAs[String]("method"))},
-               |  "url": ${q(r.getAs[String]("url"))},
+               |  "stem": ${Json.quote(stem)},
+               |  "method": ${Json.quote(r.getAs[String]("method"))},
+               |  "url": ${Json.quote(r.getAs[String]("url"))},
                |  "status_code": ${r.getAs[Int]("status_code")},
                |  "byte_count": ${r.getAs[Long]("byte_count")},
-               |  "sha256": ${q(r.getAs[String]("sha256"))},
+               |  "sha256": ${Json.quote(r.getAs[String]("sha256"))},
                |  "request_headers": ${r.getAs[String]("request_headers_json")},
                |  "response_headers": ${r.getAs[String]("response_headers_json")},
-               |  "error_type": ${q(r.getAs[String]("error_type"))},
-               |  "error_message": ${q(r.getAs[String]("error_message"))}
+               |  "error_type": ${Json.quote(r.getAs[String]("error_type"))},
+               |  "error_message": ${Json.quote(r.getAs[String]("error_message"))}
                |}""".stripMargin
           Files.write(respDir.resolve(s"$stem.meta.json"), meta.getBytes("UTF-8"))
         }
@@ -144,16 +146,4 @@ object CaptureSink {
     * chars of the UTF-8 decode with replacement. */
   def bodyPreview(body: Array[Byte]): String =
     new String(body.take(400), java.nio.charset.StandardCharsets.UTF_8)
-
-  private def q(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

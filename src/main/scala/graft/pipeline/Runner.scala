@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Barriers, Json}
 import Model._
@@ -57,33 +57,35 @@ object Runner {
 
     // Every frame this run caches or pins is consumed by a sink write
     // before return, so the scope can release them all: a long-lived
-    // driver keeps no blocks from finished runs, on success or failure.
+    // driver keeps no blocks and no cache-manager entries from finished
+    // runs, on success or failure.
+    val cachedFrames = scala.collection.mutable.Buffer[Dataset[_]]()
+    def cached[T](ds: Dataset[T]): Dataset[T] = { cachedFrames += ds; ds.cache() }
     Barriers.withBarrierScope(spark) {
       try {
         tee(runDir, s"run start provider=${connector.name} limit=$limit live=$live")
         // S4 plan → S2/S3 metadata fetch (offline fixture transport)
         val items = connector.plan(spark, limit)
         val metaRequests = connector.metadataRequests(spark, items)
-        val metaFetched = HttpSource.fetch(spark, metaRequests, tr, offlineRoot,
+        val metaFetched = cached(HttpSource.fetch(spark, metaRequests, tr, offlineRoot,
           maxArtifactBytes = config.maxArtifactBytes,
-          hostParallelism = hostParallelism, config = config)
-          .cache()
+          hostParallelism = hostParallelism, config = config))
 
         // K1 append metadata responses, ids back for FK J1/J2. The row count
         // rides the append's own materialization as an observe() metric.
         val metaObs = org.apache.spark.sql.Observation()
-        val metaWithIds = store.appendResponses(
+        val metaWithIds = cached(store.appendResponses(
           metaFetched.toDF()
             .withColumn("provider", col("provider"))
             .select(col("provider"), col("method"), col("url"), col("params_json"),
               col("status_code"), col("headers_json"), col("body"),
               col("item_index"), col("stage"))
-            .observe(metaObs, count(lit(1)).as("n"))).cache()
+            .observe(metaObs, count(lit(1)).as("n"))))
 
         // P1–P3 extraction; F6 split into targets vs dead-letter.
         // metaWithIds carries body/params_json/status_code through from the
         // append, so extraction runs directly on the id-stamped rows.
-        val extracted = connector.extract(metaWithIds).cache()
+        val extracted = cached(connector.extract(metaWithIds))
 
         val parseErrors = extracted.filter(col("error_message").isNotNull)
           .select(lit(connector.name).as("provider"), lit("extract").as("stage"),
@@ -100,28 +102,27 @@ object Runner {
             FetchRequest(connector.name, idx, "artifact", "GET", url, null,
               connector.artifactFixture)
           }
-        val artFetched = HttpSource.fetch(spark, artRequests, tr, offlineRoot,
+        val artFetched = cached(HttpSource.fetch(spark, artRequests, tr, offlineRoot,
           maxArtifactBytes = config.maxArtifactBytes,
           hostParallelism = hostParallelism, config = config)
-          .filter(_.status_code == 200).cache()
+          .filter(_.status_code == 200))
 
         val artObs = org.apache.spark.sql.Observation()
-        val artWithIds = store.appendResponses(
+        val artWithIds = cached(store.appendResponses(
           artFetched.toDF().select(col("provider"), col("method"), col("url"),
             col("params_json"), col("status_code"), col("headers_json"), col("body"),
             col("item_index"), col("stage"))
-            .observe(artObs, count(lit(1)).as("n"))).cache()
+            .observe(artObs, count(lit(1)).as("n"))))
 
         // X0 hash + K3 blob put + K2 dedup append
-        val hashed = artWithIds
+        val hashed = cached(artWithIds
           .select(col("provider"), col("url").as("source_url"),
             sha2(col("body"), 256).as("sha256"),
             length(col("body")).cast("long").as("bytes"),
             col("body"), col("id").as("response_id"))
           .withColumn("blob_path",
             concat(lit(blobRoot + "/"), substring(col("sha256"), 1, 2),
-              lit("/"), col("sha256")))
-          .cache()
+              lit("/"), col("sha256"))))
         BlobStore.put(hashed, blobRoot)
         val inserted = store.appendArtifacts(
           hashed.select("provider", "source_url", "sha256", "bytes", "blob_path",
@@ -172,7 +173,7 @@ object Runner {
           tee(runDir, s"run failed: $e")
           writeRunJson(runDir, "failed", connector.name, limit, startedAt, 0, 0, 0, 0, idMode)
           throw e
-      }
+      } finally cachedFrames.reverseIterator.foreach(_.unpersist())
     }
   }
 

@@ -116,6 +116,16 @@ class GraftSpec extends AnyFunSuite with SparkSessionTestWrapper {
     new GraftExtensions().apply(ext)
   }
 
+  test("registering the graft functions twice keeps the first builders") {
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
+    val registry = spark.sessionState.functionRegistry
+    functions.VectorExpressions.register(spark)
+    val first = registry.lookupFunctionBuilder(id)
+    functions.VectorExpressions.register(spark)
+    functions.TextExpressions.register(spark)
+    assert(first.isDefined && registry.lookupFunctionBuilder(id).get.eq(first.get))
+  }
+
   test("MinHashAgg aggregator builds signatures equal for identical shingle sets") {
     val mh = udaf(new MinHashAgg(16))
     val shingles = Seq(

@@ -292,17 +292,21 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the ids, not only the count: the context's registry holds its RDDs
     // weakly, so the cleaner may drop an older suite's entry mid-run
     def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
     val before = persisted
     val count = Barriers.persistentRddCount(spark)
     Runner.run(spark, SecEdgarConnector, 1, fixtures, tmpDir("wh"), tmpDir("blobs"),
       tmpDir("runs"))
     assert((persisted -- before).isEmpty, "a successful run left RDDs persisted")
     assert(Barriers.persistentRddCount(spark) <= count)
+    assert(cacheManager.isEmpty, "a successful run left cached plans registered")
     intercept[Exception] {
       Runner.run(spark, SecEdgarConnector, 1, fixtures,
         "/proc/graft-invalid/warehouse", tmpDir("blobs"), tmpDir("runs"))
     }
     assert((persisted -- before).isEmpty, "a failed run left RDDs persisted")
+    assert(cacheManager.isEmpty, "a failed run left cached plans registered")
   }
 
   test("run.json escapes the provider: a name with a quote and a backslash parses back") {
