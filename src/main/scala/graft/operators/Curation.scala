@@ -1947,7 +1947,14 @@ object Curation {
     * consumers ONLY: results may carry doc ids and counts, never the
     * shingle itself, and both join sides must hash the same way. The
     * Bloom face (q123) keeps the STRING set — its bits are defined over
-    * md5/xxhash64 of the joined string and must not move. */
+    * md5/xxhash64 of the joined string and must not move.
+    *
+    * Collision exposure: a scan of n_c distinct corpus shingles against
+    * n_b distinct bench shingles expects n_c·n_b/2⁶⁴ false hits. At the
+    * 100 TB design point — about 1.7·10¹³ corpus 8-grams at ~6 bytes a
+    * word — against a 10⁷-shingle eval set that is about 9 false hits
+    * over the whole corpus. Each adds 1 to one doc's `n_shared`: it can
+    * tip a doc that sits just under q74's ≥ 50% flag over it. */
   private[operators] def shingleHashesN(docs: DataFrame, n: Int): DataFrame = {
     val parts = (0 until n).map(j => s"ws[i+$j]").mkString(", ")
     docs.select(col("doc_id"), words(col("text")).as("ws"))

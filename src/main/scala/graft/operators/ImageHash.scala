@@ -264,16 +264,7 @@ object ImageHash {
     import docs0.sparkSession.implicits._
     // same split-independence repartition as syntheticPnm
     val docs = Multimodal.spreadByDocId(docs0)
-    val dataLen = 288
-    def le16(v: Int) = Seq((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le32(v: Int) = Seq((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val header: Array[Byte] =
-      ("RIFF".getBytes("US-ASCII").toSeq ++ le32(36 + dataLen) ++
-        "WAVE".getBytes("US-ASCII").toSeq ++
-        "fmt ".getBytes("US-ASCII").toSeq ++ le32(16) ++
-        le16(1) ++ le16(1) ++ le32(16000) ++ le32(32000) ++ le16(2) ++ le16(16) ++
-        "data".getBytes("US-ASCII").toSeq ++ le32(dataLen)).toArray
+    val header = Multimodal.Riff.header(1, 1, 16000, 16, 2, 288)
     def raster(salt: String): org.apache.spark.sql.Column =
       unhex(concat((1 to 18).map { i =>
         if (i == 18 && salt.nonEmpty) md5(concat(col("text"), lit(salt)))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import Bytes._
 
 /** Multimodal columns: image/audio/video as opaque BINARY with typed
   * metadata, processed partition-batch-wise.
@@ -53,6 +54,28 @@ object Multimodal {
     def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])]
   }
 
+  /** A real decoder: besides features it yields the full-resolution
+    * integer luminance plane (BT.601 integer weights, floor division —
+    * bit-exact on any platform) that the perceptual-hash family hashes.
+    * [[StubCodec]] is not one: a fake plane must never enter a hash. */
+  trait RealCodec extends Codec {
+    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])]
+  }
+
+  /** A real decoder whose features and luma both come from one pixel
+    * decode — (w, h, channels ∈ {1, 3}, channel-interleaved bytes) —
+    * through the shared [[featuresOfPixels]] and [[lumaOfPixels]]
+    * conversions, so no two codecs' features can drift apart. */
+  trait PixelCodec extends RealCodec {
+    private[graft] def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])]
+
+    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
+      decodePixels(bytes).map { case (w, h, ch, px) => featuresOfPixels(w, h, ch, px) }
+
+    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+      decodePixels(bytes).map { case (w, h, ch, px) => lumaOfPixels(w, h, ch, px) }
+  }
+
   /** REAL decoder for binary PNM (P5 grayscale / P6 RGB, maxval <= 255) —
     * chosen because the format needs zero external libraries, so the
     * decode step is genuinely real in this container. Features: per-
@@ -61,7 +84,7 @@ object Multimodal {
     * ([[PngCodec]]/[[JpegCodec]]/[[decodeVideoFrameLumas]]);
     * [[StubCodec]] remains the deterministic fallback for the
     * perceptual-codec formats without a decoder here. */
-  object PnmCodec extends Codec {
+  object PnmCodec extends RealCodec {
     def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] = {
       if (bytes.length < 10 || bytes(0) != 'P' ||
           (bytes(1) != '5' && bytes(1) != '6')) return None
@@ -199,7 +222,7 @@ object Multimodal {
     * (features/luma read the color channels as-is — the convention a
     * dedup hash wants: the same image with a different alpha block is
     * the same image). */
-  object PngCodec extends Codec {
+  object PngCodec extends PixelCodec {
 
     private val Sig: Array[Byte] =
       Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -227,9 +250,6 @@ object Multimodal {
       * alpha stripped and palette indices resolved. */
     private[graft] def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
       if (bytes.length < 8 + 25 || !bytes.take(8).sameElements(Sig)) return None
-      def be32(off: Int): Long =
-        ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-          ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
       // chunk walk: IHDR first, concatenate IDATs, keep PLTE, stop at IEND
       var pos = 8
       var ihdr = -1
@@ -238,12 +258,12 @@ object Multimodal {
       var seenEnd = false
       while (!seenEnd) {
         if (pos + 12 > bytes.length) return None // truncated chunk header
-        val len = be32(pos)
+        val len = be32(bytes, pos)
         if (len > Int.MaxValue - 12 || pos + 12 + len > bytes.length) return None
-        val ctype = new String(bytes, pos + 4, 4, "US-ASCII")
+        val ctype = str(bytes, pos + 4, 4)
         val crc = new java.util.zip.CRC32()
         crc.update(bytes, pos + 4, 4 + len.toInt)
-        if (crc.getValue != be32(pos + 8 + len.toInt)) return None // corrupt
+        if (crc.getValue != be32(bytes, pos + 8 + len.toInt)) return None // corrupt
         ctype match {
           case "IHDR" => if (ihdr < 0) ihdr = pos + 8 else return None
           case "PLTE" => plte = java.util.Arrays.copyOfRange(
@@ -255,7 +275,7 @@ object Multimodal {
         pos += 12 + len.toInt
       }
       if (ihdr < 0) return None
-      val w = be32(ihdr); val h = be32(ihdr + 4)
+      val w = be32(bytes, ihdr); val h = be32(bytes, ihdr + 4)
       val bitDepth = bytes(ihdr + 8) & 0xff
       val colorType = bytes(ihdr + 9) & 0xff
       val interlace = bytes(ihdr + 12) & 0xff
@@ -360,21 +380,6 @@ object Multimodal {
       Some((wi, hi, outCh, px))
     }
 
-    /** Same 8-dim feature contract as [[PnmCodec.decodeImage]] (channel
-      * means, 2×2 luminance quadrants, aspect), maxval 255 — the shared
-      * [[featuresOfPixels]] conversion. */
-    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodePixels(bytes).map { case (w, h, ch, px) =>
-        featuresOfPixels(w, h, ch, px)
-      }
-
-    /** Same integer-luminance contract as [[PnmCodec.decodeLuma]]
-      * (BT.601 integer weights, floor division) — [[lumaOfPixels]]. */
-    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodePixels(bytes).map { case (w, h, ch, px) =>
-        lumaOfPixels(w, h, ch, px)
-      }
-
     /** Minimal deterministic gray encoder for fixtures and the q159
       * synthetic corpus: filter-0 scanlines in a STORED-block zlib
       * stream (no Deflater — byte-identical on every JVM forever) with
@@ -432,31 +437,24 @@ object Multimodal {
       }
       val adler = new java.util.zip.Adler32()
       adler.update(raw)
-      val a = adler.getValue
-      z.write(((a >> 24) & 0xff).toInt); z.write(((a >> 16) & 0xff).toInt)
-      z.write(((a >> 8) & 0xff).toInt); z.write((a & 0xff).toInt)
+      putBe32(z, adler.getValue)
       val out = new java.io.ByteArrayOutputStream()
       out.write(Sig, 0, Sig.length)
       def chunk(ctype: String, data: Array[Byte]): Unit = {
-        def be32(v: Long): Array[Byte] = Array(
-          ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-          ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-        out.write(be32(data.length.toLong), 0, 4)
+        putBe32(out, data.length)
         val tb = ctype.getBytes("US-ASCII")
         out.write(tb, 0, 4)
         out.write(data, 0, data.length)
         val crc = new java.util.zip.CRC32()
         crc.update(tb); crc.update(data)
-        out.write(be32(crc.getValue), 0, 4)
+        putBe32(out, crc.getValue)
       }
-      chunk("IHDR", Array(
-        ((w >> 24) & 0xff).toByte, ((w >> 16) & 0xff).toByte,
-        ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-        ((h >> 24) & 0xff).toByte, ((h >> 16) & 0xff).toByte,
-        ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-        // depth 8/16, gray, deflate, adaptive, sequential/Adam7
-        (if (depth16) 16 else 8).toByte, 0, 0, 0,
-        (if (interlaced) 1 else 0).toByte))
+      val ihdr = new java.io.ByteArrayOutputStream()
+      putBe32(ihdr, w); putBe32(ihdr, h)
+      // depth 8/16, gray, deflate, adaptive, sequential/Adam7
+      ihdr.write(if (depth16) 16 else 8); ihdr.write(0); ihdr.write(0); ihdr.write(0)
+      ihdr.write(if (interlaced) 1 else 0)
+      chunk("IHDR", ihdr.toByteArray)
       chunk("IDAT", z.toByteArray)
       chunk("IEND", Array.emptyByteArray)
       out.toByteArray
@@ -484,7 +482,8 @@ object Multimodal {
     * truncated sub-block chains, lying palette sizes, codes past the
     * dictionary, out-of-palette indices, crafted dimensions — yields
     * None / the frames decoded so far, never a crash or an unbounded
-    * allocation (pixel count capped at 2²⁴, frame count at 4096).
+    * allocation (canvas pixels capped at 2²⁴, and so are the pixels of
+    * all returned full-canvas frames together; frame count at 4096).
     * Determinism: integer-only arithmetic end to end.
     *
     * The minimal real ENCODER exists for fixtures and the independent
@@ -497,7 +496,7 @@ object Multimodal {
     * sub-blocks; profile 1 writes a REVERSED local palette per frame
     * (indices remapped, so even the index planes differ), interlaced
     * rows, 126-byte sub-blocks, and a comment block. */
-  object GifCodec extends Codec {
+  object GifCodec extends RealCodec {
     private val MaxPixels = 1L << 24
     private val MaxFrames = 4096
 
@@ -516,22 +515,20 @@ object Multimodal {
     private[graft] def decodeRgbFrames(
         bytes: Array[Byte]): Seq[(Int, Int, Int, Array[Int])] =
       try decodeRgbFrames0(bytes)
-      catch { case _: Throwable => Nil } // never-crash backstop
+      catch { case scala.util.control.NonFatal(_) => Nil } // never-crash backstop
 
     private def decodeRgbFrames0(
         bytes: Array[Byte]): Seq[(Int, Int, Int, Array[Int])] = {
       if (bytes.length < 13) return Nil
-      val sig = new String(bytes, 0, 6, "US-ASCII")
+      val sig = str(bytes, 0, 6)
       if (sig != "GIF87a" && sig != "GIF89a") return Nil
-      def u16(off: Int): Int =
-        (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
       def palette(off: Int, n: Int): Array[Int] =
         Array.tabulate(n) { i =>
           ((bytes(off + 3 * i) & 0xff) << 16) |
             ((bytes(off + 3 * i + 1) & 0xff) << 8) |
             (bytes(off + 3 * i + 2) & 0xff)
         }
-      val sw = u16(6); val sh = u16(8)
+      val sw = le16(bytes, 6); val sh = le16(bytes, 8)
       if (sw <= 0 || sh <= 0 || sw.toLong * sh > MaxPixels) return Nil
       val lsdPacked = bytes(10) & 0xff
       var pos = 13
@@ -545,6 +542,9 @@ object Multimodal {
       val bg = if (gct != null && bgIdx < gct.length) gct(bgIdx) else 0
       val canvas = new Array[Int](sw * sh)
       java.util.Arrays.fill(canvas, bg)
+      // every returned frame is a full-canvas copy: the composited-pixel
+      // budget bounds their sum, so tiny frames on a huge canvas stop early
+      val maxFrames = math.min(MaxFrames.toLong, MaxPixels / canvas.length).toInt
       val frames = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Int, Int, Array[Int])]
       var transparentIdx = -1
@@ -558,7 +558,7 @@ object Multimodal {
         }
         if (p >= bytes.length) -1 else p + 1 // past the 0 terminator
       }
-      while (pos < bytes.length && frames.size < MaxFrames) {
+      while (pos < bytes.length && frames.size < maxFrames) {
         (bytes(pos) & 0xff) match {
           case 0x3b => return frames.toSeq // trailer
           case 0x21 => // extension
@@ -583,8 +583,8 @@ object Multimodal {
             if (pos < 0) return frames.toSeq
           case 0x2c => // image descriptor
             if (pos + 10 > bytes.length) return frames.toSeq
-            val left = u16(pos + 1); val top = u16(pos + 3)
-            val fw = u16(pos + 5); val fh = u16(pos + 7)
+            val left = le16(bytes, pos + 1); val top = le16(bytes, pos + 3)
+            val fw = le16(bytes, pos + 5); val fh = le16(bytes, pos + 7)
             val idPacked = bytes(pos + 9) & 0xff
             pos += 10
             var lct: Array[Int] = null
@@ -832,9 +832,8 @@ object Multimodal {
       val interlaced = profile == 1
       val subBlock = if (profile == 1) 126 else 255
       val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      out.write("GIF89a".getBytes("US-ASCII"))
-      w16(sw); w16(sh)
+      putAscii(out, "GIF89a")
+      putLe16(out, sw); putLe16(out, sh)
       // global table only in profile 0 (7 = 256 entries; color res 8)
       out.write(if (reversed) 0x70 else 0xf7)
       out.write(0) // background index
@@ -846,7 +845,7 @@ object Multimodal {
         // NETSCAPE application extension: loop forever
         out.write(0x21); out.write(0xff); out.write(11)
         out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-        out.write(3); out.write(1); w16(0); out.write(0)
+        out.write(3); out.write(1); putLe16(out, 0); out.write(0)
       }
       if (profile == 1) {
         val c = "graft-p1".getBytes("US-ASCII")
@@ -861,11 +860,12 @@ object Multimodal {
         if (transIdx >= 0 || f.disposal != 0 || frames.size > 1) {
           out.write(0x21); out.write(0xf9); out.write(4)
           out.write(((f.disposal & 7) << 2) | (if (transIdx >= 0) 1 else 0))
-          w16(f.delayCs)
+          putLe16(out, f.delayCs)
           out.write(math.max(transIdx, 0))
           out.write(0)
         }
-        out.write(0x2c); w16(f.left); w16(f.top); w16(f.w); w16(f.h)
+        out.write(0x2c)
+        putLe16(out, f.left); putLe16(out, f.top); putLe16(out, f.w); putLe16(out, f.h)
         out.write((if (reversed) 0x87 else 0x00) | (if (interlaced) 0x40 else 0x00))
         if (reversed) (0 until 256).foreach { i =>
           val v = 255 - i
@@ -920,7 +920,7 @@ object Multimodal {
     * never-crash backstop is the same as every other decoder here:
     * any malformation (truncated header, palette overrun, RLE cursor
     * escape, pixel-count cap) is None, not a throw. */
-  object BmpCodec extends Codec {
+  object BmpCodec extends PixelCodec {
 
     private val MaxPixels = 1 << 26 // 64M px ≈ 192 MB RGB — the PNG cap
 
@@ -928,23 +928,21 @@ object Multimodal {
       * palette indices resolved, rows in top-down raster order. */
     private[graft] def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
       if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-      def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      def le32(o: Int): Int = le16(o) | (le16(o + 2) << 16)
-      val dataOff = le32(10)
-      val dib = le32(14)
+      val dataOff = le32(bytes, 10)
+      val dib = le32(bytes, 14)
       // BITMAPINFOHEADER and its supersets only (V2 52 / V3 56 / V4 108 /
       // V5 124); BITMAPCOREHEADER (12) has a different field layout.
       // Upper bound phrased so a crafted dib near Int.MaxValue cannot
       // overflow 14 + dib into a passing negative
       if (dib < 40 || dib > bytes.length - 14) return None
-      val w = le32(18)
-      val hRaw = le32(22)
+      val w = le32(bytes, 18)
+      val hRaw = le32(bytes, 22)
       val topDown = hRaw < 0
       val h = math.abs(hRaw)
       if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return None
-      if (le16(26) != 1) return None // planes
-      val bpp = le16(28)
-      val comp = le32(30)
+      if (le16(bytes, 26) != 1) return None // planes
+      val bpp = le16(bytes, 28)
+      val comp = le32(bytes, 30)
       val ok = (comp, bpp) match {
         case (0, 8) | (0, 24) | (0, 32) => true
         case (1, 8)                     => !topDown // spec: RLE is never top-down
@@ -954,7 +952,7 @@ object Multimodal {
       // palette (BGRx quads) directly after the DIB header; biClrUsed
       // 0 means the full 256 for 8-bit
       val palette: Array[Byte] = if (bpp == 8) {
-        val used0 = le32(46)
+        val used0 = le32(bytes, 46)
         val used = if (used0 == 0) 256 else used0
         if (used < 1 || used > 256) return None
         val off = 14 + dib
@@ -1048,14 +1046,6 @@ object Multimodal {
       Some((w, h, 3, px))
     }
 
-    /** Same 8-dim feature contract as every pixel decoder here. */
-    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => featuresOfPixels(w, h, ch, px) }
-
-    /** Same integer-luminance contract as [[PnmCodec.decodeLuma]]. */
-    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => lumaOfPixels(w, h, ch, px) }
-
     /** Minimal real gray encoder in two byte-disjoint profiles (the
       * GifCodec discipline): 0 = 24-bit BI_RGB bottom-up (gray v →
       * BGR (v,v,v) — the layout ImageIO's BMP writer also emits, so
@@ -1070,9 +1060,6 @@ object Multimodal {
         profile: Int = 0): Array[Byte] = {
       require(pixels.length >= w * h, s"need ${w * h} pixels, got ${pixels.length}")
       require(profile == 0 || profile == 1, s"profile $profile")
-      val out = new java.io.ByteArrayOutputStream()
-      def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
       val body = new java.io.ByteArrayOutputStream()
       if (profile == 0) {
         val stride = (w * 3 + 3) & ~3
@@ -1104,13 +1091,14 @@ object Multimodal {
       val paletteBytes = if (profile == 1) 256 * 4 else 0
       val dataOff = 14 + 40 + paletteBytes
       val data = body.toByteArray
+      val out = new java.io.ByteArrayOutputStream()
       out.write('B'); out.write('M')
-      le32(dataOff + data.length); le32(0); le32(dataOff)
-      le32(40); le32(w); le32(h) // positive: bottom-up (RLE requires it)
-      le16(1); le16(if (profile == 0) 24 else 8)
-      le32(profile) // 0 = BI_RGB, 1 = BI_RLE8
-      le32(data.length); le32(2835); le32(2835) // 72 dpi
-      le32(if (profile == 1) 256 else 0); le32(0)
+      Seq(dataOff + data.length, 0, dataOff,
+        40, w, h).foreach(putLe32(out, _)) // positive h: bottom-up (RLE requires it)
+      putLe16(out, 1); putLe16(out, if (profile == 0) 24 else 8)
+      Seq(profile, // 0 = BI_RGB, 1 = BI_RLE8
+        data.length, 2835, 2835, // 72 dpi
+        if (profile == 1) 256 else 0, 0).foreach(putLe32(out, _))
       if (profile == 1) { // reversed gray palette, BGRx quads
         var j = 0
         while (j < 256) { val g = 255 - j; out.write(g); out.write(g); out.write(g); out.write(0); j += 1 }
@@ -1132,7 +1120,7 @@ object Multimodal {
     * Deflate compression return None — a real corpus routes those to a
     * codec library; the never-crash backstop and pixel cap match every
     * decoder here. */
-  object TiffCodec extends Codec {
+  object TiffCodec extends PixelCodec {
 
     private val MaxPixels = 1 << 26
 
@@ -1141,18 +1129,10 @@ object Multimodal {
       val le = bytes(0) == 'I' && bytes(1) == 'I'
       val be = bytes(0) == 'M' && bytes(1) == 'M'
       if (!le && !be) return None
-      def u16(o: Int): Int =
-        if (o < 0 || o + 2 > bytes.length) -1
-        else if (le) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-        else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-      def u32(o: Int): Long =
-        if (o < 0 || o + 4 > bytes.length) -1L
-        else if (le) (u16(o) & 0xffffL) | ((u16(o + 2) & 0xffffL) << 16)
-        else ((u16(o) & 0xffffL) << 16) | (u16(o + 2) & 0xffffL)
-      if (u16(2) != 42) return None
-      val ifd = u32(4)
+      if (u16(bytes, 2, le) != 42) return None
+      val ifd = u32(bytes, 4, le)
       if (ifd < 8 || ifd > bytes.length - 2) return None
-      val n = u16(ifd.toInt)
+      val n = u16(bytes, ifd.toInt, le)
       if (n <= 0 || ifd + 2 + 12L * n > bytes.length) return None
       // tag -> (type, count, valueOffsetField); SHORT/LONG scalar reads
       // resolve inline, array reads resolve through the offset
@@ -1165,10 +1145,11 @@ object Multimodal {
       var i = 0
       while (i < n) {
         val e = ifd.toInt + 2 + 12 * i
-        val tag = u16(e); val typ = u16(e + 2); val cnt = u32(e + 4)
+        val tag = u16(bytes, e, le); val typ = u16(bytes, e + 2, le)
+        val cnt = u32(bytes, e + 4, le)
         def scalar: Long =
-          if (typ == 3) u16(e + 8).toLong
-          else if (typ == 4) u32(e + 8)
+          if (typ == 3) u16(bytes, e + 8, le).toLong
+          else if (typ == 4) u32(bytes, e + 8, le)
           else -1L
         tag match {
           case 256 => w = scalar
@@ -1176,11 +1157,11 @@ object Multimodal {
           case 258 => // BitsPerSample: count 1 inline, or array (all must be 8)
             bits = if (cnt == 1) scalar
             else {
-              val off = u32(e + 8)
+              val off = u32(bytes, e + 8, le)
               if (typ != 3 || off < 0 || off + 2 * cnt > bytes.length) -1
               else {
                 var ok = true; var j = 0
-                while (j < cnt) { if (u16((off + 2 * j).toInt) != 8) ok = false; j += 1 }
+                while (j < cnt) { if (u16(bytes, (off + 2 * j).toInt, le) != 8) ok = false; j += 1 }
                 if (ok) 8 else -1
               }
             }
@@ -1214,10 +1195,11 @@ object Multimodal {
         if (cnt <= 0 || cnt > (1 << 20)) return None
         val unit = if (typ == 3) 2 else 4
         val inline = cnt * unit <= 4
-        val base = if (inline) fld.toLong else u32(fld)
+        val base = if (inline) fld.toLong else u32(bytes, fld, le)
         if (base < 0 || base + cnt * unit > bytes.length) return None
         Some(Array.tabulate(cnt.toInt)(j =>
-          if (typ == 3) u16((base + 2L * j).toInt).toLong else u32((base + 4L * j).toInt)))
+          if (typ == 3) u16(bytes, (base + 2L * j).toInt, le).toLong
+          else u32(bytes, (base + 4L * j).toInt, le)))
       }
       val offs = longArray(stripOffTag).getOrElse(return None)
       val cnts = longArray(stripCntTag).getOrElse(return None)
@@ -1226,14 +1208,14 @@ object Multimodal {
       val palette: Array[Byte] = if (photo == 3) {
         val (typ, cnt, fld) = colorMapTag
         if (typ != 3 || cnt != 768) return None
-        val base = u32(fld)
+        val base = u32(bytes, fld, le)
         if (base < 0 || base + 2 * cnt > bytes.length) return None
         val p = new Array[Byte](768)
         var j = 0
         while (j < 256) {
-          p(j * 3) = (u16((base + 2L * j).toInt) >> 8).toByte
-          p(j * 3 + 1) = (u16((base + 2L * (256 + j)).toInt) >> 8).toByte
-          p(j * 3 + 2) = (u16((base + 2L * (512 + j)).toInt) >> 8).toByte
+          p(j * 3) = (u16(bytes, (base + 2L * j).toInt, le) >> 8).toByte
+          p(j * 3 + 1) = (u16(bytes, (base + 2L * (256 + j)).toInt, le) >> 8).toByte
+          p(j * 3 + 2) = (u16(bytes, (base + 2L * (512 + j)).toInt, le) >> 8).toByte
           j += 1
         }
         p
@@ -1310,14 +1292,6 @@ object Multimodal {
       } else Some((wi, hi, 1, raw))
     }
 
-    /** Same 8-dim feature contract as every pixel decoder here. */
-    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => featuresOfPixels(w, h, ch, px) }
-
-    /** Same integer-luminance contract as [[PnmCodec.decodeLuma]]. */
-    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => lumaOfPixels(w, h, ch, px) }
-
     /** Minimal real gray encoder in two byte-disjoint profiles (the
       * house discipline): 0 = little-endian (`II`), single
       * uncompressed strip, photometric BlackIsZero; 1 = BIG-endian
@@ -1332,12 +1306,6 @@ object Multimodal {
       require(profile == 0 || profile == 1, s"profile $profile")
       val le = profile == 0
       val out = new java.io.ByteArrayOutputStream()
-      def w16(v: Int): Unit =
-        if (le) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-        else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-      def w32(v: Int): Unit =
-        if (le) { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-        else { w16((v >>> 16) & 0xffff); w16(v & 0xffff) }
       // pixel payload first (strips start at offset 8, IFD follows)
       val strips: Seq[Array[Byte]] =
         if (profile == 0) Seq(java.util.Arrays.copyOf(pixels, w * h))
@@ -1365,7 +1333,7 @@ object Multimodal {
           body.toByteArray
         }
       out.write(if (le) 'I' else 'M'); out.write(if (le) 'I' else 'M')
-      w16(42)
+      put16(out, 42, le)
       val dataStart = 8
       val dataLen = strips.map(_.length).sum
       val nStrips = strips.length
@@ -1375,11 +1343,11 @@ object Multimodal {
       val arraysAt = dataStart + dataLen
       val needArrays = nStrips > 1
       val ifdAt = arraysAt + (if (needArrays) 8 * nStrips else 0)
-      w32(ifdAt)
+      put32(out, ifdAt, le)
       strips.foreach(s => out.write(s, 0, s.length))
       if (needArrays) { // LONG strip offsets, then LONG byte counts
-        stripOffs.foreach(w32)
-        strips.foreach(s => w32(s.length))
+        stripOffs.foreach(put32(out, _, le))
+        strips.foreach(s => put32(out, s.length, le))
       }
       val entries = Seq[(Int, Int, Int, Int)](
         (256, 4, 1, w),                         // ImageWidth
@@ -1392,12 +1360,13 @@ object Multimodal {
         (278, 4, 1, if (profile == 0) h else 4), // RowsPerStrip
         (279, 4, nStrips,
           if (needArrays) arraysAt + 4 * nStrips else dataLen))
-      w16(entries.length)
+      put16(out, entries.length, le)
       entries.foreach { case (tag, typ, cnt, v) =>
-        w16(tag); w16(typ); w32(cnt)
-        if (typ == 3 && cnt == 1) { w16(v); w16(0) } else w32(v)
+        put16(out, tag, le); put16(out, typ, le); put32(out, cnt, le)
+        if (typ == 3 && cnt == 1) { put16(out, v, le); put16(out, 0, le) }
+        else put32(out, v, le)
       }
-      w32(0) // no next IFD
+      put32(out, 0, le) // no next IFD
       out.toByteArray
     }
   }
@@ -1417,7 +1386,7 @@ object Multimodal {
     * pixels, right-to-left rows (descriptor bit 4), and the legacy
     * interleave bits return None; malformation is None, never a
     * throw, same as every decoder here. */
-  object TgaCodec extends Codec {
+  object TgaCodec extends PixelCodec {
 
     private val MaxPixels = 1 << 26
 
@@ -1425,18 +1394,16 @@ object Multimodal {
       * palette indices resolved, rows in top-down raster order. */
     private[graft] def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
       if (bytes.length < 18) return None
-      def u8(o: Int): Int = bytes(o) & 0xff
-      def le16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
-      val idLen = u8(0)
-      val cmType = u8(1)
-      val imgType = u8(2)
+      val idLen = u8(bytes, 0)
+      val cmType = u8(bytes, 1)
+      val imgType = u8(bytes, 2)
       if (cmType > 1) return None
       val base = imgType & 7
       val rle = (imgType & 8) != 0
       if ((imgType & ~15) != 0 || base < 1 || base > 3) return None
-      val cmFirst = le16(3); val cmLen = le16(5); val cmBits = u8(7)
-      val w = le16(12); val h = le16(14)
-      val depth = u8(16); val desc = u8(17)
+      val cmFirst = le16(bytes, 3); val cmLen = le16(bytes, 5); val cmBits = u8(bytes, 7)
+      val w = le16(bytes, 12); val h = le16(bytes, 14)
+      val depth = u8(bytes, 16); val desc = u8(bytes, 17)
       // bit 4 right-to-left, bits 6–7 legacy interleave: refuse; these
       // zero-checks also harden the magic-less format detection
       if ((desc & 0xd0) != 0) return None
@@ -1525,14 +1492,6 @@ object Multimodal {
       Some((w, h, ch, px))
     }
 
-    /** Same 8-dim feature contract as every pixel decoder here. */
-    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => featuresOfPixels(w, h, ch, px) }
-
-    /** Same integer-luminance contract as [[PnmCodec.decodeLuma]]. */
-    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => lumaOfPixels(w, h, ch, px) }
-
     /** Minimal real gray encoder in two byte-disjoint profiles (the
       * GifCodec discipline): 0 = type 3 (uncompressed grayscale),
       * bottom-up, no ID field; 1 = type 9 (RLE color-mapped),
@@ -1549,16 +1508,15 @@ object Multimodal {
       require(profile == 0 || profile == 1, s"profile $profile")
       require(w > 0 && w < 65536 && h > 0 && h < 65536, s"${w}x$h out of TGA range")
       val out = new java.io.ByteArrayOutputStream()
-      def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
       val id = if (profile == 1) "graft-tga".getBytes("US-ASCII") else Array.empty[Byte]
       out.write(id.length)                      // idLength
       out.write(if (profile == 0) 0 else 1)     // colorMapType
       out.write(if (profile == 0) 3 else 9)     // imageType
-      le16(0)                                   // colorMapFirstEntry
-      le16(if (profile == 0) 0 else 256)        // colorMapLength
+      putLe16(out, 0)                           // colorMapFirstEntry
+      putLe16(out, if (profile == 0) 0 else 256) // colorMapLength
       out.write(if (profile == 0) 0 else 24)    // colorMapEntrySize
-      le16(0); le16(0)                          // x/y origin
-      le16(w); le16(h)
+      putLe16(out, 0); putLe16(out, 0)          // x/y origin
+      putLe16(out, w); putLe16(out, h)
       out.write(8)                              // pixelDepth
       out.write(if (profile == 0) 0 else 0x20)  // descriptor (bit 5 = top-down)
       out.write(id, 0, id.length)
@@ -1614,31 +1572,28 @@ object Multimodal {
     * the same on-black compositing choice as the GIF path. CUR files
     * (type 2), BI_RLE inside icons, and 1/4-bit planes return None;
     * malformation is None, never a throw. */
-  object IcoCodec extends Codec {
+  object IcoCodec extends PixelCodec {
 
     private val MaxPixels = 1 << 26
 
     private[graft] def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
       if (bytes.length < 6 + 16) return None
-      def u8(o: Int): Int = bytes(o) & 0xff
-      def le16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
-      def le32(o: Int): Long = le16(o).toLong | (le16(o + 2).toLong << 16)
-      if (le16(0) != 0 || le16(2) != 1) return None // reserved, type ICO
-      val count = le16(4)
+      if (le16(bytes, 0) != 0 || le16(bytes, 2) != 1) return None // reserved, type ICO
+      val count = le16(bytes, 4)
       if (count < 1 || 6 + 16 * count > bytes.length) return None
       // largest entry by area, ties to the first — the "best" icon
       var best = -1; var bestArea = -1L
       var i = 0
       while (i < count) {
         val e = 6 + 16 * i
-        val ew = if (u8(e) == 0) 256 else u8(e)
-        val eh = if (u8(e + 1) == 0) 256 else u8(e + 1)
+        val ew = if (u8(bytes, e) == 0) 256 else u8(bytes, e)
+        val eh = if (u8(bytes, e + 1) == 0) 256 else u8(bytes, e + 1)
         val area = ew.toLong * eh
         if (area > bestArea) { best = i; bestArea = area }
         i += 1
       }
       val e = 6 + 16 * best
-      val size = le32(e + 8); val off = le32(e + 12)
+      val size = le32u(bytes, e + 8); val off = le32u(bytes, e + 12)
       if (off < 6 + 16L * count || size < 16 ||
         off + size > bytes.length) return None
       val p0 = off.toInt; val pLen = size.toInt
@@ -1648,20 +1603,18 @@ object Multimodal {
         return PngCodec.decodePixels(
           java.util.Arrays.copyOfRange(bytes, p0, p0 + pLen))
       // BMP DIB payload: BITMAPINFOHEADER, biHeight doubled for the mask
-      def dle16(o: Int): Int = u8(p0 + o) | (u8(p0 + o + 1) << 8)
-      def dle32(o: Int): Int = dle16(o) | (dle16(o + 2) << 16)
-      if (pLen < 40 || dle32(0) != 40) return None
-      val w = dle32(4)
-      val h2 = dle32(8)
+      if (pLen < 40 || le32(bytes, p0) != 40) return None
+      val w = le32(bytes, p0 + 4)
+      val h2 = le32(bytes, p0 + 8)
       if (w <= 0 || h2 <= 0 || (h2 & 1) != 0) return None
       val h = h2 / 2
       if (w.toLong * h > MaxPixels) return None
-      if (dle16(12) != 1) return None // planes
-      val bpp = dle16(14)
+      if (le16(bytes, p0 + 12) != 1) return None // planes
+      val bpp = le16(bytes, p0 + 14)
       if (bpp != 8 && bpp != 24 && bpp != 32) return None
-      if (dle32(16) != 0) return None // BI_RGB only inside icons
+      if (le32(bytes, p0 + 16) != 0) return None // BI_RGB only inside icons
+      val used0 = le32(bytes, p0 + 32)
       val palette: Array[Byte] = if (bpp == 8) {
-        val used0 = dle32(32)
         val used = if (used0 == 0) 256 else used0
         if (used < 1 || used > 256 || 40 + 4 * used > pLen) return None
         val p = new Array[Byte](768)
@@ -1673,7 +1626,7 @@ object Multimodal {
         }
         p
       } else null
-      val xorAt = 40 + (if (bpp == 8) 4 * (if (dle32(32) == 0) 256 else dle32(32)) else 0)
+      val xorAt = 40 + (if (bpp == 8) 4 * (if (used0 == 0) 256 else used0) else 0)
       val xorStride = (w * (bpp / 8) + 3) & ~3
       val andStride = ((w + 31) / 32) * 4 // 1-bpp rows, 4-byte aligned
       val andAt = xorAt + xorStride * h
@@ -1705,14 +1658,6 @@ object Multimodal {
       Some((w, h, 3, px))
     }
 
-    /** Same 8-dim feature contract as every pixel decoder here. */
-    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => featuresOfPixels(w, h, ch, px) }
-
-    /** Same integer-luminance contract as [[PnmCodec.decodeLuma]]. */
-    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodePixels(bytes).map { case (w, h, ch, px) => lumaOfPixels(w, h, ch, px) }
-
     /** Minimal real gray encoder in two byte-disjoint profiles: 0 = a
       * single PNG-payload entry (the [[PngCodec]] sequential stream
       * wrapped in an icon directory — exercises the Vista+ branch);
@@ -1731,14 +1676,12 @@ object Multimodal {
         PngCodec.encodeGray(w, h, java.util.Arrays.copyOf(pixels, w * h))
       } else {
         val body = new java.io.ByteArrayOutputStream()
-        def le16(v: Int): Unit = { body.write(v & 0xff); body.write((v >> 8) & 0xff) }
-        def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
         val xorStride = (w + 3) & ~3
         val andStride = ((w + 31) / 32) * 4
-        le32(40); le32(w); le32(2 * h) // doubled height
-        le16(1); le16(8); le32(0)
-        le32(xorStride * h + andStride * h)
-        le32(2835); le32(2835); le32(256); le32(0)
+        putLe32(body, 40); putLe32(body, w); putLe32(body, 2 * h) // doubled height
+        putLe16(body, 1); putLe16(body, 8); putLe32(body, 0)
+        Seq(xorStride * h + andStride * h,
+          2835, 2835, 256, 0).foreach(putLe32(body, _))
         var j = 0 // reversed gray palette, BGRx quads
         while (j < 256) { val g = 255 - j; body.write(g); body.write(g); body.write(g); body.write(0); j += 1 }
         var row = h - 1 // XOR plane, bottom-up, index = 255 − v
@@ -1754,13 +1697,11 @@ object Multimodal {
         body.toByteArray
       }
       val out = new java.io.ByteArrayOutputStream()
-      def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
-      le16(0); le16(1); le16(1) // reserved, ICO, one entry
+      putLe16(out, 0); putLe16(out, 1); putLe16(out, 1) // reserved, ICO, one entry
       out.write(if (w == 256) 0 else w); out.write(if (h == 256) 0 else h)
       out.write(0); out.write(0) // colorCount, reserved
-      le16(1); le16(8) // planes, bpp (informational only)
-      le32(payload.length); le32(6 + 16) // size, offset
+      putLe16(out, 1); putLe16(out, 8) // planes, bpp (informational only)
+      putLe32(out, payload.length); putLe32(out, 6 + 16) // size, offset
       out.write(payload, 0, payload.length)
       out.toByteArray
     }
@@ -1842,7 +1783,7 @@ object Multimodal {
     * every JVM (no platform SIMD paths), so decoded pixels are
     * byte-identical across machines — decode results can sit in golden
     * pins exactly like PNM/PNG. */
-  object JpegCodec extends Codec {
+  object JpegCodec extends PixelCodec {
 
     private val MaxPixels = 1 << 24 // 16M px — far above any test asset
 
@@ -1985,7 +1926,6 @@ object Multimodal {
 
     private def decodeChecked(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Byte])] = {
       val n = bytes.length
-      def u16(p: Int): Int = ((bytes(p) & 0xff) << 8) | (bytes(p + 1) & 0xff)
       val qtab = new Array[Array[Int]](4)
       val dcTab = new Array[Huff](4)
       val acTab = new Array[Huff](4)
@@ -2022,7 +1962,7 @@ object Multimodal {
             () // no length field — the default arm would misparse one
           case 0xdb => // DQT
             if (pos + 2 > n) return None
-            val len = u16(pos); val end = pos + len
+            val len = be16(bytes, pos); val end = pos + len
             if (len < 2 || end > n) return None
             var p = pos + 2
             while (p < end) {
@@ -2035,7 +1975,7 @@ object Multimodal {
               var i = 0
               while (i < 64) {
                 t(i) = if (pq == 0) bytes(p + 1 + i) & 0xff
-                       else u16(p + 1 + 2 * i)
+                       else be16(bytes, p + 1 + 2 * i)
                 i += 1
               }
               qtab(tq) = t
@@ -2044,7 +1984,7 @@ object Multimodal {
             pos = end
           case 0xc4 => // DHT
             if (pos + 2 > n) return None
-            val len = u16(pos); val end = pos + len
+            val len = be16(bytes, pos); val end = pos + len
             if (len < 2 || end > n) return None
             var p = pos + 2
             while (p < end) {
@@ -2063,10 +2003,10 @@ object Multimodal {
           case m0 @ (0xc0 | 0xc2) => // SOF0 baseline / SOF2 progressive
             if (m0 == 0xc2) progressive = true
             if (pos + 2 > n) return None
-            val len = u16(pos); val end = pos + len
+            val len = be16(bytes, pos); val end = pos + len
             if (len < 8 || end > n) return None
             val precision = bytes(pos + 2) & 0xff
-            h = u16(pos + 3); w = u16(pos + 5)
+            h = be16(bytes, pos + 3); w = be16(bytes, pos + 5)
             nComp = bytes(pos + 7) & 0xff
             if (precision != 8 || w <= 0 || h <= 0 ||
                 w.toLong * h > MaxPixels ||
@@ -2104,14 +2044,14 @@ object Multimodal {
             return None // extended/arithmetic/lossless frames
           case 0xdd => // DRI
             if (pos + 4 > n) return None
-            if (u16(pos) != 4) return None
-            restartInterval = u16(pos + 2)
+            if (be16(bytes, pos) != 4) return None
+            restartInterval = be16(bytes, pos + 2)
             pos += 4
           case 0xda => // SOS — baseline: decode and finish; progressive:
             //              fold the scan into the coefficient state
             if (w == 0 || nComp == 0) return None
             if (pos + 2 > n) return None
-            val len = u16(pos); val end = pos + len
+            val len = be16(bytes, pos); val end = pos + len
             if (len < 3 || end > n) return None
             val ns = bytes(pos + 2) & 0xff
             if (ns < 1 || (if (progressive) ns > nComp else ns != nComp) ||
@@ -2160,7 +2100,7 @@ object Multimodal {
             pos = found
           case _ => // APPn / COM / anything with a length — skip
             if (pos + 2 > n) return None
-            val len = u16(pos)
+            val len = be16(bytes, pos)
             if (len < 2 || pos + len > n) return None
             pos += len
         }
@@ -2679,16 +2619,6 @@ object Multimodal {
       out
     }
 
-    def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodePixels(bytes).map { case (w, h, ch, px) =>
-        featuresOfPixels(w, h, ch, px)
-      }
-
-    private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodePixels(bytes).map { case (w, h, ch, px) =>
-        lumaOfPixels(w, h, ch, px)
-      }
-
     // -------------------------------------------------------------------
     // Minimal encoder — fixtures + gates, the FLAC-encoder discipline:
     // real sequential-baseline streams (SOI/DQT/SOF0/DHT/SOS/EOI, byte
@@ -2770,8 +2700,7 @@ object Multimodal {
       def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
       def segment(m: Int, body: Array[Byte]): Unit = {
         marker(m)
-        val len = body.length + 2
-        out.write((len >> 8) & 0xff); out.write(len & 0xff)
+        putBe16(out, body.length + 2)
         out.write(body)
       }
       marker(0xd8) // SOI
@@ -2861,18 +2790,20 @@ object Multimodal {
     }
   }
 
-  /** Pixel-level decode across every REAL image decoder (PNM, PNG,
-    * baseline JPEG) — the perceptual-hash family's entry point; stub
-    * formats yield None (a fake luminance plane must never enter a
-    * dedup hash). */
+  /** Every real image decoder in routing order: the first to accept the
+    * bytes wins. TGA has no magic number, so it runs last, after every
+    * magic-bearing format has had its chance. */
+  private val realCodecs: Seq[RealCodec] = Seq(PnmCodec, PngCodec, JpegCodec,
+    GifCodec, BmpCodec, TiffCodec, IcoCodec, TgaCodec)
+
+  /** The first codec's decode that accepts the bytes (later ones never run). */
+  private def firstDecode[C, A](codecs: Seq[C])(decode: C => Option[A]): Option[A] =
+    codecs.iterator.flatMap(decode(_)).nextOption()
+
+  /** Pixel-level decode across every real image decoder — the
+    * perceptual-hash family's entry point; stub formats yield None. */
   private[graft] def decodeLumaAny(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    PnmCodec.decodeLuma(bytes).orElse(PngCodec.decodeLuma(bytes))
-      .orElse(JpegCodec.decodeLuma(bytes))
-      .orElse(GifCodec.decodeLuma(bytes))
-      .orElse(BmpCodec.decodeLuma(bytes))
-      .orElse(TiffCodec.decodeLuma(bytes))
-      .orElse(IcoCodec.decodeLuma(bytes))
-      .orElse(TgaCodec.decodeLuma(bytes)) // magic-less: always LAST
+    firstDecode(realCodecs)(_.decodeLuma(bytes))
 
   /** Decoded audio features. */
   case class AudioFeatures(asset_id: Long, sample_rate: Int, channels: Int,
@@ -2885,6 +2816,30 @@ object Multimodal {
     def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])]
   }
 
+  /** A real audio decoder: besides features it yields the q164
+    * per-temporal-window integer energies that the perceptual-hash family
+    * hashes. [[StubAudioCodec]] is not one. */
+  trait RealAudioCodec extends AudioCodec {
+    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
+        nWindows: Int = 65): Option[Array[Long]]
+  }
+
+  /** A real decoder that lands its PCM as a canonical in-memory WAV and
+    * re-enters [[WavCodec]], so features and energy windows are
+    * identical for identical PCM whichever container carried it. */
+  trait WavTranscoder extends RealAudioCodec {
+    /** The decoded PCM as canonical 16-bit WAV; None on any malformation
+      * or unsupported profile, never a throw. */
+    private[graft] def toWav(bytes: Array[Byte]): Option[Array[Byte]]
+
+    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
+      toWav(bytes).flatMap(WavCodec.decodeAudio)
+
+    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
+        nWindows: Int): Option[Array[Long]] =
+      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
+  }
+
   /** REAL decoder for canonical WAV (RIFF/WAVE, PCM format 1, 16-bit) —
     * the audio analogue of [[PnmCodec]]: zero external libraries, full
     * chunk walking (unknown chunks skipped, word-aligned, truncation-
@@ -2894,49 +2849,18 @@ object Multimodal {
     * Multi-channel frames average to mono before analysis. MP3/OGG/AAC
     * plug in through the same seam on a cluster with media libs;
     * [[StubAudioCodec]] stands in for them here. */
-  object WavCodec extends AudioCodec {
+  object WavCodec extends RealAudioCodec {
+    /** The canonical profile this codec owns: PCM (format 1), 16-bit,
+      * any channel count. */
+    private def pcm16(bytes: Array[Byte]): Option[Riff.Fmt] =
+      Riff.walk(bytes).filter(f => f.format == 1 && f.bits == 16)
+
     def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] = {
-      def str(off: Int, n: Int): String =
-        if (off + n <= bytes.length) new String(bytes, off, n, "US-ASCII") else ""
-      def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-      def le32(off: Int): Long = (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-      if (bytes.length < 44 || str(0, 4) != "RIFF" || str(8, 4) != "WAVE") return None
-      var pos = 12
-      var audioFormat = -1; var channels = 0; var sampleRate = 0L; var bits = 0
-      var dataOff = -1; var dataLen = 0L
-      var walking = true
-      while (walking && pos + 8 <= bytes.length) {
-        val id = str(pos, 4)
-        val size = le32(pos + 4) // unsigned 32-bit as Long, always >= 0
-        val body = pos + 8
-        id match {
-          // gate on the chunk's DECLARED size too (r14 ADVICE): a fmt
-          // chunk declaring size<16 must not read the next chunk's
-          // bytes as format fields
-          case "fmt " if size >= 16 && body + 16 <= bytes.length =>
-            audioFormat = le16(body); channels = le16(body + 2)
-            sampleRate = le32(body + 4); bits = le16(body + 14)
-          case "data" =>
-            dataOff = body; dataLen = math.min(size, (bytes.length - body).toLong)
-          case _ => // skip LIST/INFO/etc.
-        }
-        // LONG arithmetic: a hostile 32-bit size would overflow an Int
-        // offset into a negative position (then crash the decode instead
-        // of returning None). A chunk claiming to run past the buffer
-        // also ends the walk — nothing can follow it.
-        val next = body.toLong + size + (size & 1L) // chunks word-aligned
-        if (next <= pos || next > bytes.length) walking = false
-        else pos = next.toInt
-      }
-      // sampleRate parses as UNSIGNED 32-bit: a hostile 0xFFFFFFFF passes
-      // a <=0 check and .toInt-wraps negative downstream — cap it so the
-      // never-throw-never-corrupt contract holds (192 kHz is the realistic
-      // ceiling; anything above is a malformed header)
-      if (audioFormat != 1 || bits != 16 || channels < 1 ||
-          sampleRate <= 0 || sampleRate > 4000000L || dataOff < 0) return None
+      val fmt = pcm16(bytes).orNull
+      if (fmt == null) return None
+      val channels = fmt.channels
       val bytesPerFrame = 2 * channels
-      val nFrames = dataLen / bytesPerFrame
+      val nFrames = fmt.dataLen / bytesPerFrame
       if (nFrames == 0) return None
       var sumSq = 0.0
       val quarterSq = new Array[Double](4)
@@ -2946,11 +2870,11 @@ object Multimodal {
       var prevSign = 0
       var f = 0L
       while (f < nFrames) {
-        val off = dataOff + (f * bytesPerFrame).toInt
+        val off = fmt.dataOff + (f * bytesPerFrame).toInt
         var acc = 0L
         var c = 0
         while (c < channels) {
-          acc += le16(off + 2 * c).toShort // sign-extend
+          acc += le16(bytes, off + 2 * c).toShort // sign-extend
           c += 1
         }
         val mono = (acc / channels).toInt
@@ -2970,6 +2894,7 @@ object Multimodal {
       val full = 32768.0
       def rms(sq: Double, n: Long): Float =
         if (n > 0) (math.sqrt(sq / n) / full).toFloat else 0f
+      val sampleRate = fmt.sampleRate
       val feature = Array(
         rms(sumSq, nFrames),
         (peak / full).toFloat,
@@ -2986,49 +2911,21 @@ object Multimodal {
       * boundaries — bit-exact on any platform). Requires at least
       * `nWindows` frames so no window is empty. */
     private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] = {
-      def str(off: Int, n: Int): String =
-        if (off + n <= bytes.length) new String(bytes, off, n, "US-ASCII") else ""
-      def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-      def le32(off: Int): Long = (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-      if (bytes.length < 44 || str(0, 4) != "RIFF" || str(8, 4) != "WAVE") return None
-      var pos = 12
-      var audioFormat = -1; var channels = 0; var sampleRate = 0L; var bits = 0
-      var dataOff = -1; var dataLen = 0L
-      var walking = true
-      while (walking && pos + 8 <= bytes.length) {
-        val id = str(pos, 4)
-        val size = le32(pos + 4)
-        val body = pos + 8
-        id match {
-          // gate on the chunk's DECLARED size too (r14 ADVICE): a fmt
-          // chunk declaring size<16 must not read the next chunk's
-          // bytes as format fields
-          case "fmt " if size >= 16 && body + 16 <= bytes.length =>
-            audioFormat = le16(body); channels = le16(body + 2)
-            sampleRate = le32(body + 4); bits = le16(body + 14)
-          case "data" =>
-            dataOff = body; dataLen = math.min(size, (bytes.length - body).toLong)
-          case _ =>
-        }
-        val next = body.toLong + size + (size & 1L)
-        if (next <= pos || next > bytes.length) walking = false
-        else pos = next.toInt
-      }
-      if (audioFormat != 1 || bits != 16 || channels < 1 ||
-          sampleRate <= 0 || sampleRate > 4000000L || dataOff < 0) return None
+        nWindows: Int): Option[Array[Long]] = {
+      val fmt = pcm16(bytes).orNull
+      if (fmt == null) return None
+      val channels = fmt.channels
       val bytesPerFrame = 2 * channels
-      val nFrames = dataLen / bytesPerFrame
+      val nFrames = fmt.dataLen / bytesPerFrame
       if (nFrames < nWindows) return None
       val energy = new Array[Long](nWindows)
       var f = 0L
       while (f < nFrames) {
-        val off = dataOff + (f * bytesPerFrame).toInt
+        val off = fmt.dataOff + (f * bytesPerFrame).toInt
         var acc = 0L
         var c = 0
         while (c < channels) {
-          acc += le16(off + 2 * c).toShort
+          acc += le16(bytes, off + 2 * c).toShort
           c += 1
         }
         val mono = acc / channels
@@ -3041,43 +2938,13 @@ object Multimodal {
 
     /** Raw interleaved PCM for the FLAC transcode fixture path: the same
       * RIFF walk, samples returned untouched. */
-    private[graft] def decodePcm16(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-      def str(off: Int, n: Int): String =
-        if (off + n <= bytes.length) new String(bytes, off, n, "US-ASCII") else ""
-      def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-      def le32(off: Int): Long = (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-      if (bytes.length < 44 || str(0, 4) != "RIFF" || str(8, 4) != "WAVE") return None
-      var pos = 12
-      var audioFormat = -1; var channels = 0; var sampleRate = 0L; var bits = 0
-      var dataOff = -1; var dataLen = 0L
-      var walking = true
-      while (walking && pos + 8 <= bytes.length) {
-        val id = str(pos, 4)
-        val size = le32(pos + 4)
-        val body = pos + 8
-        id match {
-          // gate on the chunk's DECLARED size too (r14 ADVICE): a fmt
-          // chunk declaring size<16 must not read the next chunk's
-          // bytes as format fields
-          case "fmt " if size >= 16 && body + 16 <= bytes.length =>
-            audioFormat = le16(body); channels = le16(body + 2)
-            sampleRate = le32(body + 4); bits = le16(body + 14)
-          case "data" =>
-            dataOff = body; dataLen = math.min(size, (bytes.length - body).toLong)
-          case _ =>
-        }
-        val next = body.toLong + size + (size & 1L)
-        if (next <= pos || next > bytes.length) walking = false
-        else pos = next.toInt
+    private[graft] def decodePcm16(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] =
+      pcm16(bytes).flatMap { f =>
+        val nSamples = (f.dataLen / 2).toInt
+        if (nSamples == 0) None
+        else Some((f.sampleRate.toInt, f.channels,
+          Array.tabulate(nSamples)(i => le16(bytes, f.dataOff + 2 * i).toShort)))
       }
-      if (audioFormat != 1 || bits != 16 || channels < 1 ||
-          sampleRate <= 0 || sampleRate > 4000000L || dataOff < 0) return None
-      val nSamples = (dataLen / 2).toInt
-      if (nSamples == 0) return None
-      val pcm = Array.tabulate(nSamples)(i => le16(dataOff + 2 * i).toShort)
-      Some((sampleRate.toInt, channels, pcm))
-    }
   }
 
   /** REAL lib-free FLAC decoder (RFC 9639 subset: 16-bit streams, all
@@ -3098,14 +2965,7 @@ object Multimodal {
     * VERBATIM / FIXED(1,2)+Rice, so tonal signals take the predictive
     * path and the md5-noise fixtures take verbatim — all of it real
     * framing with real CRCs that libFLAC would accept. */
-  object FlacCodec extends AudioCodec {
-    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      toWav(bytes).flatMap(WavCodec.decodeAudio)
-
-    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] =
-      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
-
+  object FlacCodec extends WavTranscoder {
     /** MSB-first bit reader; out-of-bounds reads raise the private
       * control exception the decode boundary maps to None. */
     private final class Exhausted extends RuntimeException
@@ -3291,8 +3151,7 @@ object Multimodal {
           br.alignToByte()
           val crcPos = br.bytePos
           if (crcPos + 2 > bytes.length) return None
-          val want = ((bytes(crcPos) & 0xff) << 8) | (bytes(crcPos + 1) & 0xff)
-          if (crc16(bytes, frameStart, crcPos) != want) return None
+          if (crc16(bytes, frameStart, crcPos) != be16(bytes, crcPos)) return None
           pos = crcPos + 2
           // undo inter-channel decorrelation
           chAsgn match {
@@ -3324,7 +3183,7 @@ object Multimodal {
             while (cc < nCh) {
               val s = ch(cc)(i)
               if (s < -32768 || s > 32767) return None
-              out.write(s & 0xff); out.write((s >> 8) & 0xff)
+              putLe16(out, s)
               cc += 1
             }
             i += 1
@@ -3334,20 +3193,10 @@ object Multimodal {
         if (decoded == 0) return None
         if (totalSamples != 0 && decoded < totalSamples) return None
         val data = out.toByteArray
-        val hdr = new java.io.ByteArrayOutputStream()
-        def w16(v: Int): Unit = { hdr.write(v & 0xff); hdr.write((v >> 8) & 0xff) }
-        def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
-        hdr.write("RIFF".getBytes("US-ASCII")); w32(36 + data.length)
-        hdr.write("WAVE".getBytes("US-ASCII"))
-        hdr.write("fmt ".getBytes("US-ASCII")); w32(16)
-        w16(1); w16(channels); w32(sampleRate)
-        w32(sampleRate * channels * 2); w16(channels * 2); w16(16)
-        hdr.write("data".getBytes("US-ASCII")); w32(data.length)
-        hdr.write(data)
-        Some(hdr.toByteArray)
+        Some(Riff.header(1, channels, sampleRate, 16, channels * 2, data.length) ++ data)
       } catch {
         case _: Exhausted | _: ArrayIndexOutOfBoundsException |
-             _: NegativeArraySizeException | _: OutOfMemoryError => None
+             _: NegativeArraySizeException => None
       }
     }
 
@@ -3481,7 +3330,7 @@ object Multimodal {
       require(channels >= 1 && channels <= 8 && interleaved.length % channels == 0)
       val nFrames = interleaved.length / channels
       val out = new java.io.ByteArrayOutputStream()
-      out.write("fLaC".getBytes("US-ASCII"))
+      putAscii(out, "fLaC")
       // STREAMINFO (last metadata block)
       val si = new BitWriter
       val block = 4096
@@ -3523,7 +3372,7 @@ object Multimodal {
         val frameBytes = fw.toBytes
         val crc16v = crc16(frameBytes, 0, frameBytes.length)
         out.write(frameBytes)
-        out.write((crc16v >> 8) & 0xff); out.write(crc16v & 0xff)
+        putBe16(out, crc16v)
         off += n
         frameNo += 1
       }
@@ -3600,7 +3449,7 @@ object Multimodal {
       val n = left.length
       require(n <= 65535, "single-frame test encoder")
       val out = new java.io.ByteArrayOutputStream()
-      out.write("fLaC".getBytes("US-ASCII"))
+      putAscii(out, "fLaC")
       val si = new BitWriter
       si.writeBits(n, 16); si.writeBits(n, 16)
       si.writeBits(0, 24); si.writeBits(0, 24)
@@ -3632,7 +3481,7 @@ object Multimodal {
       val frameBytes = fw.toBytes
       val c16 = crc16(frameBytes, 0, frameBytes.length)
       out.write(frameBytes)
-      out.write((c16 >> 8) & 0xff); out.write(c16 & 0xff)
+      putBe16(out, c16)
       out.toByteArray
     }
 
@@ -3643,49 +3492,82 @@ object Multimodal {
       WavCodec.decodePcm16(wav).map { case (sr, ch, pcm) => encode16(sr, ch, pcm) }
   }
 
-  /** Shared RIFF/WAVE chunk walk for the non-PCM WAV codecs below (the
-    * same hardened walk [[WavCodec]] uses: unsigned sizes in Long,
-    * word-aligned, truncation-safe) — returns the raw fmt fields so each
-    * codec applies its own format gate. */
+  /** RIFF/WAVE, read and written in one place. The walk is hardened:
+    * unsigned chunk sizes in Long, word-aligned, truncation-safe, unknown
+    * chunks skipped. */
   private[graft] object Riff {
     final case class Fmt(format: Int, channels: Int, sampleRate: Long,
-        blockAlign: Int, bits: Int, dataOff: Int, dataLen: Long)
+        blockAlign: Int, bits: Int, dataOff: Int, dataLen: Long) {
+      /** The gate the transcoding codecs add to the walk's: at most 8
+        * channels and a non-empty data chunk. */
+      def transcodable: Boolean = channels <= 8 && dataLen > 0
+    }
 
+    /** The fmt and data chunks of a RIFF/WAVE stream, raw, for each codec
+      * to apply its own format gate. None unless both chunks are present
+      * with at least one channel and a sample rate in (0, 4 MHz]. A file
+      * holding both chunks is at least 44 bytes long. */
     def walk(bytes: Array[Byte]): Option[Fmt] = {
-      def str(off: Int, n: Int): String =
-        if (off + n <= bytes.length) new String(bytes, off, n, "US-ASCII") else ""
-      def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-      def le32(off: Int): Long = (bytes(off) & 0xffL) | ((bytes(off + 1) & 0xffL) << 8) |
-        ((bytes(off + 2) & 0xffL) << 16) | ((bytes(off + 3) & 0xffL) << 24)
-      if (bytes.length < 36 || str(0, 4) != "RIFF" || str(8, 4) != "WAVE") return None
+      if (bytes.length < 44 || str(bytes, 0, 4) != "RIFF" ||
+          str(bytes, 8, 4) != "WAVE") return None
       var pos = 12
       var format = -1; var channels = 0; var sampleRate = 0L
       var blockAlign = 0; var bits = 0
       var dataOff = -1; var dataLen = 0L
       var walking = true
       while (walking && pos + 8 <= bytes.length) {
-        val id = str(pos, 4)
-        val size = le32(pos + 4)
+        val id = str(bytes, pos, 4)
+        val size = le32u(bytes, pos + 4)
         val body = pos + 8
         id match {
           // gate on the chunk's DECLARED size too (r14 ADVICE): a fmt
           // chunk declaring size<16 must not read the next chunk's
           // bytes as format fields
           case "fmt " if size >= 16 && body + 16 <= bytes.length =>
-            format = le16(body); channels = le16(body + 2)
-            sampleRate = le32(body + 4); blockAlign = le16(body + 12)
-            bits = le16(body + 14)
+            format = le16(bytes, body); channels = le16(bytes, body + 2)
+            sampleRate = le32u(bytes, body + 4); blockAlign = le16(bytes, body + 12)
+            bits = le16(bytes, body + 14)
           case "data" =>
             dataOff = body; dataLen = math.min(size, (bytes.length - body).toLong)
-          case _ => // skip LIST/fact/etc.
+          case _ => // skip LIST/INFO/fact/etc.
         }
-        val next = body.toLong + size + (size & 1L)
+        // LONG arithmetic: a hostile 32-bit size would overflow an Int
+        // offset into a negative position (then crash the decode instead
+        // of returning None). A chunk claiming to run past the buffer
+        // also ends the walk — nothing can follow it.
+        val next = body.toLong + size + (size & 1L) // chunks word-aligned
         if (next <= pos || next > bytes.length) walking = false
         else pos = next.toInt
       }
-      if (channels < 1 || channels > 8 || sampleRate <= 0 ||
-          sampleRate > 4000000L || dataOff < 0 || dataLen <= 0) None
+      // sampleRate parses as UNSIGNED 32-bit: a hostile 0xFFFFFFFF passes
+      // a <=0 check and .toInt-wraps negative downstream — cap it so the
+      // never-throw-never-corrupt contract holds (192 kHz is the realistic
+      // ceiling; anything above is a malformed header)
+      if (channels < 1 || sampleRate <= 0 || sampleRate > 4000000L || dataOff < 0) None
       else Some(Fmt(format, channels, sampleRate, blockAlign, bits, dataOff, dataLen))
+    }
+
+    /** The header of a RIFF/WAVE stream carrying `dataLen` bytes of
+      * samples: a 16-byte fmt chunk — 20 bytes when the samples come in
+      * blocks, with the extension cbSize = 2 and wSamplesPerBlock — then
+      * an optional fact chunk (the frame count), then the data chunk
+      * header. The byte rate is rate × blockAlign / samples per block. */
+    def header(format: Int, channels: Int, sampleRate: Int, bits: Int,
+        blockAlign: Int, dataLen: Int, samplesPerBlock: Option[Int] = None,
+        fact: Boolean = false): Array[Byte] = {
+      val fmtLen = if (samplesPerBlock.isEmpty) 16 else 20
+      val out = new java.io.ByteArrayOutputStream(60)
+      putAscii(out, "RIFF")
+      putLe32(out, 4 + (8 + fmtLen) + (if (fact) 12 else 0) + 8 + dataLen)
+      putAscii(out, "WAVE")
+      putAscii(out, "fmt "); putLe32(out, fmtLen)
+      putLe16(out, format); putLe16(out, channels); putLe32(out, sampleRate)
+      putLe32(out, sampleRate * blockAlign / samplesPerBlock.getOrElse(1))
+      putLe16(out, blockAlign); putLe16(out, bits)
+      samplesPerBlock.foreach { n => putLe16(out, 2); putLe16(out, n) }
+      if (fact) { putAscii(out, "fact"); putLe32(out, 4); putLe32(out, dataLen / blockAlign) }
+      putAscii(out, "data"); putLe32(out, dataLen)
+      out.toByteArray
     }
   }
 
@@ -3695,16 +3577,9 @@ object Multimodal {
   private[graft] def pcmWavBytes(sampleRate: Int, channels: Int,
       pcm: Array[Short]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(44 + pcm.length * 2)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
-    out.write("RIFF".getBytes("US-ASCII")); w32(36 + pcm.length * 2)
-    out.write("WAVE".getBytes("US-ASCII"))
-    out.write("fmt ".getBytes("US-ASCII")); w32(16)
-    w16(1); w16(channels); w32(sampleRate)
-    w32(sampleRate * channels * 2); w16(channels * 2); w16(16)
-    out.write("data".getBytes("US-ASCII")); w32(pcm.length * 2)
+    out.write(Riff.header(1, channels, sampleRate, 16, channels * 2, pcm.length * 2))
     var i = 0
-    while (i < pcm.length) { w16(pcm(i) & 0xffff); i += 1 }
+    while (i < pcm.length) { putLe16(out, pcm(i)); i += 1 }
     out.toByteArray
   }
 
@@ -3721,7 +3596,7 @@ object Multimodal {
     * canonicalization: μ-law 0x7f — negative zero — decodes to 0 and
     * re-encodes as positive zero 0xff; G711AdpcmSpec carves out exactly
     * that byte). */
-  object G711Codec extends AudioCodec {
+  object G711Codec extends WavTranscoder {
     /** μ-law code byte → linear PCM (G.711: bias 0x84, 8 segments).
       * Range ±32124; decode(0xff) = 0. */
     private[graft] def ulawToLinear(code: Int): Int = {
@@ -3772,7 +3647,7 @@ object Multimodal {
       * 8-bit samples; never throws. */
     private[graft] def toWav(bytes: Array[Byte]): Option[Array[Byte]] =
       try {
-        Riff.walk(bytes).flatMap { f =>
+        Riff.walk(bytes).filter(_.transcodable).flatMap { f =>
           if ((f.format != 6 && f.format != 7) || f.bits != 8) None
           else {
             val n = f.dataLen.toInt
@@ -3794,29 +3669,12 @@ object Multimodal {
         case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None
       }
 
-    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      toWav(bytes).flatMap(WavCodec.decodeAudio)
-
-    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] =
-      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
-
     /** Fixture wrapper: raw G.711 code bytes → a WAV container with fmt
       * tag 7 (μ-law) or 6 (A-law), 8-bit mono/stereo. */
     private[graft] def wrap(format: Int, sampleRate: Int, channels: Int,
         codes: Array[Byte]): Array[Byte] = {
       require(format == 6 || format == 7)
-      val out = new java.io.ByteArrayOutputStream(44 + codes.length)
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
-      out.write("RIFF".getBytes("US-ASCII")); w32(36 + codes.length)
-      out.write("WAVE".getBytes("US-ASCII"))
-      out.write("fmt ".getBytes("US-ASCII")); w32(16)
-      w16(format); w16(channels); w32(sampleRate)
-      w32(sampleRate * channels); w16(channels); w16(8)
-      out.write("data".getBytes("US-ASCII")); w32(codes.length)
-      out.write(codes)
-      out.toByteArray
+      Riff.header(format, channels, sampleRate, 8, channels, codes.length) ++ codes
     }
   }
 
@@ -3827,7 +3685,7 @@ object Multimodal {
     * Nibbles decode low-first through the canonical 89-entry step table;
     * a hostile step index clamps (never-crash contract). Decode lands as
     * canonical PCM WAV and re-enters [[WavCodec]] like FLAC and G.711. */
-  object AdpcmCodec extends AudioCodec {
+  object AdpcmCodec extends WavTranscoder {
     private[graft] val StepTable: Array[Int] = Array(
       7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37, 41, 45,
       50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173, 190, 209,
@@ -3869,7 +3727,7 @@ object Multimodal {
       * decode added first. */
     private[graft] def toWav(bytes: Array[Byte]): Option[Array[Byte]] =
       try {
-        Riff.walk(bytes).flatMap { f =>
+        Riff.walk(bytes).filter(_.transcodable).flatMap { f =>
           if (f.format != 0x11 || f.bits != 4 || f.channels > 2) None
           else {
             val ch = f.channels
@@ -3890,7 +3748,7 @@ object Multimodal {
                   var c = 0
                   while (c < ch) {
                     val ho = base + 4 * c
-                    val p = ((bytes(ho) & 0xff) | ((bytes(ho + 1) & 0xff) << 8)).toShort
+                    val p = le16(bytes, ho).toShort
                     pred(c) = p.toInt
                     idx(c) = math.min(88, bytes(ho + 2) & 0xff) // clamp hostile index
                     pcm(outFrame * ch + c) = p
@@ -3933,37 +3791,18 @@ object Multimodal {
           }
         }
       } catch {
-        case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException |
-             _: OutOfMemoryError => None
+        case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None
       }
 
-    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      toWav(bytes).flatMap(WavCodec.decodeAudio)
-
-    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] =
-      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
-
     /** Fixture wrapper: raw block bytes (headers + nibbles, `blockAlign`
-      * each) → a WAV container with fmt tag 0x11 and the fact/extension
-      * fields real decoders expect. */
+      * each) → a WAV container with fmt tag 0x11 and the fmt extension
+      * (wSamplesPerBlock) real decoders expect. */
     private[graft] def wrap(sampleRate: Int, channels: Int, blockAlign: Int,
         blocks: Array[Byte]): Array[Byte] = {
       require(blocks.length % blockAlign == 0)
       val samplesPerBlock = 1 + (blockAlign - 4 * channels) * 2 / channels
-      val out = new java.io.ByteArrayOutputStream(64 + blocks.length)
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
-      out.write("RIFF".getBytes("US-ASCII")); w32(40 + blocks.length)
-      out.write("WAVE".getBytes("US-ASCII"))
-      out.write("fmt ".getBytes("US-ASCII")); w32(20)
-      w16(0x11); w16(channels); w32(sampleRate)
-      w32(sampleRate * blockAlign / samplesPerBlock) // nominal byte rate
-      w16(blockAlign); w16(4)
-      w16(2); w16(samplesPerBlock) // cbSize + wSamplesPerBlock
-      out.write("data".getBytes("US-ASCII")); w32(blocks.length)
-      out.write(blocks)
-      out.toByteArray
+      Riff.header(0x11, channels, sampleRate, 4, blockAlign, blocks.length,
+        Some(samplesPerBlock)) ++ blocks
     }
   }
 
@@ -3981,11 +3820,11 @@ object Multimodal {
     * WAV and re-enters [[WavCodec]] like every non-canonical audio
     * path, so features and energy windows are depth-invariant wherever
     * the depth conversion is lossless. */
-  object PcmDepthCodec extends AudioCodec {
+  object PcmDepthCodec extends WavTranscoder {
 
     private[graft] def toWav(bytes: Array[Byte]): Option[Array[Byte]] =
       try {
-        Riff.walk(bytes).flatMap { f =>
+        Riff.walk(bytes).filter(_.transcodable).flatMap { f =>
           val ok = (f.format, f.bits) match {
             case (1, 8) | (1, 24) | (3, 32) => true
             case _                          => false
@@ -4006,15 +3845,13 @@ object Multimodal {
               } else if (f.bits == 24) {
                 while (i < pcm.length) {
                   val o = f.dataOff + 3 * i // LE: top 16 of the 24
-                  pcm(i) = (((bytes(o + 2) & 0xff) << 8) | (bytes(o + 1) & 0xff)).toShort
+                  pcm(i) = le16(bytes, o + 1).toShort
                   i += 1
                 }
               } else {
                 while (i < pcm.length) {
                   val o = f.dataOff + 4 * i
-                  val x = java.lang.Float.intBitsToFloat(
-                    (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-                      ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24))
+                  val x = java.lang.Float.intBitsToFloat(le32(bytes, o))
                   val v = // NaN canonicalizes to 0; ±inf clamp with the range
                     if (java.lang.Float.isNaN(x)) 0.0
                     else math.rint(x.toDouble * 32767.0)
@@ -4030,46 +3867,14 @@ object Multimodal {
         case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None
       }
 
-    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      toWav(bytes).flatMap(WavCodec.decodeAudio)
-
-    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] =
-      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
-
-    private def wavAround(format: Int, sampleRate: Int, channels: Int,
-        bits: Int, data: Array[Byte], fact: Boolean): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream(60 + data.length)
-      def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
-      val factBytes = if (fact) 12 else 0
-      out.write("RIFF".getBytes("US-ASCII")); w32(36 + factBytes + data.length)
-      out.write("WAVE".getBytes("US-ASCII"))
-      out.write("fmt ".getBytes("US-ASCII")); w32(16)
-      w16(format); w16(channels); w32(sampleRate)
-      w32(sampleRate * channels * (bits / 8)); w16(channels * (bits / 8)); w16(bits)
-      if (fact) { // float WAVs conventionally carry one; exercises skip
-        out.write("fact".getBytes("US-ASCII")); w32(4)
-        w32(data.length / (channels * (bits / 8)))
-      }
-      out.write("data".getBytes("US-ASCII")); w32(data.length)
-      out.write(data)
-      out.toByteArray
-    }
-
     /** 24-bit WAV around 16-bit PCM (v << 8: decode narrows back
       * exactly — lossless by construction, the q238 corpus leg). */
     private[graft] def encode24(sampleRate: Int, channels: Int,
         pcm: Array[Short]): Array[Byte] = {
-      val data = new Array[Byte](pcm.length * 3)
+      val data = new java.io.ByteArrayOutputStream(pcm.length * 3)
       var i = 0
-      while (i < pcm.length) {
-        data(3 * i) = 0 // low byte of v << 8
-        data(3 * i + 1) = (pcm(i) & 0xff).toByte
-        data(3 * i + 2) = ((pcm(i) >> 8) & 0xff).toByte
-        i += 1
-      }
-      wavAround(1, sampleRate, channels, 24, data, fact = false)
+      while (i < pcm.length) { data.write(0); putLe16(data, pcm(i)); i += 1 } // v << 8
+      Riff.header(1, channels, sampleRate, 24, channels * 3, data.size) ++ data.toByteArray
     }
 
     /** Float32 WAV around 16-bit PCM (x = v / 32767f: decode's
@@ -4077,17 +3882,14 @@ object Multimodal {
       * exhaustively in the spec; the other q238 corpus leg). */
     private[graft] def encodeFloat32(sampleRate: Int, channels: Int,
         pcm: Array[Short]): Array[Byte] = {
-      val data = new Array[Byte](pcm.length * 4)
+      val data = new java.io.ByteArrayOutputStream(pcm.length * 4)
       var i = 0
       while (i < pcm.length) {
-        val b = java.lang.Float.floatToIntBits(pcm(i) / 32767.0f)
-        data(4 * i) = (b & 0xff).toByte
-        data(4 * i + 1) = ((b >> 8) & 0xff).toByte
-        data(4 * i + 2) = ((b >> 16) & 0xff).toByte
-        data(4 * i + 3) = ((b >> 24) & 0xff).toByte
-        i += 1
+        putLe32(data, java.lang.Float.floatToIntBits(pcm(i) / 32767.0f)); i += 1
       }
-      wavAround(3, sampleRate, channels, 32, data, fact = true)
+      // float WAVs conventionally carry a fact chunk; the decoder skips it
+      Riff.header(3, channels, sampleRate, 32, channels * 4, data.size,
+        fact = true) ++ data.toByteArray
     }
 
     /** 8-bit unsigned WAV around ON-LATTICE 16-bit PCM (samples must be
@@ -4101,7 +3903,7 @@ object Multimodal {
         data(i) = ((pcm(i) >> 8) + 128).toByte
         i += 1
       }
-      wavAround(1, sampleRate, channels, 8, data, fact = false)
+      Riff.header(1, channels, sampleRate, 8, channels, data.length) ++ data
     }
 
     private[graft] def transcodeFromWav24(wav: Array[Byte]): Option[Array[Byte]] =
@@ -4127,13 +3929,13 @@ object Multimodal {
     * lands as a canonical in-memory WAV and re-enters [[WavCodec]],
     * exactly like FLAC/G.711 — identical PCM gives identical features
     * and energy windows whichever container carried it. */
-  object AiffCodec extends AudioCodec {
+  object AiffCodec extends WavTranscoder {
 
     /** 80-bit extended float at `off` → sample rate (Long), or -1 when
       * non-finite / non-positive / absurd. value = mant · 2^(exp−16383−63). */
     private def extendedToRate(bytes: Array[Byte], off: Int): Long = {
       if (off + 10 > bytes.length) return -1
-      val se = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
+      val se = be16(bytes, off)
       if ((se & 0x8000) != 0) return -1 // negative rate
       val exp = se & 0x7fff
       var mant = 0L
@@ -4171,12 +3973,8 @@ object Multimodal {
       * SSND chunks all parse and the sample format is one of the three
       * PCM profiles; never throws. */
     private[graft] def toWav(bytes: Array[Byte]): Option[Array[Byte]] = {
-      def str(off: Int, n: Int): String =
-        if (off + n <= bytes.length) new String(bytes, off, n, "US-ASCII") else ""
-      def be16(off: Int): Int = ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-      def be32(off: Int): Long = (be16(off).toLong << 16) | be16(off + 2)
-      if (bytes.length < 12 + 8 || str(0, 4) != "FORM") return None
-      val form = str(8, 4)
+      if (bytes.length < 12 + 8 || str(bytes, 0, 4) != "FORM") return None
+      val form = str(bytes, 8, 4)
       if (form != "AIFF" && form != "AIFC") return None
       var pos = 12
       var channels = 0; var sampleSize = 0; var rate = -1L
@@ -4185,8 +3983,8 @@ object Multimodal {
       var dataOff = -1; var dataLen = 0L
       var walking = true
       while (walking && pos + 8 <= bytes.length) {
-        val id = str(pos, 4)
-        val size = be32(pos + 4) // unsigned-as-Long
+        val id = str(bytes, pos, 4)
+        val size = be32(bytes, pos + 4) // unsigned-as-Long
         val body = pos + 8
         id match {
           // COMM: channels u16, numSampleFrames u32, sampleSize u16,
@@ -4194,15 +3992,15 @@ object Multimodal {
           // on the DECLARED size so a short chunk never reads its
           // successor's bytes as fields (the Riff fmt hardening).
           case "COMM" if size >= 18 && body + 18 <= bytes.length =>
-            channels = be16(body)
-            nFrames = be32(body + 2)
-            sampleSize = be16(body + 6)
+            channels = be16(bytes, body)
+            nFrames = be32(bytes, body + 2)
+            sampleSize = be16(bytes, body + 6)
             rate = extendedToRate(bytes, body + 8)
             if (form == "AIFC" && size >= 22 && body + 22 <= bytes.length)
-              compression = str(body + 18, 4)
+              compression = str(bytes, body + 18, 4)
           case "SSND" if size >= 8 && body + 8 <= bytes.length =>
             // offset + blockSize prologue precede the sample bytes
-            val off = be32(body)
+            val off = be32(bytes, body)
             if (off >= 0 && off <= size - 8) {
               dataOff = body + 8 + off.toInt
               dataLen = math.min(size - 8 - off, (bytes.length - dataOff).toLong)
@@ -4228,9 +4026,7 @@ object Multimodal {
       if (sampleSize == 16) {
         while (i < pcm.length) {
           val o = dataOff + 2 * i
-          pcm(i) =
-            if (le) ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort
-            else (((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)).toShort
+          pcm(i) = (if (le) le16(bytes, o) else be16(bytes, o)).toShort
           i += 1
         }
       } else {
@@ -4241,13 +4037,6 @@ object Multimodal {
       }
       Some(pcmWavBytes(rate.toInt, channels, pcm))
     }
-
-    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      toWav(bytes).flatMap(WavCodec.decodeAudio)
-
-    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] =
-      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
 
     /** Minimal real encoder in two byte-disjoint LOSSLESS profiles:
       * 0 = plain `AIFF` with big-endian PCM16; 1 = `AIFC` compression
@@ -4262,29 +4051,23 @@ object Multimodal {
       require(channels >= 1 && pcm.length % channels == 0)
       val le = profile == 1
       val out = new java.io.ByteArrayOutputStream(64 + pcm.length * 2)
-      def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-      def w32(v: Long): Unit = { w16(((v >> 16) & 0xffff).toInt); w16((v & 0xffff).toInt) }
-      def fourcc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
       val nFrames = pcm.length / channels
       val ssndSize = 8 + pcm.length * 2
       val commSize = if (profile == 0) 18 else 22 + 2 // + pascal-string pad
       val fverSize = if (profile == 0) 0 else 8 + 4
       val formSize = 4 + fverSize + 8 + commSize + 8 + ssndSize
-      fourcc("FORM"); w32(formSize)
-      fourcc(if (profile == 0) "AIFF" else "AIFC")
-      if (profile == 1) { fourcc("FVER"); w32(4); w32(0xA2805140L) } // AIFC version 1
-      fourcc("COMM"); w32(commSize)
-      w16(channels); w32(nFrames); w16(16)
-      out.write(rateToExtended(sampleRate.toLong), 0, 10)
-      if (profile == 1) { fourcc("sowt"); out.write(0); out.write(0) } // empty pstring, padded
-      fourcc("SSND"); w32(ssndSize); w32(0); w32(0) // offset, blockSize
-      var i = 0
-      while (i < pcm.length) {
-        val v = pcm(i) & 0xffff
-        if (le) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-        else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-        i += 1
+      putAscii(out, "FORM"); putBe32(out, formSize)
+      putAscii(out, if (profile == 0) "AIFF" else "AIFC")
+      if (profile == 1) { // AIFC version 1
+        putAscii(out, "FVER"); putBe32(out, 4); putBe32(out, 0xA2805140L)
       }
+      putAscii(out, "COMM"); putBe32(out, commSize)
+      putBe16(out, channels); putBe32(out, nFrames); putBe16(out, 16)
+      out.write(rateToExtended(sampleRate.toLong), 0, 10)
+      if (profile == 1) { putAscii(out, "sowt"); out.write(0); out.write(0) } // empty pstring, padded
+      putAscii(out, "SSND"); putBe32(out, ssndSize); putBe32(out, 0); putBe32(out, 0) // offset, blockSize
+      var i = 0
+      while (i < pcm.length) { put16(out, pcm(i), le); i += 1 }
       out.toByteArray
     }
 
@@ -4305,20 +4088,15 @@ object Multimodal {
     * A-law. Everything else (floats, 24/32-bit, compressed) returns
     * None. Decoded PCM lands as canonical WAV and re-enters
     * [[WavCodec]] like every compressed-audio path. */
-  object AuCodec extends AudioCodec {
+  object AuCodec extends WavTranscoder {
 
     private[graft] def toWav(bytes: Array[Byte]): Option[Array[Byte]] = {
-      if (bytes.length < 24) return None
-      def be32(off: Int): Long =
-        ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-          ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-      if (bytes(0) != '.' || bytes(1) != 's' || bytes(2) != 'n' || bytes(3) != 'd')
-        return None
-      val dataOff = be32(4)
-      val dataSize = be32(8)
-      val encoding = be32(12)
-      val rate = be32(16)
-      val channels = be32(20)
+      if (bytes.length < 24 || str(bytes, 0, 4) != ".snd") return None
+      val dataOff = be32(bytes, 4)
+      val dataSize = be32(bytes, 8)
+      val encoding = be32(bytes, 12)
+      val rate = be32(bytes, 16)
+      val channels = be32(bytes, 20)
       if (dataOff < 24 || dataOff > bytes.length) return None
       if (channels < 1 || channels > 8 || rate <= 0 || rate > 4000000L) return None
       val avail = bytes.length - dataOff
@@ -4333,8 +4111,7 @@ object Multimodal {
           val pcm = new Array[Short](n - n % channels.toInt)
           var i = 0
           while (i < pcm.length) {
-            pcm(i) = (((bytes(off + 2 * i) & 0xff) << 8) |
-              (bytes(off + 2 * i + 1) & 0xff)).toShort
+            pcm(i) = be16(bytes, off + 2 * i).toShort
             i += 1
           }
           Some(pcmWavBytes(rate.toInt, channels.toInt, pcm))
@@ -4353,13 +4130,6 @@ object Multimodal {
       }
     }
 
-    def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      toWav(bytes).flatMap(WavCodec.decodeAudio)
-
-    private[graft] def decodeEnergyWindows(bytes: Array[Byte],
-        nWindows: Int = 65): Option[Array[Long]] =
-      toWav(bytes).flatMap(WavCodec.decodeEnergyWindows(_, nWindows))
-
     /** Minimal real encoder: 16-bit BE linear PCM (encoding 3) behind a
       * 28-byte header (data offset 28 — a 4-byte annotation field, so
       * the offset-honoring path is on the corpus, not just the spec).
@@ -4368,19 +4138,12 @@ object Multimodal {
         pcm: Array[Short]): Array[Byte] = {
       require(channels >= 1 && pcm.length % channels == 0)
       val out = new java.io.ByteArrayOutputStream(28 + pcm.length * 2)
-      def w32(v: Long): Unit = {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      }
-      out.write(".snd".getBytes("US-ASCII"))
-      w32(28); w32(pcm.length * 2L); w32(3); w32(sampleRate.toLong); w32(channels.toLong)
-      w32(0) // 4-byte annotation (zero) — dataOff 28 skips it
+      putAscii(out, ".snd")
+      Seq(28L, pcm.length * 2L, 3L, sampleRate.toLong, channels.toLong)
+        .foreach(putBe32(out, _))
+      putBe32(out, 0) // 4-byte annotation (zero) — dataOff 28 skips it
       var i = 0
-      while (i < pcm.length) {
-        val v = pcm(i) & 0xffff
-        out.write((v >> 8) & 0xff); out.write(v & 0xff)
-        i += 1
-      }
+      while (i < pcm.length) { putBe16(out, pcm(i)); i += 1 }
       out.toByteArray
     }
 
@@ -4404,14 +4167,13 @@ object Multimodal {
     * A-law) and IMA ADPCM decode; stub only for the remaining perceptual
     * codecs (MP3/OGG/AAC). */
   object DefaultAudioCodec extends AudioCodec {
+    /** Every real audio decoder in routing order; the first to accept
+      * the bytes wins. */
+    private val realAudioCodecs: Seq[RealAudioCodec] = Seq(WavCodec, FlacCodec,
+      G711Codec, AdpcmCodec, PcmDepthCodec, AiffCodec, AuCodec)
+
     def decodeAudio(bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-      WavCodec.decodeAudio(bytes)
-        .orElse(FlacCodec.decodeAudio(bytes))
-        .orElse(G711Codec.decodeAudio(bytes))
-        .orElse(AdpcmCodec.decodeAudio(bytes))
-        .orElse(PcmDepthCodec.decodeAudio(bytes))
-        .orElse(AiffCodec.decodeAudio(bytes))
-        .orElse(AuCodec.decodeAudio(bytes))
+      firstDecode(realAudioCodecs)(_.decodeAudio(bytes))
         .orElse(StubAudioCodec.decodeAudio(bytes))
 
     /** Container-routing twin of the q164/q226 window decode: PCM WAV
@@ -4420,13 +4182,7 @@ object Multimodal {
       * whichever container carried it. */
     private[graft] def decodeEnergyWindows(bytes: Array[Byte],
         nWindows: Int = 65): Option[Array[Long]] =
-      WavCodec.decodeEnergyWindows(bytes, nWindows)
-        .orElse(FlacCodec.decodeEnergyWindows(bytes, nWindows))
-        .orElse(G711Codec.decodeEnergyWindows(bytes, nWindows))
-        .orElse(AdpcmCodec.decodeEnergyWindows(bytes, nWindows))
-        .orElse(PcmDepthCodec.decodeEnergyWindows(bytes, nWindows))
-        .orElse(AiffCodec.decodeEnergyWindows(bytes, nWindows))
-        .orElse(AuCodec.decodeEnergyWindows(bytes, nWindows))
+      firstDecode(realAudioCodecs)(_.decodeEnergyWindows(bytes, nWindows))
   }
 
   /** STUB codec — deterministic fake decode keyed on content bytes, for
@@ -4452,15 +4208,7 @@ object Multimodal {
     * MJPEG VIDEO payloads route through [[decodeVideoFrameLumas]]). */
   object DefaultCodec extends Codec {
     def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      PnmCodec.decodeImage(bytes)
-        .orElse(PngCodec.decodeImage(bytes))
-        .orElse(JpegCodec.decodeImage(bytes))
-        .orElse(GifCodec.decodeImage(bytes))
-        .orElse(BmpCodec.decodeImage(bytes))
-        .orElse(TiffCodec.decodeImage(bytes))
-        .orElse(IcoCodec.decodeImage(bytes))
-        .orElse(TgaCodec.decodeImage(bytes)) // magic-less: last real codec
-        .orElse(StubCodec.decodeImage(bytes))
+      firstDecode(realCodecs)(_.decodeImage(bytes)).orElse(StubCodec.decodeImage(bytes))
   }
 
   /** Decode + feature-extract, batch-per-partition (the mapInPandas shape:
@@ -4526,11 +4274,6 @@ object Multimodal {
 
     def parse(bytes: Array[Byte]): Option[(String, Long, Seq[Mp4Frame])] = {
       try {
-        def be32(off: Int): Long =
-          ((bytes(off) & 0xffL) << 24) | ((bytes(off + 1) & 0xffL) << 16) |
-            ((bytes(off + 2) & 0xffL) << 8) | (bytes(off + 3) & 0xffL)
-        def be64(off: Int): Long = (be32(off) << 32) | be32(off + 4)
-        def fourcc(off: Int): String = new String(bytes, off, 4, "US-ASCII")
         if (bytes.length < 16) return None
         // the file must lead with a well-formed top-level box (ftyp by
         // convention; we only require structural sanity)
@@ -4551,12 +4294,12 @@ object Multimodal {
           if (depth > 16) throw new IllegalStateException("box depth")
           var pos = from
           while (pos + 8 <= until && !videoDone) {
-            var size = be32(pos)
-            val tpe = fourcc(pos + 4)
+            var size = be32(bytes, pos)
+            val tpe = str(bytes, pos + 4, 4)
             var body = pos + 8
             if (size == 1) {
               if (pos + 16 > until) return
-              size = be64(pos + 8)
+              size = be64(bytes, pos + 8)
               body = pos + 16
             } else if (size == 0) size = until - pos
             if (size < (body - pos) || pos + size > until) return
@@ -4576,49 +4319,49 @@ object Multimodal {
                     chunkOffsets != null && stsc != null)
                   videoDone = true
               case "hdlr" if body + 12 <= end =>
-                handler = fourcc(body + 8)
+                handler = str(bytes, body + 8, 4)
               case "mdhd" if body + 16 <= end =>
                 val version = bytes(body) & 0xff
-                timescale = if (version == 1) be32(body + 20) else be32(body + 12)
+                timescale = if (version == 1) be32(bytes, body + 20) else be32(bytes, body + 12)
               case "stsd" if body + 16 <= end =>
-                codec = fourcc(body + 12) // first sample-description fourcc
+                codec = str(bytes, body + 12, 4) // first sample-description fourcc
               case "stsz" if body + 12 <= end =>
-                val uniform = be32(body + 4)
-                val n = be32(body + 8)
+                val uniform = be32(bytes, body + 4)
+                val n = be32(bytes, body + 8)
                 if (n > (1L << 20)) throw new IllegalStateException("stsz cap")
                 sizes =
                   if (uniform != 0) Array.fill(n.toInt)(uniform)
                   else {
                     if (body + 12 + 4L * n > end) throw new IllegalStateException("stsz trunc")
-                    Array.tabulate(n.toInt)(i => be32(body + 12 + 4 * i))
+                    Array.tabulate(n.toInt)(i => be32(bytes, body + 12 + 4 * i))
                   }
               case "stco" if body + 8 <= end =>
-                val n = be32(body + 4)
+                val n = be32(bytes, body + 4)
                 if (n > (1L << 20) || body + 8 + 4L * n > end)
                   throw new IllegalStateException("stco")
-                chunkOffsets = Array.tabulate(n.toInt)(i => be32(body + 8 + 4 * i))
+                chunkOffsets = Array.tabulate(n.toInt)(i => be32(bytes, body + 8 + 4 * i))
               case "co64" if body + 8 <= end =>
-                val n = be32(body + 4)
+                val n = be32(bytes, body + 4)
                 if (n > (1L << 20) || body + 8 + 8L * n > end)
                   throw new IllegalStateException("co64")
-                chunkOffsets = Array.tabulate(n.toInt)(i => be64(body + 8 + 8 * i))
+                chunkOffsets = Array.tabulate(n.toInt)(i => be64(bytes, body + 8 + 8 * i))
               case "stsc" if body + 8 <= end =>
-                val n = be32(body + 4)
+                val n = be32(bytes, body + 4)
                 if (n > (1L << 20) || body + 8 + 12L * n > end)
                   throw new IllegalStateException("stsc")
                 stsc = Array.tabulate(n.toInt)(i =>
-                  (be32(body + 8 + 12 * i), be32(body + 12 + 12 * i)))
+                  (be32(bytes, body + 8 + 12 * i), be32(bytes, body + 12 + 12 * i)))
               case "stss" if body + 8 <= end =>
-                val n = be32(body + 4)
+                val n = be32(bytes, body + 4)
                 if (n > (1L << 20) || body + 8 + 4L * n > end)
                   throw new IllegalStateException("stss")
-                sync = Array.tabulate(n.toInt)(i => be32(body + 8 + 4 * i))
+                sync = Array.tabulate(n.toInt)(i => be32(bytes, body + 8 + 4 * i))
               case "stts" if body + 8 <= end =>
-                val n = be32(body + 4)
+                val n = be32(bytes, body + 4)
                 if (n > (1L << 20) || body + 8 + 8L * n > end)
                   throw new IllegalStateException("stts")
                 stts = Array.tabulate(n.toInt)(i =>
-                  (be32(body + 8 + 8 * i), be32(body + 12 + 8 * i)))
+                  (be32(bytes, body + 8 + 8 * i), be32(bytes, body + 12 + 8 * i)))
               case _ => () // mdat / free / unknown: skip
             }
             pos = end
@@ -4682,51 +4425,48 @@ object Multimodal {
       require(samples.nonEmpty && chunkSize >= 1)
       require(!uniformStsz || samples.map(_.length).distinct.size == 1,
         "uniform stsz needs equal-size samples")
-      def be32(v: Long): Array[Byte] = Array(
-        ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-        ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-      def be64(v: Long): Array[Byte] = be32(v >> 32) ++ be32(v & 0xffffffffL)
+      /** Big-endian 32-bit fields. */
+      def ints(vs: Long*): Array[Byte] = {
+        val out = new java.io.ByteArrayOutputStream(4 * vs.length)
+        vs.foreach(putBe32(out, _))
+        out.toByteArray
+      }
       def box(tpe: String, payload: Array[Byte]*): Array[Byte] = {
         val body = payload.flatten.toArray
-        be32(body.length + 8L) ++ tpe.getBytes("US-ASCII") ++ body
+        ints(body.length + 8L) ++ tpe.getBytes("US-ASCII") ++ body
       }
-      val ftyp = box("ftyp", "isom".getBytes, be32(512), "isomiso2".getBytes)
+      val ftyp = box("ftyp", "isom".getBytes, ints(512), "isomiso2".getBytes)
       val mdatPayload = samples.flatten.toArray
       val mdat = box("mdat", mdatPayload)
       val mdatDataStart = ftyp.length + 8L
       val chunks = samples.grouped(chunkSize).toSeq
       val chunkOffs = chunks.scanLeft(mdatDataStart)((o, c) =>
         o + c.map(_.length.toLong).sum).init
-      val stsd = box("stsd", be32(0), be32(1),
+      val stsd = box("stsd", ints(0, 1),
         box(codec, Array.fill[Byte](8)(0)))
-      val stts = box("stts", be32(0), be32(1), be32(samples.size.toLong), be32(delta))
+      val stts = box("stts", ints(0, 1, samples.size.toLong, delta))
       val lastPer = samples.size - chunkSize * (chunks.size - 1)
-      val stscRuns: Seq[Array[Byte]] =
-        if (chunks.size == 1 || lastPer == chunkSize)
-          Seq(be32(1), be32(chunkSize.toLong), be32(1))
-        else Seq(be32(1), be32(chunkSize.toLong), be32(1),
-          be32(chunks.size.toLong), be32(lastPer.toLong), be32(1))
-      val stsc = box("stsc", Seq(be32(0), be32(if (stscRuns.size > 3) 2L else 1L))
-        ++ stscRuns: _*)
+      val stscRuns: Seq[Long] =
+        if (chunks.size == 1 || lastPer == chunkSize) Seq(1, chunkSize.toLong, 1)
+        else Seq(1, chunkSize.toLong, 1, chunks.size.toLong, lastPer.toLong, 1)
+      val stsc = box("stsc", ints(0, stscRuns.size / 3) ++ ints(stscRuns: _*))
       val stsz =
         if (uniformStsz)
-          box("stsz", be32(0), be32(samples.head.length.toLong),
-            be32(samples.size.toLong))
-        else box("stsz", Seq(be32(0), be32(0), be32(samples.size.toLong))
-          ++ samples.map(s => be32(s.length.toLong)): _*)
+          box("stsz", ints(0, samples.head.length.toLong, samples.size.toLong))
+        else box("stsz", ints(0, 0, samples.size.toLong),
+          ints(samples.map(_.length.toLong): _*))
       val stco =
-        if (use64) box("co64", Seq(be32(0), be32(chunks.size.toLong))
-          ++ chunkOffs.map(be64): _*)
-        else box("stco", Seq(be32(0), be32(chunks.size.toLong))
-          ++ chunkOffs.map(be32): _*)
+        if (use64) box("co64", ints(0, chunks.size.toLong),
+          ints(chunkOffs.flatMap(o => Seq(o >> 32, o)): _*))
+        else box("stco", ints(0, chunks.size.toLong), ints(chunkOffs: _*))
       val stss =
         if (keyframes.isEmpty) Array.emptyByteArray
-        else box("stss", Seq(be32(0), be32(keyframes.size.toLong))
-          ++ keyframes.toSeq.sorted.map(k => be32(k + 1L)): _*)
+        else box("stss", ints(0, keyframes.size.toLong),
+          ints(keyframes.toSeq.sorted.map(_ + 1L): _*))
       val stbl = box("stbl", stsd, stts, stsc, stsz, stco, stss)
       val minf = box("minf", stbl)
-      val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(timescale), be32(0))
-      val hdlr = box("hdlr", be32(0), be32(0), "vide".getBytes("US-ASCII"),
+      val mdhd = box("mdhd", ints(0, 0, 0, timescale, 0))
+      val hdlr = box("hdlr", ints(0, 0), "vide".getBytes("US-ASCII"),
         Array.fill[Byte](12)(0))
       val mdia = box("mdia", mdhd, hdlr, minf)
       val trak = box("trak", mdia)

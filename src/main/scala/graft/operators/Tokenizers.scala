@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cross-family tokenizer audit: train all three tokenizer families the
@@ -38,27 +38,40 @@ object Tokenizers {
     * properties correct (threads are created under the caller's group,
     * so Bench's per-query cost attribution still lands on this query);
     * results are deterministic because the loops are independent and
-    * each is deterministic on its own. */
-  private def inParallel(thunks: (() => DataFrame)*): Seq[DataFrame] = {
+    * each is deterministic on its own.
+    *
+    * The first failure, in whichever thunk, stops the others' cluster
+    * work too: each thunk tags its jobs with its own job tag, with
+    * interrupt-on-cancel, and the failure cancels every tag. Interrupting
+    * a driver thread alone leaves its submitted jobs running. Tags, not
+    * job groups, so the caller's group and its attribution stay intact. */
+  private[graft] def inParallel(spark: SparkSession)(
+      thunks: (() => DataFrame)*): Seq[DataFrame] = {
+    val sc = spark.sparkContext
+    val tags = thunks.indices.map(i => s"graft-parallel-${java.util.UUID.randomUUID()}-$i")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    val completed = new java.util.concurrent.ExecutorCompletionService[DataFrame](pool)
     try {
-      val futs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = t()
+      val futs = thunks.zip(tags).map { case (t, tag) =>
+        completed.submit(new java.util.concurrent.Callable[DataFrame] {
+          override def call(): DataFrame = {
+            sc.addJobTag(tag) // a fresh pool thread: the tag is this thunk's alone
+            sc.setInterruptOnCancel(true)
+            t()
+          }
         })
       }
-      futs.map { f =>
-        try f.get()
+      thunks.foreach { _ =>
+        try completed.take().get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            // first failure aborts the OTHER trainings too (r16 ADVICE):
-            // shutdown() alone lets submitted trainers run to completion,
-            // burning cluster time after the lane is already dead
             futs.foreach(_.cancel(true))
+            tags.foreach(sc.cancelJobsWithTag)
             pool.shutdownNow()
             throw e.getCause
         }
       }
+      futs.map(_.get())
     } finally pool.shutdown()
   }
 
@@ -79,7 +92,7 @@ object Tokenizers {
           round(col("n_subwords").cast("double") / col("n_words"), 6)
             .as("fertility"))
     }
-    val Seq(bpeMerges, wpMerges, ugPieces) = inParallel(
+    val Seq(bpeMerges, wpMerges, ugPieces) = inParallel(d.sparkSession)(
       () => Curation.bpeTrainMerges(d)
         .localCheckpoint(eager = false), // consumers: tokenize + unit count
       () => Wordpiece.wordpieceTrainMerges(d)
@@ -110,7 +123,7 @@ object Tokenizers {
     * every join below is broadcast-trivial at any corpus size. */
   def tokenizerVocabOverlap(docs: DataFrame): DataFrame = {
     val d = docs.localCheckpoint(eager = true) // consumers: 3 trainings (forked)
-    val Seq(bpe, wp, ug) = inParallel(
+    val Seq(bpe, wp, ug) = inParallel(d.sparkSession)(
       () => Curation.bpeTrainMerges(d)
         .select(concat(col("l"), col("r")).as("unit")).distinct()
         .withColumn("fam", lit("bpe")),

@@ -253,6 +253,15 @@ class FlacSpec extends AnyFunSuite {
     }
   }
 
+  test("a stream declaring total_samples = 0 stops at the 2^24-sample cap") {
+    val flac = FlacCodec.encode16(8000, 1, new Array[Short]((1 << 24) + 4096))
+    // STREAMINFO's 36-bit total starts 108 bits into the body at byte 8:
+    // the low nibble of byte 21 and bytes 22..25
+    flac(21) = (flac(21) & 0xf0).toByte
+    (22 to 25).foreach(flac(_) = 0)
+    assert(FlacCodec.toWav(flac).isEmpty)
+  }
+
   test("container invariance: FLAC transcode carries identical features and q164 windows") {
     // a canonical WAV (the q164 fixture header shape) and its transcode
     val pcm = noise(144, seed = 5)

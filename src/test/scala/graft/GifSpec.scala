@@ -235,6 +235,24 @@ class GifSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(GifCodec.decodeRgbFrames(Array.emptyByteArray).isEmpty)
   }
 
+  test("composited frames stay inside the 2^24-pixel budget") {
+    // 200 one-pixel frames on a 1024×1024 canvas: each returned frame is
+    // a full-canvas copy, so only 16 fit the budget
+    val gif = GifCodec.encode(1024, 1024,
+      (0 until 200).map(i => FramePlan(i, 0, 1, 1, Array(i.toByte))))
+    assert(gif.length < 8192)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val frames = GifCodec.decodeRgbFrames(gif)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    val n = frames.size // not inside assert: a failure would print every frame
+    assert(n == (1 << 24) / (1024 * 1024), s"$n frames")
+    assert(frames.last._4(n - 1) == (n - 1) * 0x010101)
+    assert(allocated < (128L << 20), s"allocated $allocated bytes")
+  }
+
   test("q228 mixed corpus: GIF trans-code is hash-invariant, pairs cross a real LZW decode") {
     // the q159 PNG gate applied to GIF: re-encoding every original as a
     // real GIF (alternating profiles — half interlaced with a reversed

@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.Multimodal
 import graft.operators.Multimodal.MediaAsset
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 class MultimodalSpec extends AnyFunSuite with SparkSessionTestWrapper {
@@ -109,6 +111,9 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val stereo = Seq.tabulate(32)(i => if (i % 2 == 0) 16384 else -16384).map(_.toShort)
     val Some((_, ch2, n2, f2)) = Multimodal.WavCodec.decodeAudio(wavBytes(8000, 2, stereo))
     assert(ch2 == 2 && n2 == 16L && f2(0) == 0.0f && f2(1) == 0.0f)
+    // past the transcoders' 8-channel gate the canonical path still decodes
+    val Some((_, ch9, n9, _)) = Multimodal.WavCodec.decodeAudio(wavBytes(8000, 9, stereo.take(27)))
+    assert(ch9 == 9 && n9 == 3L)
     // junk rejection: non-RIFF bytes are not WAV
     assert(Multimodal.WavCodec.decodeAudio("not a wav at all".getBytes).isEmpty)
     // truncated data chunk: frame count clamps to the bytes present
@@ -576,5 +581,189 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Seq(MediaAsset(41L, "video/mp4", Array[Byte](1, 2, 3, 4))).toDS())
       .collect().head
     assert(stubbed.width >= 64, "stub seam must keep serving non-decodable formats")
+  }
+
+  /** Every encoder and fixture wrapper on fixed inputs, plus the
+    * documents-table WAV corpus: the byte pins below and the cross-codec
+    * fuzz corpus. */
+  private lazy val fixtures: Seq[(String, Array[Byte])] = {
+    val docs = Seq((7L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val synthetic = graft.operators.ImageHash.syntheticWav(docs)
+      .collect().filter(_.asset_id == 14L).head.bytes
+    EncoderFixtures.all :+ ("synthetic_wav" -> synthetic)
+  }
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map("%02x".format(_)).mkString
+
+  /** SHA-256 of each fixture, taken before the codecs moved onto the
+    * shared byte layer: a refactor of the readers and writers must not
+    * move one output byte. */
+  private val pinnedDigests: Map[String, String] = Map(
+    "pnm_p5" -> "e91e752b6ed632135da0c4d68b2f2e9c2031bd8fb6810aa80cb102db9fd54928",
+    "pnm_p6" -> "98d1f8e51354de9616ead8cd2ebdd069a69d409080614aa78ce35b24badc99f6",
+    "png_p0" -> "9e2d982ae44bf9ac35292117bd94cf33de15acb8b438c559196719a7016ecf84",
+    "png_p1" -> "1417e1a61274cdbda6e422e96e96934848424038d4e0b96fcae46fa0c692eb27",
+    "png_p2" -> "8677db79dee6f8ec1be933c21a57af2d19de7193877910e88bfa34a175da43ca",
+    "png_p3" -> "aeec94efa3b180953d2d2eb097fc8693aef5bd31736f888911079e493d35a2dd",
+    "gif_p0" -> "17dd52970641ee0132ca6cb23bbf8a5195e4dcfe9f7db690c1af54dd2651e917",
+    "gif_p1" -> "3c661ab0b1a584718049fea7a84a3949aa6804bc456644eb06ff8a325e42ef9a",
+    "gif_anim_p0" -> "59b9ab94d9acb4283545002a771542c35b4ae042457ee9034a866ddd55c281cb",
+    "gif_anim_p1" -> "0c2c358262c607acb59492edcfe0d590a711652eda5f5a4fb84054d133466c20",
+    "bmp_p0" -> "a3069c42f98ea6cd3ad51c81ebcc27adec930ec7bbc629f092bedeeb68ef6a60",
+    "bmp_p1" -> "3cf35bd1dbfb86bce2a096c2500331bcd975cdf16a244dad0f2c68173a3dd204",
+    "tiff_p0" -> "bac40d67dcda3de49a274c8b1af1f50f7ece7dc88bb68c1106c63f3f8d0fd0ec",
+    "tiff_p1" -> "41ce666b782d1dd038629816b78b4d80becb5bc7a49550e7cf4d992a377379c5",
+    "tga_p0" -> "6077e5adeb87759f19680b4162e1c58d846428ba0313828a14df7aac09f7dd03",
+    "tga_p1" -> "c57d12596d6a114c9fa6fdd0aa62cf0b57fbb81540328ce11f37754c42801687",
+    "ico_p0" -> "57b97b40fe9853d95573b362d5753fb936cb2c4884ba73828ec92700c6c754ab",
+    "ico_p1" -> "1a0a1823218560caacad4f43b057c4b3a474fee44eef9410ad8f54e2f0980cdd",
+    "jpeg_p0" -> "3be83abfca7f42b742da6da143dc20c5eb12e9e901c36f72d858898e5fd01b00",
+    "jpeg_p1" -> "fb331b8ce6c7fa3eda8a46615c0df6217bde29689f817ed04b2de7af64bb0501",
+    "wav_mono" -> "b014932c5cf48784e783ba5a78d09c1305ccb8f8f2f8d4231afc2cc5a00dcefe",
+    "wav_stereo" -> "ae4abd86ddf3fc5e743df6a6e7297aacb21697c4af4b9fa28ebbfd5a5d976bda",
+    "flac_mono" -> "8e2deabc08ad6c2015b1ab5788cbd8cadda522650407af9449a6cf4e5721d314",
+    "flac_stereo" -> "49d2bed86f8a3588b899df4c42fb796724b21690b940aeb7591977a035e64136",
+    "flac_mid_side" -> "09bf209376795c3b3302475f9c3a4bd44db9cdf51174cb5eae6ed0cdaa0dce17",
+    "flac_to_wav" -> "b014932c5cf48784e783ba5a78d09c1305ccb8f8f2f8d4231afc2cc5a00dcefe",
+    "g711_ulaw" -> "8fecef26de399340ab7e8188093dffe2a3fdc7c0eb7b25bd6f3e77a2b4a16eaa",
+    "g711_alaw" -> "f1d312d5d80577f05ab90d025150951ad2136f653cd590dc6f8e114eb46460ad",
+    "g711_to_wav" -> "e6e618b22f3decbd04fd2a3739e2e2ed6ca1ac1bcaecb53343569faa654dc6e3",
+    "adpcm_mono" -> "1c9e95506e11845af98663d3be8c799d04fbb859c8a6cb16090ae4b56d91131d",
+    "adpcm_stereo" -> "03aa4d28a3a8ee18035b40b8262c1c138ba81c5d74c8c0bde45106faa8992bd8",
+    "adpcm_to_wav" -> "55170af16411d15c0c15ac33f919b3dd6f18ea3a27a436d373bfede46f09570f",
+    "pcm8" -> "2f14a2e729959557b4abcffbb61d2f2deb56424fca4a6e19d32f52da7f97cb13",
+    "pcm24" -> "4e54a14a3e7dca66f213a8dc42a2d5365c7adf89aad1da587ba9b50e454b78e9",
+    "pcm_float" -> "6f7a9c178566b2dc459e24a7261ea3b7e2c9422c6fe7a6ef11ddcfffccc86cb3",
+    "pcm24_to_wav" -> "e7f0fc0d9f2b284061d05c106fc94f1e93e9c3ce096f165742986c462dbccc87",
+    "aiff_p0" -> "65b5fbea9bb4a4c037368f4d1f2076e6b3ac46a5a331e324070d4d8d4d43e80b",
+    "aiff_p1" -> "3626ba1caacfc441cfea3bfc3689f74a2ad7c67101d16e2ea6abf87274808645",
+    "aiff_to_wav" -> "fdeee568fd9c1bb8c901cd7c108401bf261e9c8d27f6a878706ce8566222f2a7",
+    "au" -> "e47129a48fa8114f2e4a3af66be210e38fa174027960b855288dc669e7505409",
+    "au_to_wav" -> "f2828871e573d61e5771c3ddc681a23d1537130414105dd223f8c38132b14325",
+    "mp4_mjpeg" -> "eb60407f83fb6a451541b5b48e52ff9b12be7296f184591e98383959137bbb20",
+    "mp4_co64" -> "5ae8556d4b94f4cc8e10ad368239f8a4a80d0cfc3d55f87b2d54ee8c9ba43670",
+    "synthetic_wav" -> "13cc1a1a2e7daca69fc5287700f9e6e75e478377859ff9f800b24652bcf34584")
+
+  test("encoders and fixture wrappers emit pinned bytes") {
+    val got = fixtures.map { case (name, b) => name -> sha256(b) }.toMap
+    assert(got.keySet == pinnedDigests.keySet)
+    pinnedDigests.foreach { case (name, want) =>
+      assert(got(name) == want, s"$name bytes moved")
+    }
+  }
+
+  test("cross-codec fuzz: truncated, bit-flipped fixtures never throw through the routers") {
+    val mutation = for {
+      cut <- Gen.oneOf(Gen.const(1.0), Gen.choose(0.0, 1.0))
+      flips <- Gen.listOfN(4, Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0, 7)))
+    } yield (cut, flips)
+    fixtures.zipWithIndex.foreach { case ((name, good), k) =>
+      (0 until 200).foreach { i =>
+        val (cut, flips) = mutation.apply(Gen.Parameters.default, Seed(1000L * k + i)).get
+        val b = java.util.Arrays.copyOf(good, (good.length * cut).toInt)
+        if (b.nonEmpty) flips.foreach { case (at, bit) =>
+          val p = math.min(b.length - 1, (b.length * at).toInt)
+          b(p) = (b(p) ^ (1 << bit)).toByte
+        }
+        withClue(s"$name case $i: ") {
+          Multimodal.DefaultCodec.decodeImage(b)
+          Multimodal.decodeLumaAny(b)
+          Multimodal.DefaultAudioCodec.decodeAudio(b)
+          Multimodal.DefaultAudioCodec.decodeEnergyWindows(b)
+          Multimodal.Mp4Container.parse(b)
+          Multimodal.decodeVideoFrameLumas(b)
+        }
+      }
+    }
+  }
+}
+
+/** Fixed-input outputs of every media encoder and container wrapper. */
+private object EncoderFixtures {
+  import Multimodal._
+
+  private def lcg(seed: Long): Iterator[Long] =
+    Iterator.iterate(seed)(s => s * 6364136223846793005L + 1442695040888963407L).drop(1)
+
+  /** 13×11 gray: flat runs in the top rows, noise below — both the run
+    * and the literal packets of the RLE/PackBits encoders. */
+  private val (gw, gh) = (13, 11)
+  private val gray: Array[Byte] = {
+    val noise = lcg(5).map(v => (v >>> 40).toByte)
+    Array.tabulate(gw * gh)(i => if (i < 4 * gw) ((i / 5) * 37).toByte else noise.next())
+  }
+  private val pcm: Array[Short] = {
+    val noise = lcg(9).map(v => (v >>> 54).toInt)
+    Array.tabulate(4500)(i =>
+      (6000 * math.sin(i / 19.0) + noise.next()).toShort)
+  }
+  private val stereo: Array[Short] = pcm.take(1200).flatMap(v => Array(v, (-v / 2).toShort))
+  private val lattice: Array[Short] = pcm.take(600).map(v => ((v >> 8) << 8).toShort)
+  private val codes: Array[Byte] = Array.tabulate(512)(i => (i * 7 + i / 3).toByte)
+  private val frames: Seq[GifCodec.FramePlan] = Seq(
+    GifCodec.FramePlan(0, 0, 16, 12, Array.tabulate(192)(i => (i * 3).toByte)),
+    GifCodec.FramePlan(3, 2, 8, 6, Array.tabulate(48)(i => (i % 5 * 60).toByte),
+      transparent = 0, disposal = 2),
+    GifCodec.FramePlan(5, 4, 6, 5, Array.fill[Byte](30)(90), disposal = 3))
+
+  val all: Seq[(String, Array[Byte])] = {
+    val jpeg0 = JpegCodec.encodeGray(gw, gh, gray, 0)
+    val jpeg1 = JpegCodec.encodeGray(gw, gh, gray, 1)
+    val flac = FlacCodec.encode16(16000, 1, pcm)
+    val g711 = G711Codec.wrap(7, 8000, 1, codes)
+    val adpcm = AdpcmCodec.wrap(8000, 1, 36, codes.take(36 * 14))
+    val pcm24 = PcmDepthCodec.encode24(16000, 2, stereo)
+    val aiff1 = AiffCodec.encode16(22050, 2, stereo, 1)
+    val au = AuCodec.encode16(8000, 1, pcm)
+    Seq(
+      "pnm_p5" -> (s"P5 $gw $gh 255\n".getBytes("US-ASCII") ++ gray),
+      "pnm_p6" -> ("P6 # rgb\n4 3 255\n".getBytes("US-ASCII") ++ gray.take(36)),
+      "png_p0" -> PngCodec.encodeGray(gw, gh, gray, 0),
+      "png_p1" -> PngCodec.encodeGray(gw, gh, gray, 1),
+      "png_p2" -> PngCodec.encodeGray(gw, gh, gray, 2),
+      "png_p3" -> PngCodec.encodeGray(gw, gh, gray, 3),
+      "gif_p0" -> GifCodec.encodeGray(gw, gh, gray, 0),
+      "gif_p1" -> GifCodec.encodeGray(gw, gh, gray, 1),
+      "gif_anim_p0" -> GifCodec.encode(16, 12, frames, 0),
+      "gif_anim_p1" -> GifCodec.encode(16, 12, frames, 1),
+      "bmp_p0" -> BmpCodec.encodeGray(gw, gh, gray, 0),
+      "bmp_p1" -> BmpCodec.encodeGray(gw, gh, gray, 1),
+      "tiff_p0" -> TiffCodec.encodeGray(gw, gh, gray, 0),
+      "tiff_p1" -> TiffCodec.encodeGray(gw, gh, gray, 1),
+      "tga_p0" -> TgaCodec.encodeGray(gw, gh, gray, 0),
+      "tga_p1" -> TgaCodec.encodeGray(gw, gh, gray, 1),
+      "ico_p0" -> IcoCodec.encodeGray(gw, gh, gray, 0),
+      "ico_p1" -> IcoCodec.encodeGray(gw, gh, gray, 1),
+      "jpeg_p0" -> jpeg0,
+      "jpeg_p1" -> jpeg1,
+      "wav_mono" -> pcmWavBytes(16000, 1, pcm),
+      "wav_stereo" -> pcmWavBytes(44100, 2, stereo),
+      "flac_mono" -> flac,
+      "flac_stereo" -> FlacCodec.encode16(44100, 2, stereo),
+      "flac_mid_side" -> FlacCodec.encode16Stereo(44100,
+        pcm.take(900).map(_.toInt), pcm.slice(900, 1800).map(_.toInt), 10),
+      "flac_to_wav" -> FlacCodec.toWav(flac).get,
+      "g711_ulaw" -> g711,
+      "g711_alaw" -> G711Codec.wrap(6, 16000, 2, codes),
+      "g711_to_wav" -> G711Codec.toWav(g711).get,
+      "adpcm_mono" -> adpcm,
+      "adpcm_stereo" -> AdpcmCodec.wrap(8000, 2, 24, codes.take(24 * 20)),
+      "adpcm_to_wav" -> AdpcmCodec.toWav(adpcm).get,
+      "pcm8" -> PcmDepthCodec.encode8(8000, 1, lattice),
+      "pcm24" -> pcm24,
+      "pcm_float" -> PcmDepthCodec.encodeFloat32(16000, 1, pcm.take(800)),
+      "pcm24_to_wav" -> PcmDepthCodec.toWav(pcm24).get,
+      "aiff_p0" -> AiffCodec.encode16(22050, 1, pcm.take(900), 0),
+      "aiff_p1" -> aiff1,
+      "aiff_to_wav" -> AiffCodec.toWav(aiff1).get,
+      "au" -> au,
+      "au_to_wav" -> AuCodec.toWav(au).get,
+      "mp4_mjpeg" -> Mp4Container.mux(Seq(jpeg0, jpeg1, jpeg0, jpeg1), Set(0, 2),
+        codec = "jpeg"),
+      "mp4_co64" -> Mp4Container.mux(Seq.fill(5)(codes.take(40)), Set(0),
+        uniformStsz = true, use64 = true, chunkSize = 2))
   }
 }

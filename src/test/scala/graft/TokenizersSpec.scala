@@ -84,4 +84,35 @@ class TokenizersSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (uw, us) = agg(Unigram.unigramTokenize(docs, ugP), "n_pieces")
     assert(got("unigram") === ((ugP.count(), uw, us, 0L, fert(uw, us))))
   }
+
+  test("inParallel cancels a sibling's running cluster job at the first failure") {
+    val sc = spark.sparkContext
+    val sleeperJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.LinkedBlockingQueue[(Int, Boolean)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "sleeper"))
+          sleeperJobs.add(e.jobId)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (sleeperJobs.contains(e.jobId))
+          ended.put((e.jobId, e.jobResult != org.apache.spark.scheduler.JobSucceeded))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val start = System.nanoTime()
+      intercept[IllegalStateException] {
+        Tokenizers.inParallel(spark)(
+          () => {
+            sc.setJobDescription("sleeper")
+            sc.parallelize(Seq(1), 1).map { x => Thread.sleep(60000); x }.count()
+            spark.emptyDataFrame
+          },
+          () => { Thread.sleep(1000); throw new IllegalStateException("trainer failed") })
+      }
+      val end = ended.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+      assert(end != null, "the sleeping sibling job was still running 10 s later")
+      assert(end._2, "the sibling job must end as failed (cancelled)")
+      assert((System.nanoTime() - start) / 1e9 < 11.0)
+    } finally sc.removeSparkListener(listener)
+  }
 }
