@@ -237,7 +237,7 @@ object DedupIndex {
   private def restoreStranded(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     (WavedRels ++ Seq("clusters", "meta")).foreach { rel =>
-      graft.pipeline.ProvenanceStore.restoreIfStranded(
+      graft.ParquetStore.restoreIfStranded(
         fs, new org.apache.hadoop.fs.Path(s"$dir/$rel"))
     }
   }
@@ -404,18 +404,19 @@ object DedupIndex {
     // torn window, now closed)
     val fpNew = wavesFpOf(committed :+ wid)
     val pairsP = readWaved(spark, dir, "pairs", extraWaves = Seq(wid))
-    swapIn(spark, s"$dir/clusters",
-      Dedup.duplicateClusters(rawThreshold(pairsP, clusterThreshold)),
-      fp = Some(fpNew))
+    val stamp = (fs: org.apache.hadoop.fs.FileSystem, tmp: org.apache.hadoop.fs.Path) =>
+      writeFpSidecar(fs, tmp.toString, fpNew)
+    graft.ParquetStore.swap(s"$dir/clusters",
+      Dedup.duplicateClusters(rawThreshold(pairsP, clusterThreshold)), stamp)
     // n_docs from the wave-committed roster, NOT old-meta + batch-count
     // arithmetic: a wave replayed after a crash past the meta swap would
     // double-count itself; the roster recount converges instead
-    swapIn(spark, s"$dir/meta",
+    graft.ParquetStore.swap(s"$dir/meta",
       readWaved(spark, dir, "roster", extraWaves = Seq(wid))
         .agg(count(lit(1)).as("n_docs"))
         .select(col("n_docs"),
           lit(clusterThreshold).as("cluster_threshold"), lit(dfCap).as("df_cap")),
-      fp = Some(fpNew))
+      stamp)
     commitWave(spark, dir, wid) // THE commit: the wave becomes visible
     spark.read.parquet(s"$dir/needs_rebuild")
       .filter(col("wave") === wid).drop("wave")
@@ -455,7 +456,7 @@ object DedupIndex {
     }
     val stats = WavedRels.map { rel =>
       val path = new org.apache.hadoop.fs.Path(s"$dir/$rel")
-      graft.pipeline.ProvenanceStore.restoreIfStranded(fs, path)
+      graft.ParquetStore.restoreIfStranded(fs, path)
       val before = dataFiles(rel)
       if (before == 0) rel -> (0, 0)
       else {
@@ -468,7 +469,7 @@ object DedupIndex {
         val tmp = new org.apache.hadoop.fs.Path(s"$path.compact-tmp")
         df.repartition(nFiles).write.mode(SaveMode.Overwrite)
           .parquet(s"$tmp/wave=$cid")
-        graft.pipeline.ProvenanceStore.swapCompacted(fs, path, tmp)
+        graft.ParquetStore.swapCompacted(fs, path, tmp)
         rel -> (before, dataFiles(rel))
       }
     }.toMap
@@ -502,21 +503,6 @@ object DedupIndex {
         .foreach(p => fs.delete(p, false))
     }
     stats
-  }
-
-  /** Aside-write-and-swap (the ProvenanceStore compaction discipline):
-    * readers of `path` see the old or the new relation, never a mix.
-    * When `fp` is set, a `_waves_fp` sidecar (underscore-prefixed —
-    * invisible to parquet readers) rides INSIDE the new directory, so
-    * the stamp and the data commit in the same atomic rename. */
-  private def swapIn(spark: SparkSession, path: String, df: DataFrame,
-      fp: Option[String] = None): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact-tmp")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fp.foreach(writeFpSidecar(fs, tmp.toString, _))
-    graft.pipeline.ProvenanceStore.swapCompacted(fs, dir, tmp)
   }
 
   /** The wave fingerprint the DERIVED relations (clusters/meta) were

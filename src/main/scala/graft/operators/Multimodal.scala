@@ -511,14 +511,15 @@ object Multimodal {
 
     /** Composited full-canvas frames as packed 0xRRGGBB ints:
       * (frame_index, canvasW, canvasH, rgb). Returns the frames decoded
-      * before the first structural error; Nil when the header fails. */
-    private[graft] def decodeRgbFrames(
-        bytes: Array[Byte]): Seq[(Int, Int, Int, Array[Int])] =
-      try decodeRgbFrames0(bytes)
+      * before the first structural error, at most `limit`; Nil when the
+      * header fails. */
+    private[graft] def decodeRgbFrames(bytes: Array[Byte],
+        limit: Int = MaxFrames): Seq[(Int, Int, Int, Array[Int])] =
+      try decodeRgbFrames0(bytes, limit)
       catch { case scala.util.control.NonFatal(_) => Nil } // never-crash backstop
 
-    private def decodeRgbFrames0(
-        bytes: Array[Byte]): Seq[(Int, Int, Int, Array[Int])] = {
+    private def decodeRgbFrames0(bytes: Array[Byte],
+        limit: Int): Seq[(Int, Int, Int, Array[Int])] = {
       if (bytes.length < 13) return Nil
       val sig = str(bytes, 0, 6)
       if (sig != "GIF87a" && sig != "GIF89a") return Nil
@@ -544,7 +545,7 @@ object Multimodal {
       java.util.Arrays.fill(canvas, bg)
       // every returned frame is a full-canvas copy: the composited-pixel
       // budget bounds their sum, so tiny frames on a huge canvas stop early
-      val maxFrames = math.min(MaxFrames.toLong, MaxPixels / canvas.length).toInt
+      val maxFrames = math.min(limit.toLong, MaxPixels / canvas.length).toInt
       val frames = scala.collection.mutable.ArrayBuffer
         .empty[(Int, Int, Int, Array[Int])]
       var transparentIdx = -1
@@ -718,7 +719,7 @@ object Multimodal {
 
     /** First composited frame → the shared 8-dim feature contract. */
     def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-      decodeRgbFrames(bytes).headOption.map { case (_, w, h, rgb) =>
+      decodeRgbFrames(bytes, limit = 1).headOption.map { case (_, w, h, rgb) =>
         val px = new Array[Byte](w * h * 3)
         var i = 0
         while (i < w * h) {
@@ -745,7 +746,7 @@ object Multimodal {
     /** First composited frame's integer luminance (the decodeLuma
       * contract shared with PNM/PNG/JPEG). */
     private[graft] def decodeLuma(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      decodeRgbFrames(bytes).headOption.map { case (_, w, h, rgb) =>
+      decodeRgbFrames(bytes, limit = 1).headOption.map { case (_, w, h, rgb) =>
         (w, h, lumaOfRgb(rgb))
       }
 

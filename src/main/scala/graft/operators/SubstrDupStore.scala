@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{ParquetStore, QueryDef, Tables}
 
 /** Persisted window-hash store: the build-once / probe-many face of the
   * exact-substring dedup family (q210/q212) — the `DedupIndex` pattern
@@ -69,14 +69,18 @@ object SubstrDupStore {
     * partial wave that the next fold still reads correctly (extra rows
     * only ever tighten mn/mx toward values a complete wave would have
     * produced anyway). */
-  def update(newDocs: DataFrame, dir: String): Unit =
+  def update(newDocs: DataFrame, dir: String): Unit = {
+    ParquetStore.restoreIfStranded(newDocs.sparkSession, winDir(dir))
     wave(newDocs, windowLenOf(newDocs.sparkSession, dir))
       .write.mode(SaveMode.Append).parquet(winDir(dir))
+  }
 
   /** The folded (h, mn, mx) relation across all waves. */
-  def folded(spark: SparkSession, dir: String): DataFrame =
+  def folded(spark: SparkSession, dir: String): DataFrame = {
+    ParquetStore.restoreIfStranded(spark, winDir(dir))
     spark.read.parquet(winDir(dir))
       .groupBy("h").agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
+  }
 
   /** q210's exact contract for `docs`, answered from the store: dup iff
     * some OTHER doc contains the window. `docs` may be the ingested
@@ -137,19 +141,10 @@ object SubstrDupStore {
   /** Fold all waves into one and swap atomically; returns
     * (filesBefore, filesAfter). Rows after = distinct window hashes. */
   def compact(spark: SparkSession, dir: String): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(winDir(dir))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.pipeline.ProvenanceStore.restoreIfStranded(fs, p)
-    def files: Int =
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = files
+    val before = ParquetStore.dataFileCount(spark, winDir(dir))
     if (before == 0) return (0, 0)
-    val mergedTmp = folded(spark, dir).localCheckpoint(eager = true)
-    val tmp = new org.apache.hadoop.fs.Path(s"${winDir(dir)}.compact-tmp")
-    mergedTmp.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    graft.pipeline.ProvenanceStore.swapCompacted(fs, p, tmp)
-    (before, files)
+    ParquetStore.swap(winDir(dir), folded(spark, dir).localCheckpoint(eager = true))
+    (before, ParquetStore.dataFileCount(spark, winDir(dir)))
   }
 
   def defs: Map[String, QueryDef] = Map(

@@ -60,8 +60,7 @@ final class BucketedProvenance(
 
   private def tableOrEmpty(name: String, schema: org.apache.spark.sql.types.StructType) =
     if (spark.catalog.tableExists(name)) spark.table(name)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else graft.ParquetStore.empty(spark, schema)
 
   private def maxId(name: String): Long =
     if (!spark.catalog.tableExists(name)) 0L
@@ -98,10 +97,9 @@ final class BucketedProvenance(
     * not `id` — lineage locality is the point of this layout. */
   def appendArtifacts(rows: DataFrame): DataFrame = {
     val base = maxId(artifactsName)
-    val existing = artifacts.select("source_url", "sha256")
-    val fresh = rows
-      .dropDuplicates("source_url", "sha256")
-      .join(existing, Seq("source_url", "sha256"), "left_anti")
+    // K2 against the table's files, so a detached table still dedups
+    val fresh = graft.ParquetStore.newRows(rows, s"$warehouseDir/$artifactsName",
+      Model.artifactsSchema, Seq("source_url", "sha256"))
     val withIds = ProvenanceStore.pinIds(
       ProvenanceStore.withIdColumn(fresh, base,
         Seq("provider", "source_url", "sha256"), idMode)

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ParquetStore
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,30 +41,18 @@ final class ProvenanceStore(
   private val artifactsPath = s"$warehouseDir/artifacts"
 
   def responses: DataFrame =
-    readOrEmpty(responsesPath, Model.responsesSchema)
+    ParquetStore.readOrEmpty(spark, responsesPath, Model.responsesSchema)
 
   def artifacts: DataFrame =
-    readOrEmpty(artifactsPath, Model.artifactsSchema)
-
-  private def readOrEmpty(path: String, schema: org.apache.spark.sql.types.StructType) = {
-    // existence via the path's Hadoop FileSystem — a java.io.File check
-    // is always false on hdfs://-s3a:// warehouses, which would silently
-    // read an existing table as empty (same defect class the streaming
-    // near-dup sink fixed, r7 ADVICE)
-    restoreIfStranded(path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p))
-      spark.read.schema(schema).parquet(path)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+    ParquetStore.readOrEmpty(spark, artifactsPath, Model.artifactsSchema)
 
   /** Current max id via the DSv2 face's aggregate pushdown: answered from
     * parquet footer STATISTICS (one metadata read per file, zero data
     * pages) — the append path's base-id probe stays O(files), not O(rows),
     * as the table grows. [[graft.sources.ProvenanceDataSource]] falls back
-    * to a column scan per-file if stats are ever absent. */
+    * to a column scan per-file if stats are ever absent. Both scans list
+    * files through [[graft.ParquetStore.dataFiles]], so a stranded table
+    * is restored before its max is read. */
   private def maxId(table: String): Long =
     spark.read.format("graft-provenance")
       .option("warehouse", warehouseDir).option("table", table).load()
@@ -106,10 +95,8 @@ final class ProvenanceStore(
     * loudly rather than diverging silently.) */
   def appendArtifacts(rows: DataFrame): DataFrame = {
     val base = maxId("artifacts")
-    val existing = artifacts.select("source_url", "sha256")
-    val fresh = rows
-      .dropDuplicates("source_url", "sha256")
-      .join(existing, Seq("source_url", "sha256"), "left_anti")
+    val fresh = ParquetStore.newRows(rows, artifactsPath, Model.artifactsSchema,
+      Seq("source_url", "sha256"))
     val withIds = withIdColumn(fresh, base,
       Seq("provider", "source_url", "sha256"))
       .withColumn("created_at", current_timestamp())
@@ -118,108 +105,40 @@ final class ProvenanceStore(
     artifacts.filter(col("id") > base)
   }
 
-  /** Small-file compaction (maintenance job). Every append writes its own
-    * parquet files, so a long-lived table accumulates one small file per
-    * micro-batch — and both the footer-stats `maxId` probe and the DSv2
-    * runtime-filter pruning are O(files). Rewrites the table into
-    * `ceil(rows / targetRowsPerFile)` files RANGE-PARTITIONED AND SORTED
-    * on `id`: per-file id ranges become disjoint, so any id-predicate
-    * (FK runtime filters, incremental `id > base` reads) prunes to
-    * exactly the files it needs from footer min/max alone. Rows, ids,
-    * and schema are byte-identical before/after; the swap is atomic at
-    * the directory level (write aside, then rename into place), so a
-    * concurrent reader sees the old or the new layout, never a mix. */
-  def compact(table: String, targetRowsPerFile: Long = 4000000L): ProvenanceStore.CompactionStats = {
+  /** Small-file compaction (maintenance job) through
+    * [[graft.ParquetStore.compact]]. Both the footer-stats `maxId` probe
+    * and the DSv2 runtime-filter pruning are O(files). The files are
+    * RANGE-PARTITIONED AND SORTED on `id`: per-file id ranges become
+    * disjoint, so any id-predicate (FK runtime filters, incremental
+    * `id > base` reads) prunes to exactly the files it needs from footer
+    * min/max alone. Rows, ids, and schema are byte-identical
+    * before/after. */
+  def compact(table: String, targetRowsPerFile: Long = 4000000L): ParquetStore.CompactionStats = {
     require(table == "responses" || table == "artifacts", s"unknown table '$table'")
     val (path, schema) =
       if (table == "responses") (responsesPath, Model.responsesSchema)
       else (artifactsPath, Model.artifactsSchema)
-    // Hadoop FileSystem throughout (not java.io.File) so the maintenance
-    // job runs against hdfs://-s3a:// warehouses too; each rename below is
-    // atomic on HDFS-like stores (object stores without atomic rename
-    // should compact into a fresh prefix instead).
-    restoreIfStranded(path)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    def dataFiles(d: org.apache.hadoop.fs.Path): Int =
-      if (!fs.exists(d)) 0
-      else fs.listStatus(d).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles(dir)
-    if (before == 0) return ProvenanceStore.CompactionStats(0, 0, 0L)
-    val df = spark.read.schema(schema).parquet(path)
-    val rows = df.count()
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$path.compact-old")
-    df.repartitionByRange(nFiles, col("id"))
-      .sortWithinPartitions("id")
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // Sorted-layout manifest (`_graft_sorted`): the data-file basenames this
-    // compaction produced, one per line. The DSv2 scan reports per-partition
-    // ASC `id` ordering ONLY while the directory's file set still equals
-    // this list — any later append changes the set and silently withdraws
-    // the claim (no append-path cooperation needed). Written into the tmp
-    // dir BEFORE the swap so marker and files appear atomically together;
-    // underscore prefix keeps it invisible to parquet readers.
-    val sortedFiles = fs.listStatus(tmp)
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
-    val marker = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, ProvenanceStore.SortedMarker), true)
-    try marker.write(sortedFiles.mkString("\n").getBytes("UTF-8"))
-    finally marker.close()
-    ProvenanceStore.swapCompacted(fs, dir, tmp)
-    ProvenanceStore.CompactionStats(before, dataFiles(dir), rows)
-  }
-
-  private def restoreIfStranded(path: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    ProvenanceStore.restoreIfStranded(
-      dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+    ParquetStore.compact(spark, path, targetRowsPerFile, Some(schema),
+      layout = (df, n) => df.repartitionByRange(n, col("id")).sortWithinPartitions("id"),
+      sidecar = { (fs, tmp) =>
+        // Sorted-layout manifest (`_graft_sorted`): the data-file basenames
+        // this compaction produced, one per line. The DSv2 scan reports
+        // per-partition ASC `id` ordering ONLY while the directory's file set
+        // still equals this list — any later append changes the set and
+        // silently withdraws the claim (no append-path cooperation needed).
+        // Written into the aside dir so marker and files appear atomically
+        // together; underscore prefix keeps it invisible to parquet readers.
+        val sortedFiles = fs.listStatus(tmp)
+          .map(_.getPath.getName).filter(_.endsWith(".parquet")).sorted
+        val marker = fs.create(
+          new org.apache.hadoop.fs.Path(tmp, ProvenanceStore.SortedMarker), true)
+        try marker.write(sortedFiles.mkString("\n").getBytes("UTF-8"))
+        finally marker.close()
+      })
   }
 }
 
 object ProvenanceStore {
-  /** Result of a [[ProvenanceStore.compact]] run. */
-  final case class CompactionStats(filesBefore: Int, filesAfter: Int, rows: Long)
-
-  /** Atomic aside-write-and-swap, shared by the table compaction here and
-    * the streaming near-dup store compaction
-    * ([[graft.streaming.Streams.compactNearDupStore]]): dir → .compact-old,
-    * tmp → dir, delete old. Each rename is atomic on HDFS-like stores; on
-    * second-rename failure the original directory is rolled back into
-    * place before throwing, so the table never reads as empty. */
-  private[graft] def swapCompacted(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(dir.toString + ".compact-old")
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a crashed run
-    if (!fs.rename(dir, old))
-      throw new java.io.IOException(s"compaction swap failed for $dir (dir -> compact-old)")
-    if (!fs.rename(tmp, dir)) {
-      if (!fs.rename(old, dir))
-        throw new java.io.IOException(
-          s"compaction swap failed for $dir AND rollback failed — data is at $old")
-      throw new java.io.IOException(s"compaction swap failed for $dir (rolled back)")
-    }
-    fs.delete(old, true)
-  }
-
-  /** Crash recovery for the swap: a process that died between the two
-    * renames leaves the directory missing and the data stranded at
-    * `.compact-old`. Detected at read and compact entry; the restore is
-    * the same single atomic rename the swap uses. A crash AFTER the
-    * second rename (dir and .compact-old both present) needs no restore —
-    * the stale .compact-old is deleted on the next compaction. */
-  private[graft] def restoreIfStranded(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(dir.toString + ".compact-old")
-    if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
-      throw new java.io.IOException(
-        s"table $dir is stranded at $old and restore failed")
-  }
-
   /** Basename of the sorted-layout manifest [[ProvenanceStore.compact]]
     * leaves in the table directory (read by
     * [[graft.sources.ProvenanceDataSource]]'s scan for its ordering report). */

@@ -529,10 +529,7 @@ private[sources] class ProvenanceScan(
     * the planned file set consistent by construction. */
   private lazy val listedFiles: Array[org.apache.hadoop.fs.FileStatus] = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(ProvenanceDataSource.hadoopConf())
-    if (!fs.exists(path)) Array.empty
-    else fs.listStatus(path)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    graft.ParquetStore.dataFiles(path.getFileSystem(ProvenanceDataSource.hadoopConf()), path)
   }
 
   private lazy val sortedLayout: Boolean = {
@@ -665,10 +662,7 @@ private[sources] class ProvenanceAggScan(dir: String, specs: Array[AggSpec])
 
   override def planInputPartitions(): Array[InputPartition] = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(ProvenanceDataSource.hadoopConf())
-    if (!fs.exists(path)) Array.empty
-    else fs.listStatus(path)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    graft.ParquetStore.dataFiles(path.getFileSystem(ProvenanceDataSource.hadoopConf()), path)
       .sortBy(_.getPath.getName)
       .map(s => ProvenanceFilePartition(s.getPath.toString): InputPartition)
   }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.{ParquetStore, QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming / incremental layer (SURVEY.md §2.9).
@@ -204,6 +206,27 @@ object Streams {
         ()
       }
 
+  // Declared schemas of the sinks' stores and pair logs: every read goes
+  // through ParquetStore.readOrEmpty with one of these.
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
+  private val SigSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("sig", ArrayType(LongType))))
+  private val DocPairSchema = StructType(Seq(
+    StructField("d1", LongType), StructField("d2", LongType),
+    StructField("est_jaccard", DoubleType)))
+  private val DocsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("source", StringType)))
+  private val FrameSchema = StructType(Seq(
+    StructField("asset_id", LongType), StructField("frame_index", IntegerType),
+    StructField("dhash", LongType)))
+  private val HashSchema = longs("asset_id", "dhash")
+  private val AssetPairSchema = longs("a1", "a2", "dist")
+  private val VideoPairSchema = longs("a1", "a2", "n_match")
+  private val DocPairKeys = Seq("d1", "d2")
+  private val AssetPairKeys = Seq("a1", "a2")
+
   /** Streaming near-dup detection at ingest: each micro-batch of documents
     * is checked against the PERSISTED MinHash signature store
     * ([[graft.operators.Dedup.incrementalMinhashPairs]] — batch↔corpus
@@ -214,9 +237,9 @@ object Streams {
     * of the scheduled-crawl dedup shape.
     *
     * Replayed batches (restart without a committed offset) are absorbed
-    * by dedup-appends, the K2 idempotence pattern: signatures anti-join
-    * the store on doc_id, pairs anti-join the pair log on (d1, d2) —
-    * landing is exactly-once by idempotence, not sink transactions. */
+    * by dedup-appends ([[ParquetStore.appendNew]], K2): signatures are
+    * keyed on doc_id, pairs on (d1, d2) — landing is exactly-once by
+    * idempotence, not sink transactions. */
   def nearDupSinkQuery(
       docs: DataFrame, sigDir: String, pairsDir: String,
       numHashes: Int = 16, bands: Int = 4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -224,45 +247,22 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.Dedup
-        import org.apache.spark.sql.types._
-        val spark = batch.sparkSession
-        // existence via the Hadoop FileSystem for the path's scheme — a
-        // java.io.File check is always false on hdfs://-s3a:// stores,
-        // which would silently read the signature store and pair log as
-        // empty every batch (no cross-batch dedup, replays land dupes)
-        def readOrEmpty(path: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val sigSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("sig", ArrayType(LongType))))
-        val pairSchema = StructType(Seq(
-          StructField("d1", LongType), StructField("d2", LongType),
-          StructField("est_jaccard", DoubleType)))
         // the batch feeds three consumers (cross pairs, self pairs, sigs):
         // pin it once so the source is not re-evaluated per consumer
         val b = batch.localCheckpoint(true)
-        val store = readOrEmpty(sigDir, sigSchema)
+        val store = ParquetStore.readOrEmpty(batch.sparkSession, sigDir, SigSchema)
         val pairs = Dedup.incrementalMinhashPairs(b, store, numHashes, bands)
           .unionByName(Dedup.minhashLshPairs(b, numHashes, bands))
-          .distinct()
-        // pairs FIRST (vs the pre-batch store), then the signature append —
-        // and both appends are anti-join dedups so replays land nothing new
-        pairs.join(readOrEmpty(pairsDir, pairSchema).select("d1", "d2"),
-            Seq("d1", "d2"), "left_anti")
-          .write.mode("append").parquet(pairsDir)
-        Dedup.minhashSignatures(b, numHashes)
-          .join(store.select("doc_id"), Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(sigDir)
+        // pairs FIRST (vs the pre-batch store), then the signature append
+        ParquetStore.appendNew(pairs, pairsDir, DocPairSchema, DocPairKeys)
+        ParquetStore.appendNew(Dedup.minhashSignatures(b, numHashes), sigDir,
+          SigSchema, Seq("doc_id"))
         ()
       }
 
   /** At-ingest maintenance of the q169 per-day HLL sketch table: every
     * micro-batch sketches its own (day, users) slice and UNIONS into the
-    * persisted table (aside-write + atomic swap — the table stays
+    * persisted table ([[ParquetStore.swapMerge]] — the table stays
     * days-sized, never appends-forever). HLL insertion is idempotent
     * and order-free, so at-least-once replays merge to the IDENTICAL
     * sketch — no roster needed, unlike the dedup-index sink. The rolling
@@ -275,29 +275,20 @@ object Streams {
     events.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val dir = new org.apache.hadoop.fs.Path(sketchDir)
-        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        val newDaily = graft.operators.EventAnalytics
-          .dailyActiveSketches(batch, lgK)
-        if (!fs.exists(dir)) newDaily.write.parquet(sketchDir)
-        else {
-          val merged = spark.read.parquet(sketchDir)
-            .unionByName(newDaily)
-            .groupBy("d").agg(expr("hll_union_agg(sk)").as("sk"))
-            .localCheckpoint(eager = true) // read fully BEFORE the swap
-          val tmp = new org.apache.hadoop.fs.Path(s"$sketchDir.compact-tmp")
-          merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          graft.pipeline.ProvenanceStore.swapCompacted(fs, dir, tmp)
+        ParquetStore.swapMerge(sketchDir,
+            graft.operators.EventAnalytics.dailyActiveSketches(batch, lgK)) {
+          (stored, fresh) =>
+            stored.unionByName(fresh)
+              .groupBy("d").agg(expr("hll_union_agg(sk)").as("sk"))
         }
         ()
       }
 
   /** At-ingest maintenance of the q208 per-source KMV sketch table:
     * every micro-batch sketches its own (source, shingles) slice and
-    * sorted-merge-truncates into the persisted table (aside-write +
-    * atomic swap — the table stays sources-sized, never appends
-    * forever). KMV insertion is a DISTINCT union of hash values, so
+    * sorted-merge-truncates into the persisted table
+    * ([[ParquetStore.swapMerge]] — the table stays sources-sized, never
+    * appends forever). KMV insertion is a DISTINCT union of hash values, so
     * at-least-once replays merge to the IDENTICAL sketch — the HLL
     * sink's idempotence argument, no roster needed — and the merge is
     * associative, so batch boundaries don't matter either
@@ -312,19 +303,8 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.Curation
-        val spark = batch.sparkSession
-        val dir = new org.apache.hadoop.fs.Path(sketchDir)
-        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        val fresh = Curation.sourceShingleKmv(batch, k = k)
-        if (!fs.exists(dir)) fresh.write.parquet(sketchDir)
-        else {
-          val merged = Curation.mergeSourceShingleKmv(
-              spark.read.parquet(sketchDir), fresh, k)
-            .localCheckpoint(eager = true) // read fully BEFORE the swap
-          val tmp = new org.apache.hadoop.fs.Path(s"$sketchDir.compact-tmp")
-          merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          graft.pipeline.ProvenanceStore.swapCompacted(fs, dir, tmp)
-        }
+        ParquetStore.swapMerge(sketchDir, Curation.sourceShingleKmv(batch, k = k))(
+          Curation.mergeSourceShingleKmv(_, _, k))
         ()
       }
 
@@ -362,8 +342,8 @@ object Streams {
     * ([[publishCurationSnapshot]]) derives the near-dup gate from the
     * log and runs the batch face's stages 2–4 verbatim — no corpus
     * re-shingle, the incremental-index shape of the pipeline face.
-    * All three appends anti-join their store (K2 idempotence), so
-    * foreachBatch replays land nothing new. */
+    * All three appends are K2 dedup-appends, so foreachBatch replays
+    * land nothing new. */
   def curationIngestSinkQuery(docs: DataFrame, docsDir: String,
       sigDir: String, pairsDir: String, numHashes: Int = 16,
       bands: Int = 4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -371,39 +351,16 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.Dedup
-        import org.apache.spark.sql.types._
-        val spark = batch.sparkSession
-        def readOrEmpty(path: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val sigSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("sig", ArrayType(LongType))))
-        val pairSchema = StructType(Seq(
-          StructField("d1", LongType), StructField("d2", LongType),
-          StructField("est_jaccard", DoubleType)))
-        val docsSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("source", StringType)))
         val b = batch.localCheckpoint(true)
-        val store = readOrEmpty(sigDir, sigSchema)
+        val store = ParquetStore.readOrEmpty(batch.sparkSession, sigDir, SigSchema)
         val pairs = Dedup.incrementalMinhashPairs(b, store, numHashes, bands,
             family = "md5")
           .unionByName(Dedup.minhashLshPairsMd5(b, numHashes, bands))
-          .distinct()
-        pairs.join(readOrEmpty(pairsDir, pairSchema).select("d1", "d2"),
-            Seq("d1", "d2"), "left_anti")
-          .write.mode("append").parquet(pairsDir)
-        Dedup.minhashSignaturesMd5(b, numHashes)
-          .join(store.select("doc_id"), Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(sigDir)
-        b.select("doc_id", "text", "source")
-          .join(readOrEmpty(docsDir, docsSchema).select("doc_id"),
-            Seq("doc_id"), "left_anti")
-          .write.mode("append").parquet(docsDir)
+        ParquetStore.appendNew(pairs, pairsDir, DocPairSchema, DocPairKeys)
+        ParquetStore.appendNew(Dedup.minhashSignaturesMd5(b, numHashes), sigDir,
+          SigSchema, Seq("doc_id"))
+        ParquetStore.appendNew(b.select("doc_id", "text", "source"), docsDir,
+          DocsSchema, Seq("doc_id"))
         ()
       }
 
@@ -418,10 +375,10 @@ object Streams {
       pairsDir: String, weights: DataFrame, dupThreshold: Double = 0.5,
       keepFrac: Double = 0.5, budgetPerSource: Long = 800L,
       shardDir: Option[String] = None): DataFrame = {
-    val docs = spark.read.parquet(docsDir)
-    val dupIds = spark.read.parquet(pairsDir)
-      .filter(org.apache.spark.sql.functions.col("est_jaccard") >= dupThreshold)
-      .select(org.apache.spark.sql.functions.col("d2").as("doc_id")).distinct()
+    val docs = ParquetStore.readOrEmpty(spark, docsDir, DocsSchema)
+    val dupIds = ParquetStore.readOrEmpty(spark, pairsDir, DocPairSchema)
+      .filter(col("est_jaccard") >= dupThreshold)
+      .select(col("d2").as("doc_id")).distinct()
     graft.operators.Curation.curationPipelineFrom(docs, dupIds, weights,
       keepFrac, budgetPerSource, shardDir)
   }
@@ -467,34 +424,16 @@ object Streams {
   /** Maintenance for the [[nearDupSinkQuery]] stores: every micro-batch
     * appends a few small parquet files to the signature and pair stores
     * forever — at crawl cadence that is thousands of files per day, and
-    * the per-batch `readOrEmpty` degrades O(files). Rewrites the rows
-    * into ceil(rows / targetRowsPerFile) files and swaps atomically via
-    * [[graft.pipeline.ProvenanceStore.swapCompacted]] (aside-write, two
-    * renames, rollback on failure, stranded-dir restore at entry) — a
-    * concurrent reader sees the old or the new layout, never a mix. Run
-    * it between micro-batches or from a scheduled maintenance job; rows
-    * are byte-identical before and after, so near-dup flags are too.
-    * Returns (filesBefore, filesAfter). */
+    * the per-batch reads degrade O(files). [[ParquetStore.compact]]
+    * rewrites the rows into ceil(rows / targetRowsPerFile) files and
+    * swaps them in. Run it between micro-batches or from a scheduled
+    * maintenance job; rows are byte-identical before and after, so
+    * near-dup flags are too. Returns (filesBefore, filesAfter). */
   def compactNearDupStore(
       spark: SparkSession, path: String,
       targetRowsPerFile: Long = 4000000L): (Int, Int) = {
-    import graft.pipeline.ProvenanceStore
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ProvenanceStore.restoreIfStranded(fs, dir)
-    def dataFiles: Int =
-      if (!fs.exists(dir)) 0
-      else fs.listStatus(dir).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles
-    if (before == 0) return (0, 0)
-    val df = spark.read.parquet(path)
-    val rows = df.count()
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact-tmp")
-    df.repartition(nFiles)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-    ProvenanceStore.swapCompacted(fs, dir, tmp)
-    (before, dataFiles)
+    val stats = ParquetStore.compact(spark, path, targetRowsPerFile)
+    (stats.filesBefore, stats.filesAfter)
   }
 
   /** At-ingest perceptual dedup for MEDIA assets — the multimodal twin
@@ -502,8 +441,8 @@ object Streams {
     * images (narrow, bytes never shuffle), flags near-dups against the
     * accumulated hash store via [[graft.operators.ImageHash.incrementalNearDupPairs]]
     * (new × store only) AND within the batch, then appends its hashes.
-    * Both appends are anti-join dedups, so replayed batches land
-    * nothing new (the K2 idempotence pattern); the stores compact with
+    * Both appends are K2 dedup-appends, so replayed batches and an asset
+    * repeated inside one batch land once; the stores compact with
     * [[compactNearDupStore]] — 16-byte rows, same maintenance contract. */
   def mediaDedupSinkQuery(
       assets: DataFrame, hashDir: String, pairsDir: String,
@@ -530,34 +469,17 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.{ImageHash, Multimodal}
-        import org.apache.spark.sql.types._
         val spark = batch.sparkSession
         import spark.implicits._
-        def readOrEmpty(path: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val hashSchema = StructType(Seq(
-          StructField("asset_id", LongType), StructField("dhash", LongType)))
-        val pairSchema = StructType(Seq(
-          StructField("a1", LongType), StructField("a2", LongType),
-          StructField("dist", LongType)))
         // hash ONCE per batch (decode is the expensive step); the hash
         // frame feeds three consumers (cross pairs, self pairs, append)
         val hashes = hasher(
           batch.as[Multimodal.MediaAsset]).localCheckpoint(true)
-        val store = readOrEmpty(hashDir, hashSchema)
+        val store = ParquetStore.readOrEmpty(spark, hashDir, HashSchema)
         val pairs = ImageHash.incrementalNearDupPairs(hashes, store, maxDist)
           .unionByName(ImageHash.nearDupImagePairs(hashes, maxDist))
-          .distinct()
-        pairs.join(readOrEmpty(pairsDir, pairSchema).select("a1", "a2"),
-            Seq("a1", "a2"), "left_anti")
-          .write.mode("append").parquet(pairsDir)
-        hashes.join(store.select("asset_id"), Seq("asset_id"), "left_anti")
-          .write.mode("append").parquet(hashDir)
+        ParquetStore.appendNew(pairs, pairsDir, AssetPairSchema, AssetPairKeys)
+        ParquetStore.appendNew(hashes, hashDir, HashSchema, Seq("asset_id"))
         ()
       }
 
@@ -569,13 +491,13 @@ object Streams {
     * [[graft.operators.ImageHash.incrementalVideoNearDupPairs]] + batch
     * self pairs — assets arrive whole, so the pair (a, b) is complete at
     * the LATER member's arrival regardless of order, and the log
-    * converges to the full-corpus q225 pair set). Replayed assets are
-    * anti-joined away against the frame store BEFORE pairing, so
-    * foreachBatch replays land nothing new; pairs append before frames
-    * (a crash between the two leaves the asset un-ingested, and the
-    * replay redoes both). Publish time
-    * ([[publishVideoCurationSnapshot]]) derives the drop set from the
-    * log and runs the batch face's stages 1–3 verbatim. */
+    * converges to the full-corpus q225 pair set). Frames already in the
+    * store, or repeated inside the batch, are dropped (K2 on
+    * (asset_id, frame_index)) BEFORE pairing, so foreachBatch replays
+    * land nothing new; pairs append before frames (a crash between the
+    * two leaves the asset un-ingested, and the replay redoes both).
+    * Publish time ([[publishVideoCurationSnapshot]]) derives the drop
+    * set from the log and runs the batch face's stages 1–3 verbatim. */
   def videoIngestSinkQuery(assets: DataFrame, framesDir: String,
       pairsDir: String, maxDist: Int = 3,
       minFrames: Long = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -583,46 +505,22 @@ object Streams {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.{ImageHash, Multimodal}
-        import org.apache.spark.sql.types._
         val spark = batch.sparkSession
         import spark.implicits._
-        def readOrEmpty(path: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val frameSchema = StructType(Seq(
-          StructField("asset_id", LongType),
-          StructField("frame_index", IntegerType),
-          StructField("dhash", LongType)))
-        val pairSchema = StructType(Seq(
-          StructField("a1", LongType), StructField("a2", LongType),
-          StructField("n_match", LongType)))
-        // read lazily (the mediaDedupSinkQuery pattern): framesDir is
-        // immutable until the append below, so both consumers (replay
-        // filter + cross pairs) re-scan the parquet — an eager
-        // checkpoint here would re-materialize the WHOLE store every
-        // batch, O(corpus) per batch (r15 review finding)
-        val store = readOrEmpty(framesDir, frameSchema)
-        // Dedup WITHIN the batch too (r15 review): the anti-join below
-        // only guards against assets already persisted, so a source that
-        // delivers the same asset twice in ONE micro-batch would hash and
-        // append both copies — double frames, inflated q230 stage counts.
-        // dropDuplicates extends the cross-batch replay guarantee inside
-        // the batch (assets are immutable blobs: any copy is the row).
-        val fresh = ImageHash.videoFrameHashes(
-            batch.dropDuplicates("asset_id").as[Multimodal.MediaAsset])
-          .join(store.select("asset_id").distinct(), Seq("asset_id"), "left_anti")
+        // read lazily: framesDir is immutable until the append below, so
+        // both consumers (replay filter + cross pairs) re-scan the parquet
+        // — an eager checkpoint here would re-materialize the WHOLE store
+        // every batch, O(corpus) per batch
+        val store = ParquetStore.readOrEmpty(spark, framesDir, FrameSchema)
+        val fresh = ParquetStore.newRows(
+            ImageHash.videoFrameHashes(batch.as[Multimodal.MediaAsset]),
+            framesDir, FrameSchema, Seq("asset_id", "frame_index"))
           .localCheckpoint(true) // consumers: cross pairs, self pairs, append
         val pairs = ImageHash
           .incrementalVideoNearDupPairs(fresh, store, maxDist, minFrames)
           .unionByName(
             ImageHash.videoNearDupPairs(fresh, maxDist, minFrames))
-        pairs.join(readOrEmpty(pairsDir, pairSchema).select("a1", "a2"),
-            Seq("a1", "a2"), "left_anti")
-          .write.mode("append").parquet(pairsDir)
+        ParquetStore.appendNew(pairs, pairsDir, VideoPairSchema, AssetPairKeys)
         fresh.write.mode("append").parquet(framesDir)
         ()
       }
@@ -636,14 +534,12 @@ object Streams {
     * q230 face row for row after scrambled-order ingestion. */
   def publishVideoCurationSnapshot(spark: SparkSession, framesDir: String,
       pairsDir: String, framesPerShard: Long = 64,
-      shardDir: Option[String] = None): DataFrame = {
-    val dupIds = spark.read.parquet(pairsDir)
-      .select(org.apache.spark.sql.functions.col("a2").as("asset_id"))
-      .distinct()
-    graft.operators.ImageHash.videoCurationPipelineFrom(
-      spark.read.parquet(framesDir), dupIds, framesPerShard,
-      shardDir = shardDir)
-  }
+      shardDir: Option[String] = None): DataFrame =
+    publishMediaSnapshot(spark, framesDir, FrameSchema, pairsDir,
+      VideoPairSchema) { (frames, dupIds) =>
+      graft.operators.ImageHash.videoCurationPipelineFrom(frames, dupIds,
+        framesPerShard, shardDir = shardDir)
+    }
 
   /** q234's streaming ingest half (the [[videoIngestSinkQuery]]
     * discipline at still-image level): each micro-batch of image assets
@@ -654,99 +550,53 @@ object Streams {
     * [[graft.operators.ImageHash.incrementalNearDupPairs]] + batch self
     * pairs — both normalized to (min, max), so the pair (a, b) is
     * complete at the LATER member's arrival regardless of order and the
-    * log converges to the full-corpus q159 pair set). Replayed assets
-    * are anti-joined away against the stat store BEFORE pairing and
-    * duplicates WITHIN a batch dropped first; pairs append before stats
-    * (a crash between the two leaves the asset un-ingested and the
-    * replay redoes both). Publish time
+    * log converges to the full-corpus q159 pair set). Publish time
     * ([[publishImageCurationSnapshot]]) derives the drop set from the
     * log and runs the batch face's stages 1–3 verbatim. */
   def imageIngestSinkQuery(assets: DataFrame, statsDir: String,
       pairsDir: String, maxDist: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    mediaIngestSinkQuery(assets, statsDir, pairsDir, maxDist,
+      graft.operators.ImageHash.imageHashStats, "mean_luma")
+
+  /** q239's streaming ingest half (the [[imageIngestSinkQuery]]
+    * discipline at audio level): each micro-batch of audio assets
+    * decodes + energy-hashes + reads its per-window RMS ONCE, then lands
+    * in the (asset_id, dhash, rms_w) STAT store and the pair LOG — the
+    * pair machinery is modality-blind. Publish time
+    * ([[publishAudioCurationSnapshot]]) derives the drop set from the
+    * log and runs the batch face's stages 1–3 verbatim. */
+  def audioIngestSinkQuery(assets: DataFrame, statsDir: String,
+      pairsDir: String, maxDist: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    mediaIngestSinkQuery(assets, statsDir, pairsDir, maxDist,
+      graft.operators.ImageHash.audioHashStats, "rms_w")
+
+  /** The still-media ingest body: the stat store keyed on asset_id,
+    * holding (asset_id, dhash, `statCol`). Assets already in the store,
+    * or repeated inside the batch, are dropped (K2) BEFORE pairing; pairs
+    * append before stats (a crash between the two leaves the asset
+    * un-ingested and the replay redoes both). */
+  private def mediaIngestSinkQuery(assets: DataFrame, statsDir: String,
+      pairsDir: String, maxDist: Int,
+      hashStats: Dataset[graft.operators.Multimodal.MediaAsset] => DataFrame,
+      statCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     assets.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.{ImageHash, Multimodal}
-        import org.apache.spark.sql.types._
         val spark = batch.sparkSession
         import spark.implicits._
-        def readOrEmpty(path: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val statSchema = StructType(Seq(
-          StructField("asset_id", LongType),
-          StructField("dhash", LongType),
-          StructField("mean_luma", LongType)))
-        val pairSchema = StructType(Seq(
-          StructField("a1", LongType), StructField("a2", LongType),
-          StructField("dist", LongType)))
+        val statSchema = longs("asset_id", "dhash", statCol)
         // read lazily (the videoIngestSinkQuery pattern): statsDir is
-        // immutable until the append below, so both consumers (replay
-        // filter + cross pairs) re-scan the parquet
-        val store = readOrEmpty(statsDir, statSchema)
-        val fresh = ImageHash.imageHashStats(
-            batch.dropDuplicates("asset_id").as[Multimodal.MediaAsset])
-          .join(store.select("asset_id"), Seq("asset_id"), "left_anti")
+        // immutable until the append below
+        val store = ParquetStore.readOrEmpty(spark, statsDir, statSchema)
+        val fresh = ParquetStore.newRows(hashStats(batch.as[Multimodal.MediaAsset]),
+            statsDir, statSchema, Seq("asset_id"))
           .localCheckpoint(true) // consumers: cross pairs, self pairs, append
         // self pairs already emit a1 < a2; cross pairs normalize via
         // least/greatest — the log's key is orientation-free either way
         val pairs = ImageHash.incrementalNearDupPairs(fresh, store, maxDist)
           .unionByName(ImageHash.nearDupImagePairs(fresh, maxDist))
-          .distinct()
-        pairs.join(readOrEmpty(pairsDir, pairSchema).select("a1", "a2"),
-            Seq("a1", "a2"), "left_anti")
-          .write.mode("append").parquet(pairsDir)
-        fresh.write.mode("append").parquet(statsDir)
-        ()
-      }
-
-  /** q239's streaming ingest half (the [[imageIngestSinkQuery]]
-    * discipline at audio level): each micro-batch of audio assets
-    * decodes + energy-hashes + reads its per-window RMS ONCE (narrow —
-    * container bytes never shuffle), then lands in two replay-
-    * idempotent stores: the (asset_id, dhash, rms_w) STAT store and
-    * the pair LOG. Same replay/ordering/crash contracts as the image
-    * twin — the pair machinery is modality-blind. Publish time
-    * ([[publishAudioCurationSnapshot]]) derives the drop set from the
-    * log and runs the batch face's stages 1–3 verbatim. */
-  def audioIngestSinkQuery(assets: DataFrame, statsDir: String,
-      pairsDir: String, maxDist: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    assets.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.operators.{ImageHash, Multimodal}
-        import org.apache.spark.sql.types._
-        val spark = batch.sparkSession
-        import spark.implicits._
-        def readOrEmpty(path: String, schema: StructType): DataFrame = {
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-        val statSchema = StructType(Seq(
-          StructField("asset_id", LongType),
-          StructField("dhash", LongType),
-          StructField("rms_w", LongType)))
-        val pairSchema = StructType(Seq(
-          StructField("a1", LongType), StructField("a2", LongType),
-          StructField("dist", LongType)))
-        val store = readOrEmpty(statsDir, statSchema)
-        val fresh = ImageHash.audioHashStats(
-            batch.dropDuplicates("asset_id").as[Multimodal.MediaAsset])
-          .join(store.select("asset_id"), Seq("asset_id"), "left_anti")
-          .localCheckpoint(true) // consumers: cross pairs, self pairs, append
-        val pairs = ImageHash.incrementalNearDupPairs(fresh, store, maxDist)
-          .unionByName(ImageHash.nearDupImagePairs(fresh, maxDist))
-          .distinct()
-        pairs.join(readOrEmpty(pairsDir, pairSchema).select("a1", "a2"),
-            Seq("a1", "a2"), "left_anti")
-          .write.mode("append").parquet(pairsDir)
+        ParquetStore.appendNew(pairs, pairsDir, AssetPairSchema, AssetPairKeys)
         fresh.write.mode("append").parquet(statsDir)
         ()
       }
@@ -756,14 +606,12 @@ object Streams {
     * audio funnel. */
   def publishAudioCurationSnapshot(spark: SparkSession, statsDir: String,
       pairsDir: String, assetsPerShard: Long = 64,
-      shardDir: Option[String] = None): DataFrame = {
-    val dupIds = spark.read.parquet(pairsDir)
-      .select(org.apache.spark.sql.functions.col("a2").as("asset_id"))
-      .distinct()
-    graft.operators.ImageHash.audioCurationPipelineFrom(
-      spark.read.parquet(statsDir), dupIds, assetsPerShard,
-      shardDir = shardDir)
-  }
+      shardDir: Option[String] = None): DataFrame =
+    publishMediaSnapshot(spark, statsDir, longs("asset_id", "dhash", "rms_w"),
+      pairsDir, AssetPairSchema) { (stats, dupIds) =>
+      graft.operators.ImageHash.audioCurationPipelineFrom(stats, dupIds,
+        assetsPerShard, shardDir = shardDir)
+    }
 
   /** q234's publish half: cut the image-corpus snapshot from the ingest
     * stores — the near-dup drop set from the accumulated pair log, then
@@ -774,14 +622,21 @@ object Streams {
     * q234 face row for row after scrambled-order ingestion. */
   def publishImageCurationSnapshot(spark: SparkSession, statsDir: String,
       pairsDir: String, assetsPerShard: Long = 64,
-      shardDir: Option[String] = None): DataFrame = {
-    val dupIds = spark.read.parquet(pairsDir)
-      .select(org.apache.spark.sql.functions.col("a2").as("asset_id"))
-      .distinct()
-    graft.operators.ImageHash.imageCurationPipelineFrom(
-      spark.read.parquet(statsDir), dupIds, assetsPerShard,
-      shardDir = shardDir)
-  }
+      shardDir: Option[String] = None): DataFrame =
+    publishMediaSnapshot(spark, statsDir, longs("asset_id", "dhash", "mean_luma"),
+      pairsDir, AssetPairSchema) { (stats, dupIds) =>
+      graft.operators.ImageHash.imageCurationPipelineFrom(stats, dupIds,
+        assetsPerShard, shardDir = shardDir)
+    }
+
+  /** The media publish body: the drop set is every pair log's HIGHER
+    * asset (`a2`); `pipeline` runs the batch face over (store, drop set). */
+  private def publishMediaSnapshot(spark: SparkSession, storeDir: String,
+      storeSchema: StructType, pairsDir: String, pairSchema: StructType)(
+      pipeline: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    pipeline(ParquetStore.readOrEmpty(spark, storeDir, storeSchema),
+      ParquetStore.readOrEmpty(spark, pairsDir, pairSchema)
+        .select(col("a2").as("asset_id")).distinct())
 
   /** Watermarked stream-stream join: correlate two event streams per user
     * within a bounded interval (right event no earlier than the left, at

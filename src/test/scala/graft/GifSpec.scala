@@ -251,6 +251,14 @@ class GifSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(n == (1 << 24) / (1024 * 1024), s"$n frames")
     assert(frames.last._4(n - 1) == (n - 1) * 0x010101)
     assert(allocated < (128L << 20), s"allocated $allocated bytes")
+    // the still decode composites frame 0 only
+    val before1 = mx.getThreadAllocatedBytes(tid)
+    val (w, h, luma) = GifCodec.decodeLuma(gif).get
+    val firstOnly = mx.getThreadAllocatedBytes(tid) - before1
+    assert(firstOnly < (16L << 20), s"first-frame decode allocated $firstOnly bytes")
+    val (_, fw, fh, frame0) = GifCodec.decodeFrameLumas(gif).head
+    assert((w, h) == ((fw, fh)) && java.util.Arrays.equals(luma, frame0),
+      "decodeLuma must return frame 0")
   }
 
   test("q228 mixed corpus: GIF trans-code is hash-invariant, pairs cross a real LZW decode") {

@@ -231,6 +231,32 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(store.responses.count() == 10)
   }
 
+  test("stranded table: an append restores before probing the max id") {
+    val wh = tmpDir("wh")
+    val store = new ProvenanceStore(spark, wh)
+    def batch(tag: String, n: Int) = spark.range(0, n, 1, 2)
+      .select(
+        lit("p").as("provider"), lit("GET").as("method"),
+        concat(lit(s"https://x.test/$tag/"), col("id")).as("url"),
+        lit(null).cast("string").as("params_json"),
+        lit(200).as("status_code"), lit("{}").as("headers_json"),
+        lit("b".getBytes("UTF-8")).as("body"),
+        col("id").cast("int").as("item_index"), lit("metadata").as("stage"))
+    store.appendResponses(batch("a", 10))
+    val maxBefore = store.responses.agg(max("id")).as[Long].head()
+    // a crash between the swap's two renames strands the table aside
+    val dir = new org.apache.hadoop.fs.Path(s"$wh/responses")
+    val old = new org.apache.hadoop.fs.Path(s"$wh/responses.compact-old")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(dir, old), "test setup: strand the table")
+    val ids = store.appendResponses(batch("b", 5)).select("id").as[Long].collect()
+    assert(ids.forall(_ > maxBefore),
+      s"ids must continue past the pre-strand max $maxBefore: ${ids.sorted.toSeq}")
+    assert(!fs.exists(old), "the stranded table must be restored, not left aside")
+    assert(store.responses.count() == 15)
+    assert(store.responses.select("id").distinct().count() == 15)
+  }
+
   test("compaction ordering parity: DSv2 scan reports id order until an append withdraws it") {
     val wh = tmpDir("wh")
     val store = new ProvenanceStore(spark, wh)

@@ -451,6 +451,13 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(spark.read.parquet(hashDir).count() == 5, "replay must not re-index")
       assert(spark.read.parquet(pairsDir).select("a1", "a2")
         .as[(Long, Long)].collect().toSet == pairs, "replay must not re-emit pairs")
+      // one fresh asset delivered twice inside ONE micro-batch lands once
+      val twice = MediaAsset(12L, "image/x-portable-graymap",
+        p5(Array.fill(18 * 16)(rnd.nextInt(256))))
+      input.addData(twice, twice)
+      q.processAllAvailable()
+      assert(spark.read.parquet(hashDir).count() == 6,
+        "an in-batch duplicate must land one hash row")
     } finally q.stop()
   }
 
@@ -547,6 +554,30 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .select("d1", "d2").as[(Long, Long)].collect().toSet
       assert(after.contains((0L, 10L)) && after.contains((1L, 10L)),
         s"post-compaction batch must still see the corpus: $after")
+    } finally q.stop()
+  }
+
+  test("near-dup sink restores a stranded signature store before the next batch") {
+    val root = java.nio.file.Files.createTempDirectory("ndstrand").toString
+    val (sigDir, pairsDir) = (s"$root/sigs", s"$root/pairs")
+    val base = "spark runs distributed queries over very large datasets " +
+      "with columnar storage and adaptive execution planning across many " +
+      "worker nodes while caching hot partitions in memory"
+    val input = MemoryStream[(Long, String)](spark)
+    val q = Streams.nearDupSinkQuery(
+      input.toDF().toDF("doc_id", "text"), sigDir, pairsDir).start()
+    try {
+      input.addData((0L, base), (1L, base)); q.processAllAvailable()
+      // a compaction that crashed between its two renames
+      assert(new java.io.File(sigDir).renameTo(new java.io.File(s"$sigDir.compact-old")))
+      input.addData((10L, base)); q.processAllAvailable()
+      val pairs = spark.read.parquet(pairsDir)
+        .select("d1", "d2").as[(Long, Long)].collect().toSet
+      assert(pairs == Set((0L, 1L), (0L, 10L), (1L, 10L)),
+        s"doc 10 must pair with the stranded store's docs: $pairs")
+      assert(spark.read.parquet(sigDir).select("doc_id").as[Long].collect().sorted
+        .toSeq == Seq(0L, 1L, 10L))
+      assert(!new java.io.File(s"$sigDir.compact-old").exists())
     } finally q.stop()
   }
 
@@ -988,6 +1019,30 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .orderBy("src_a", "src_b").collect().map(_.toString).toSeq
       assert(got === want,
         "overlap matrix from the streamed store must equal the one-shot face")
+    } finally q.stop()
+  }
+
+  test("kmv sink restores a stranded sketch table: streamed table equals the one-shot sketch") {
+    import graft.operators.Curation
+    val sketchDir = java.nio.file.Files.createTempDirectory("kmv-strand").toString + "/kmv"
+    val docs = Tables.documents(spark, sf001)
+    def sketches(df: org.apache.spark.sql.DataFrame) =
+      df.select("source", "kmv").as[(String, Seq[Long])].collect().toMap
+    val want = sketches(Curation.sourceShingleKmv(docs))
+    val rows = docs.orderBy("doc_id")
+      .select("source", "text").as[(String, String)].collect()
+    val input = MemoryStream[(String, String)](spark)
+    val q = Streams.kmvSketchSinkQuery(
+      input.toDF().toDF("source", "text"), sketchDir).start()
+    try {
+      input.addData(rows.take(rows.length / 2).toIndexedSeq); q.processAllAvailable()
+      // a swap that crashed between its two renames
+      assert(new java.io.File(sketchDir)
+        .renameTo(new java.io.File(s"$sketchDir.compact-old")))
+      input.addData(rows.drop(rows.length / 2).toIndexedSeq); q.processAllAvailable()
+      assert(sketches(spark.read.parquet(sketchDir)) == want,
+        "the streamed table must hold both batches")
+      assert(!new java.io.File(s"$sketchDir.compact-old").exists())
     } finally q.stop()
   }
 
