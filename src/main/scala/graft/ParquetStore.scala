@@ -77,13 +77,17 @@ object ParquetStore {
     dataFiles(fs, dir).length
   }
 
-  /** The store read with its declared schema, or an empty frame of that
-    * schema when the store does not exist yet. */
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+  /** Whether the store exists, after a restore. */
+  def exists(spark: SparkSession, path: String): Boolean = {
     val (fs, dir) = fsOf(spark, path)
     restoreIfStranded(fs, dir)
-    if (fs.exists(dir)) spark.read.schema(schema).parquet(path) else empty(spark, schema)
+    fs.exists(dir)
   }
+
+  /** The store read with its declared schema, or an empty frame of that
+    * schema when the store does not exist yet. */
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    if (exists(spark, path)) spark.read.schema(schema).parquet(path) else empty(spark, schema)
 
   /** An empty frame of a store's schema (a store not written yet). */
   def empty(spark: SparkSession, schema: StructType): DataFrame =
@@ -121,9 +125,7 @@ object ParquetStore {
   def swapMerge(path: String, fresh: DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = fresh.sparkSession
-    val (fs, dir) = fsOf(spark, path)
-    restoreIfStranded(fs, dir)
-    if (!fs.exists(dir)) fresh.write.parquet(path)
+    if (!exists(spark, path)) fresh.write.parquet(path)
     else swap(path, merge(spark.read.parquet(path), fresh).localCheckpoint(eager = true))
   }
 

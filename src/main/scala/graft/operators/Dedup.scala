@@ -88,40 +88,12 @@ object Dedup {
   private[operators] val maxShingleDocFreq = 1000000
 
   /** Default cap on (band, key) bucket size for the MinHash/SimHash banded
-    * self-joins — the LSH analogue of [[maxShingleDocFreq]]. One degenerate
-    * band key (near-constant sketches from boilerplate-heavy docs) turns
-    * the candidate self-join quadratic: a 100k-doc bucket is 5×10⁹ pairs.
-    * AQE skew handling splits the *shuffle*, not the pair count, so the
-    * bucket must be dropped before the join. Dropping a giant bucket is
+    * joins — the LSH analogue of [[maxShingleDocFreq]], applied by
+    * [[BandJoin]] (see its skew guard). Dropping a giant bucket is
     * semantically safe for NEAR-dup detection: docs that collide at that
     * scale are boilerplate/identical, which exact dedup (q50) catches
     * first. No-op at testdata scale (500 docs < cap). */
   private[graft] val defaultLshBucketCap = 10000
-
-  /** Bucket keys whose combined row count across `sides` EXCEEDS `cap` —
-    * the drop-list for the skew guard. By pigeonhole it has at most
-    * n/cap keys (n/10⁴ at the default), so it broadcasts; the guarded
-    * sides anti-join against it with no shuffle of their own. Counting
-    * over the union of sides is what makes the incremental new-vs-corpus
-    * paths drop EXACTLY the buckets the self-join over the union drops
-    * (capping each side alone would keep a bucket whose halves are both
-    * under cap while their join still blows up quadratically). */
-  private[operators] def overCapBuckets(sides: Seq[DataFrame], keyCols: Seq[String],
-      cap: Int): DataFrame =
-    sides.map(_.select(keyCols.map(col): _*)).reduce(_ union _)
-      .groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-      .drop("bucket_n")
-
-  /** Keep only rows whose (bucket-key columns) group is within `cap` —
-    * shared skew guard for the banded self-joins below. Broadcast
-    * anti-join against the (tiny) over-cap set: the old form equi-joined
-    * every banded row with the full under-cap key list, which shuffled
-    * the whole banded frame a second time — measured as most of q52's r7
-    * regression. */
-  private def capBuckets(rows: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
-    rows.join(broadcast(overCapBuckets(Seq(rows), keyCols, cap)), keyCols, "left_anti")
 
   /** Shared oracle for q51/q78 — both compute the identical exact result,
     * so both hash-match the same SQL. */
@@ -2153,23 +2125,29 @@ object Dedup {
     // (the r6→r7 repartition-for-reuse never survived AQE — same failure
     // mode as q51's, same fix). Signatures compute once; the persisted
     // blocks are a constant numHashes longs per doc × bands.
-    val sigs = family match {
+    val banded = bandedSignatures(signatures(sh, numHashes, family), numHashes, bands)
+      .localCheckpoint(eager = false)
+    minhashScored(BandJoin.self(banded, "doc_id", Seq("band", "key"), Some(maxBucketSize)),
+      numHashes)
+  }
+
+  /** Signatures under the named lane family: the xxhash64 UDAF
+    * (production) or the md5 quarters (the oracle-checked q52 face). */
+  private def signatures(sh: DataFrame, numHashes: Int, family: String): DataFrame =
+    family match {
       case "xxhash64" => minhashSignaturesFrom(sh, numHashes)
       case "md5"      => minhashSignaturesMd5From(sh, numHashes)
       case other => throw new IllegalArgumentException(
         s"unknown minhash family '$other' (expected md5|xxhash64)")
     }
-    val banded = bandedSignatures(sigs, numHashes, bands)
-      .localCheckpoint(eager = false)
-    val capped = capBuckets(banded, Seq("band", "key"), maxBucketSize)
-    val a = capped.as("a")
-    val b = capped.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key")
-        && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        sigAgreement(numHashes).as("est_jaccard"))
+
+  /** (d1, d2, est_jaccard) per candidate pair: the share of agreeing
+    * signature lanes. */
+  private def minhashScored(c: BandJoin.Candidates, numHashes: Int): DataFrame =
+    c.rows.select(c.lo.as("d1"), c.hi.as("d2"),
+        (size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y), p => p))
+          .cast("double") / numHashes).as("est_jaccard"))
       .distinct()
-  }
 
   /** MinHash signature per doc: (doc_id, sig array<bigint> of length
     * numHashes). One-pass via the typed Aggregator UDAF: each shingle
@@ -2255,12 +2233,6 @@ object Dedup {
       .select(col("doc_id"), col("sig"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Estimated Jaccard = signature lane agreement between join sides
-    * aliased `a`/`b`. */
-  private def sigAgreement(numHashes: Int): Column =
-    size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y), p => p))
-      .cast("double") / numHashes
-
   /** Incremental near-dup: candidate pairs between a NEW batch and an
     * EXISTING corpus represented only by its persisted
     * [[minhashSignatures]] — the scheduled-crawl shape, where each
@@ -2275,10 +2247,7 @@ object Dedup {
     * ASSUMES batch and corpus doc_ids are disjoint (the ingest
     * pipeline's id stamping guarantees it).
     * The bucket cap counts the COMBINED (band, key) bucket across both
-    * sides — the same bucket the self-join over the union would count —
-    * so the cross-slice contract holds at every bucket size; capping
-    * each side independently would keep a bucket whose halves are both
-    * under cap while the joint join still goes quadratic. */
+    * sides, as [[BandJoin]] does for every capped probe. */
   def incrementalMinhashPairs(newDocs: DataFrame, corpusSigs: DataFrame,
       numHashes: Int, bands: Int,
       maxBucketSize: Int = defaultLshBucketCap,
@@ -2290,27 +2259,10 @@ object Dedup {
     // `family` must match the family that PRODUCED corpusSigs — the
     // md5 lane family feeds the q223 streaming twin, whose batch face
     // is the oracle-checked md5 q52 form.
-    val newSigs = family match {
-      case "xxhash64" => minhashSignatures(newDocs, numHashes)
-      case "md5"      => minhashSignaturesMd5From(shingles(newDocs), numHashes)
-      case other => throw new IllegalArgumentException(
-        s"unknown minhash family '$other' (expected md5|xxhash64)")
-    }
-    val newBanded = bandedSignatures(newSigs, numHashes, bands)
-      .localCheckpoint(eager = false)
-    val corpusBanded = bandedSignatures(corpusSigs, numHashes, bands)
-    val over = broadcast(overCapBuckets(
-      Seq(newBanded, corpusBanded), Seq("band", "key"), maxBucketSize))
-    val keys = Seq("band", "key")
-    newBanded.join(over, keys, "left_anti").as("a")
-      .join(corpusBanded.join(over, keys, "left_anti").as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
-        sigAgreement(numHashes).as("est_jaccard"))
-      .distinct()
+    val newBanded = bandedSignatures(signatures(shingles(newDocs), numHashes, family),
+      numHashes, bands).localCheckpoint(eager = false)
+    minhashScored(BandJoin.probe(newBanded, bandedSignatures(corpusSigs, numHashes, bands),
+      "doc_id", Seq("band", "key"), Some(maxBucketSize)), numHashes)
   }
 
   /** 64-bit SimHash sketch per doc: xxhash64 per word, ±1 vote per bit,
@@ -2440,16 +2392,16 @@ object Dedup {
     // bucket count and both join sides read the persisted keyed rows
     val keyed = blockKeyedSketches(sketches, maxHamming)
       .localCheckpoint(eager = false)
-    val capped = capBuckets(keyed, Seq("tbl", "key"), maxBucketSize)
-    val a = capped.as("a")
-    val b = capped.as("b")
-    a.join(b, col("a.tbl") === col("b.tbl") && col("a.key") === col("b.key")
-        && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+    simhashScored(BandJoin.self(keyed, "doc_id", Seq("tbl", "key"), Some(maxBucketSize)),
+      maxHamming)
+  }
+
+  /** (d1, d2, hamming) per candidate pair, kept within `maxHamming`. */
+  private def simhashScored(c: BandJoin.Candidates, maxHamming: Int): DataFrame =
+    c.rows.select(c.lo.as("d1"), c.hi.as("d2"),
         expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-  }
 
   /** Explode sketches into (doc_id, simhash, tbl, key) block-combination
     * rows (see [[simhashPairsFromSketches]] for the recall guarantee) —
@@ -2491,9 +2443,7 @@ object Dedup {
     * the union (block-combination keys depend only on each row's own
     * sketch, so recall over the hamming ball stays exactly 1), new↔new
     * pairs via the batch self-join. The bucket cap counts the COMBINED
-    * (tbl, key) bucket across both sides, matching what the self-join
-    * over the union drops — see [[incrementalMinhashPairs]] for why
-    * per-side capping would break the cross-slice contract. */
+    * (tbl, key) bucket across both sides, as in [[incrementalMinhashPairs]]. */
   def incrementalSimhashPairs(newDocs: DataFrame, corpusSketches: DataFrame,
       maxHamming: Int, maxBucketSize: Int = defaultLshBucketCap): DataFrame = {
     // barrier on the new side (its sketch runs the text pipeline; the
@@ -2502,19 +2452,7 @@ object Dedup {
     // worth re-persisting at corpus scale
     val newKeyed = blockKeyedSketches(simhashSketch(newDocs), maxHamming)
       .localCheckpoint(eager = false)
-    val corpusKeyed = blockKeyedSketches(corpusSketches, maxHamming)
-    val over = broadcast(overCapBuckets(
-      Seq(newKeyed, corpusKeyed), Seq("tbl", "key"), maxBucketSize))
-    val keys = Seq("tbl", "key")
-    newKeyed.join(over, keys, "left_anti").as("a")
-      .join(corpusKeyed.join(over, keys, "left_anti").as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.key") === col("b.key")
-          && col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
-        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    simhashScored(BandJoin.probe(newKeyed, blockKeyedSketches(corpusSketches, maxHamming),
+      "doc_id", Seq("tbl", "key"), Some(maxBucketSize)), maxHamming)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Perceptual image hashing + near-duplicate detection (q159): the
@@ -113,21 +113,10 @@ object ImageHash {
 
   /** Near-duplicate image pairs within `maxDist` Hamming bits via the
     * 4×16-bit banded join (exact for maxDist ≤ 3). */
-  def nearDupImagePairs(hashes: DataFrame, maxDist: Int = 3): DataFrame = {
-    val b = banded(hashes)
-      .localCheckpoint(eager = false) // consumers: both sides of the band join
-    b.as("a")
-      .join(b.as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.asset_id") < col("b.asset_id"))
-      .select(col("a.asset_id").as("a1"), col("b.asset_id").as("a2"),
-        col("a.dhash").as("h1"), col("b.dhash").as("h2"))
-      .distinct() // a pair can match in several bands
-      .select(col("a1"), col("a2"),
-        bit_count(col("h1").bitwiseXOR(col("h2"))).cast("long").as("dist"))
-      .filter(col("dist") <= maxDist)
-      .orderBy("a1", "a2")
-  }
+  def nearDupImagePairs(hashes: DataFrame, maxDist: Int = 3): DataFrame =
+    imagePairsScored(BandJoin.self(
+      banded(hashes).localCheckpoint(eager = false), // consumers: both join sides
+      "asset_id", Seq("band", "v"), None), maxDist)
 
   /** Incremental face of [[nearDupImagePairs]]: NEW hashes against a
     * STORED hash table only (never store × store — those pairs are
@@ -136,15 +125,16 @@ object ImageHash {
     * normalize to (min, max) so the log's key is orientation-free. */
   def incrementalNearDupPairs(newHashes: DataFrame, storeHashes: DataFrame,
       maxDist: Int = 3): DataFrame =
-    banded(newHashes).as("a")
-      .join(banded(storeHashes).as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.asset_id") =!= col("b.asset_id"))
-      .select(least(col("a.asset_id"), col("b.asset_id")).as("a1"),
-        greatest(col("a.asset_id"), col("b.asset_id")).as("a2"),
-        bit_count(col("a.dhash").bitwiseXOR(col("b.dhash"))).cast("long")
-          .as("dist"))
-      .distinct()
+    imagePairsScored(BandJoin.probe(banded(newHashes), banded(storeHashes),
+      "asset_id", Seq("band", "v"), None), maxDist)
+
+  /** (a1, a2, dist) per candidate pair within `maxDist` bits, in id order. */
+  private def imagePairsScored(c: BandJoin.Candidates, maxDist: Int): DataFrame =
+    c.rows.select(c.lo.as("a1"), c.hi.as("a2"),
+        col("a.dhash").as("h1"), col("b.dhash").as("h2"))
+      .distinct() // a pair can match in several bands
+      .select(col("a1"), col("a2"),
+        bit_count(col("h1").bitwiseXOR(col("h2"))).cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
       .orderBy("a1", "a2")
 
@@ -515,23 +505,25 @@ object ImageHash {
     * equi-join (never all-pairs); the aggregation keys on (a1, a2), so
     * the shuffle is bounded by matching frame pairs, not corpus size. */
   def videoNearDupPairs(frameHashes: DataFrame, maxDist: Int = 3,
-      minFrames: Long = 2): DataFrame = {
-    val b = banded(frameHashes, "frame_index")
-      .localCheckpoint(eager = false) // consumers: both sides of the band join
-    b.as("a")
-      .join(b.as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.asset_id") < col("b.asset_id"))
-      .select(col("a.asset_id").as("a1"), col("b.asset_id").as("a2"),
-        col("a.frame_index").as("f1"), col("b.frame_index").as("f2"),
+      minFrames: Long = 2): DataFrame =
+    videoPairsScored(BandJoin.self(
+        banded(frameHashes, "frame_index").localCheckpoint(eager = false), // both join sides
+        "asset_id", Seq("band", "v"), None),
+      col("a.frame_index"), col("b.frame_index"), maxDist, minFrames)
+      .orderBy("a1", "a2")
+
+  /** (a1, a2, n_match) per candidate video pair: the distinct frames
+    * `f1` of the lower asset that match a frame `f2` of the higher one
+    * within `maxDist` bits, kept at `minFrames` or more. */
+  private def videoPairsScored(c: BandJoin.Candidates, f1: Column, f2: Column,
+      maxDist: Int, minFrames: Long): DataFrame =
+    c.rows.select(c.lo.as("a1"), c.hi.as("a2"), f1.as("f1"), f2.as("f2"),
         col("a.dhash").as("h1"), col("b.dhash").as("h2"))
       .distinct() // a frame pair can match in several bands
       .filter(bit_count(col("h1").bitwiseXOR(col("h2"))) <= maxDist)
       .groupBy("a1", "a2")
       .agg(countDistinct(col("f1")).as("n_match"))
       .filter(col("n_match") >= minFrames)
-      .orderBy("a1", "a2")
-  }
 
   /** Deterministic MJPEG-in-MP4 corpus (q225): each doc becomes a real
     * ISO BMFF container of 3 + doc_id % 5 frames, every frame a real
@@ -582,24 +574,14 @@ object ImageHash {
     * so the pair (a, b) is complete at the later arrival. */
   def incrementalVideoNearDupPairs(newHashes: DataFrame,
       storeHashes: DataFrame, maxDist: Int = 3,
-      minFrames: Long = 2): DataFrame =
-    banded(newHashes, "frame_index").as("a")
-      .join(banded(storeHashes, "frame_index").as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.asset_id") =!= col("b.asset_id"))
-      .select(
-        least(col("a.asset_id"), col("b.asset_id")).as("a1"),
-        greatest(col("a.asset_id"), col("b.asset_id")).as("a2"),
-        when(col("a.asset_id") < col("b.asset_id"), col("a.frame_index"))
-          .otherwise(col("b.frame_index")).as("f1"),
-        when(col("a.asset_id") < col("b.asset_id"), col("b.frame_index"))
-          .otherwise(col("a.frame_index")).as("f2"),
-        col("a.dhash").as("h1"), col("b.dhash").as("h2"))
-      .distinct() // a frame pair can match in several bands
-      .filter(bit_count(col("h1").bitwiseXOR(col("h2"))) <= maxDist)
-      .groupBy("a1", "a2")
-      .agg(countDistinct(col("f1")).as("n_match"))
-      .filter(col("n_match") >= minFrames)
+      minFrames: Long = 2): DataFrame = {
+    val aLow = col("a.asset_id") < col("b.asset_id")
+    videoPairsScored(BandJoin.probe(banded(newHashes, "frame_index"),
+        banded(storeHashes, "frame_index"), "asset_id", Seq("band", "v"), None),
+      when(aLow, col("a.frame_index")).otherwise(col("b.frame_index")),
+      when(aLow, col("b.frame_index")).otherwise(col("a.frame_index")),
+      maxDist, minFrames)
+  }
 
   /** The drop set of the video near-dup gate: the HIGHER asset of every
     * pair (the monotone keep-lowest rule the at-ingest sink can apply

@@ -2174,18 +2174,21 @@ object Similarity {
   def incrementalCosinePairsLsh(newEmbeddings: DataFrame, corpusKeys: DataFrame,
       corpusVectors: DataFrame, threshold: Double,
       planesPerBand: Int, bands: Int): DataFrame = {
-    val newKeyed = lshBandKeys(newEmbeddings, planesPerBand, bands)
-    val cand = newKeyed.select(col("vec_id").as("nv"), col("band"), col("key"))
-      .join(corpusKeys.select(col("vec_id").as("cv"), col("band"), col("key")),
-        Seq("band", "key"))
-      .filter(col("nv") =!= col("cv"))
-      .select(least(col("nv"), col("cv")).as("v1"),
-        greatest(col("nv"), col("cv")).as("v2"))
-      .distinct()
     val vecs = withNorm(
       newEmbeddings.select("vec_id", "embedding")
         .unionByName(corpusVectors.select("vec_id", "embedding")))
-    cand
+    rescored(BandJoin.probe(lshBandKeys(newEmbeddings, planesPerBand, bands),
+      corpusKeys, "vec_id", Seq("band", "key"), None), vecs, threshold)
+  }
+
+  /** The exact graft_dot re-score of LSH candidates: bare (v1, v2) id
+    * pairs dedup across bands BEFORE vectors attach (the dedup shuffle
+    * moves 16-byte pairs, not kilobyte vectors), then each pair's vectors
+    * attach by id from `vecs` (vec_id, emb, norm) and cos_sim >= threshold
+    * is kept. Emitted similarities are exact; only recall depends on the
+    * banding. */
+  private def rescored(c: BandJoin.Candidates, vecs: DataFrame, threshold: Double): DataFrame =
+    c.rows.select(c.lo.as("v1"), c.hi.as("v2")).distinct()
       .join(vecs.select(col("vec_id").as("v1"), col("emb").as("emb1"),
         col("norm").as("norm1")), "v1")
       .join(vecs.select(col("vec_id").as("v2"), col("emb").as("emb2"),
@@ -2193,7 +2196,6 @@ object Similarity {
       .select(col("v1"), col("v2"),
         round(dot("emb1", "emb2") / (col("norm1") * col("norm2")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-  }
 
   /** Cosine threshold pairs via LSH candidates — the 100 TB form of q55's
     * all-pairs scan. Both sides of the self-join carry primary band keys;
@@ -2203,7 +2205,6 @@ object Similarity {
     * pairs are seen) is approximate, governed by (planesPerBand, bands). */
   def cosineThresholdPairsLsh(embeddings: DataFrame, threshold: Double,
                               planesPerBand: Int, bands: Int): DataFrame = {
-    val e = withNorm(embeddings)
     // repartition by the band key: both self-join sides hang off one
     // canonical exchange for AQE's runtime stage cache to dedupe. At
     // tiny SF the join broadcast-converts and the projection subtree
@@ -2215,23 +2216,8 @@ object Similarity {
     // UnknownPartitioning, so the reuse form is kept.
     val keyed = lshBandKeys(embeddings, planesPerBand, bands)
       .repartition(col("band"), col("key"))
-    // candidate id pairs from the (band, key) equi-join; dedup the bare
-    // (v1, v2) ids across bands BEFORE re-attaching embeddings — the dedup
-    // shuffle then moves 16-byte pairs instead of kilobyte vectors
-    val pairs = keyed.select(col("vec_id").as("v1"), col("band"), col("key"))
-      .join(keyed.select(col("vec_id").as("v2"), col("band"), col("key")),
-        Seq("band", "key"))
-      .filter(col("v1") < col("v2"))
-      .select("v1", "v2")
-      .distinct()
-    pairs
-      .join(e.select(col("vec_id").as("v1"), col("emb").as("emb1"),
-        col("norm").as("norm1")), "v1")
-      .join(e.select(col("vec_id").as("v2"), col("emb").as("emb2"),
-        col("norm").as("norm2")), "v2")
-      .select(col("v1"), col("v2"),
-        round(dot("emb1", "emb2") / (col("norm1") * col("norm2")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    rescored(BandJoin.self(keyed, "vec_id", Seq("band", "key"), None),
+      withNorm(embeddings), threshold)
   }
 
   /** [[cosineThresholdPairsLsh]] under the md5 plane family (q55b's
@@ -2259,20 +2245,7 @@ object Similarity {
       .withColumn("bk", explode(bandKeysExprOn("mm", "0", planesPerBand, bands)))
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
       .localCheckpoint(eager = false) // both self-join sides
-    val pairs = keyed.select(col("vec_id").as("v1"), col("band"), col("key"))
-      .join(keyed.select(col("vec_id").as("v2"), col("band"), col("key")),
-        Seq("band", "key"))
-      .filter(col("v1") < col("v2"))
-      .select("v1", "v2")
-      .distinct()
-    pairs
-      .join(e.select(col("vec_id").as("v1"), col("emb").as("emb1"),
-        col("norm").as("norm1")), "v1")
-      .join(e.select(col("vec_id").as("v2"), col("emb").as("emb2"),
-        col("norm").as("norm2")), "v2")
-      .select(col("v1"), col("v2"),
-        round(dot("emb1", "emb2") / (col("norm1") * col("norm2")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    rescored(BandJoin.self(keyed, "vec_id", Seq("band", "key"), None), e, threshold)
   }
 
   /** Johnson-Lindenstrauss ±1 random projection (q117; Achlioptas 2003):

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.util
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import graft.ParquetStore
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException}
@@ -81,38 +82,42 @@ object SpjProvenance {
     * Rewrites each bucket directory holding more than `maxRunsPerBucket`
     * files into ONE key-sorted file (buckets are independent — the
     * rewrite is a single narrow sorted pass per bucket, done bucket-by-
-    * bucket so a 100 TB table never needs a global rewrite, and the
-    * directory-rename swap keeps concurrent readers on old-or-new).
+    * bucket so a 100 TB table never needs a global rewrite, and
+    * [[ParquetStore.swap]] keeps concurrent readers on old-or-new).
     * Returns (bucketsCompacted, filesBefore). */
   def compactBuckets(
       spark: org.apache.spark.sql.SparkSession,
       warehouse: String, table: String,
       maxRunsPerBucket: Int = 8): (Int, Int) = {
     val key = keyColumnFor(table)
-    val root = new java.io.File(tableDir(warehouse, table))
-    val bucketDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+    val root = new Path(tableDir(warehouse, table))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     var compacted = 0
     var filesBefore = 0
-    bucketDirs.foreach { d =>
-      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      if (files.length > maxRunsPerBucket) {
-        filesBefore += files.length
-        val tmp = new java.io.File(d.getParent, d.getName + ".compact-tmp")
-        val old = new java.io.File(d.getParent, d.getName + ".compact-old")
-        spark.read.parquet(d.getPath)
-          .coalesce(1).sortWithinPartitions(key)
-          .write.mode("overwrite").parquet(tmp.getPath)
-        java.nio.file.Files.move(d.toPath, old.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        java.nio.file.Files.move(tmp.toPath, d.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        org.apache.commons.io.FileUtils.deleteDirectory(old)
+    bucketDirs(fs, root).foreach { case (_, d) =>
+      val files = ParquetStore.dataFiles(fs, d).length
+      if (files > maxRunsPerBucket) {
+        filesBefore += files
+        ParquetStore.swap(d.toString,
+          spark.read.parquet(d.toString).coalesce(1).sortWithinPartitions(key))
         compacted += 1
       }
     }
     (compacted, filesBefore)
   }
+
+  private val BucketDir = """bucket=(\d+)(?:\.compact-old)?""".r
+
+  /** The table's `(b, bucket=<b>)` directories in bucket order. A bucket
+    * that a crashed compaction stranded at `bucket=<b>.compact-old` is
+    * listed too: [[ParquetStore.dataFiles]] restores it before listing its
+    * files, so no reader misses its rows. */
+  private[sources] def bucketDirs(fs: FileSystem, root: Path): Seq[(Int, Path)] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case BucketDir(b) => b.toInt }
+      .distinct.sorted
+      .map(b => b -> new Path(root, s"bucket=$b"))
 }
 
 /** V2 catalog exposing the SPJ layout: TableCatalog for the two tables,
@@ -234,18 +239,11 @@ private[sources] class SpjScan(
     // session conf, not a bare Configuration: hdfs://-s3a:// warehouses
     // need the session's spark.hadoop.* credentials to list
     val fs = path.getFileSystem(ProvenanceDataSource.hadoopConf())
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map { d =>
-        val b = d.getPath.getName.stripPrefix("bucket=").toInt
-        val files = fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toString).toSeq.sorted
-        b -> files
+    SpjProvenance.bucketDirs(fs, path)
+      .map { case (b, d) =>
+        b -> ParquetStore.dataFiles(fs, d).map(_.getPath.toString).toSeq.sorted
       }
       .filter(_._2.nonEmpty)
-      .sortBy(_._1)
   }
 
   override def outputPartitioning(): Partitioning =

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import scala.util.Using
+import graft.ParquetStore
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,20 +17,27 @@ import org.apache.spark.sql.functions._
   *   4. append survivors, advance W to max(ts) observed
   *
   * State layout under `stateDir`: `data/` (parquet) + `watermark` (epoch
-  * micros text). At scale, `data/` is a partitioned table and the anti-join
-  * runs against only the partitions inside the overlap horizon — bounded
-  * work regardless of history size.
+  * micros text), both read and written through the state dir's Hadoop
+  * FileSystem, so an hdfs:// or s3a:// state dir behaves as a local one.
+  * At scale, `data/` is a partitioned table and the anti-join runs
+  * against only the partitions inside the overlap horizon — bounded work
+  * regardless of history size.
   */
 object WatermarkSync {
 
   case class SyncResult(appended: Long, watermarkMicros: Long)
 
-  private def wmPath(stateDir: String) = Paths.get(stateDir, "watermark")
+  private def wmPath(spark: SparkSession, stateDir: String): (FileSystem, Path) = {
+    val p = new Path(stateDir, "watermark")
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
   private def dataPath(stateDir: String) = s"$stateDir/data"
 
-  def readWatermark(stateDir: String): Option[Long] = {
-    val p = wmPath(stateDir)
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8").trim.toLong)
+  def readWatermark(stateDir: String,
+      spark: SparkSession = SparkSession.active): Option[Long] = {
+    val (fs, p) = wmPath(spark, stateDir)
+    if (fs.exists(p))
+      Some(Using.resource(fs.open(p))(in => new String(in.readAllBytes(), "UTF-8")).trim.toLong)
     else None
   }
 
@@ -37,7 +46,7 @@ object WatermarkSync {
   val partitionCol = "sync_date"
 
   def stored(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    if (new java.io.File(dataPath(stateDir)).exists())
+    if (ParquetStore.exists(spark, dataPath(stateDir)))
       Some(spark.read.parquet(dataPath(stateDir)))
     else None
 
@@ -69,8 +78,7 @@ object WatermarkSync {
       tsCol: String,
       keyCols: Seq[String],
       overlap: String = "48 hours"): SyncResult = {
-    Files.createDirectories(Paths.get(stateDir))
-    val prevWm = readWatermark(stateDir)
+    val prevWm = readWatermark(stateDir, spark)
     val horizon = prevWm match {
       case Some(wm) =>
         incoming.filter(
@@ -99,8 +107,10 @@ object WatermarkSync {
           .parquet(dataPath(stateDir))
       val batchMax = if (stats.isNullAt(1)) None else Some(stats.getLong(1))
       val newWm = (prevWm ++ batchMax).maxOption
-      newWm.foreach(wm =>
-        Files.write(wmPath(stateDir), wm.toString.getBytes("UTF-8")))
+      newWm.foreach { wm =>
+        val (fs, p) = wmPath(spark, stateDir)
+        Using.resource(fs.create(p, true))(_.write(wm.toString.getBytes("UTF-8")))
+      }
       SyncResult(n, newWm.getOrElse(Long.MinValue))
     } finally deduped.unpersist()
   }

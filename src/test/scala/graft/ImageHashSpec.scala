@@ -206,6 +206,21 @@ class ImageHashSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(inc.nonEmpty)
   }
 
+  test("q225 incremental video face equals the full face restricted to batch×store pairs") {
+    val docs = Tables.documents(spark, sf001)
+    val frames = ImageHash.videoFrameHashes(ImageHash.syntheticMjpeg(docs))
+    val full = ImageHash.videoNearDupPairs(frames).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .filter(p => p._1 % 2 != p._2 % 2) // one store (even), one batch (odd)
+      .toSet
+    val inc = ImageHash.incrementalVideoNearDupPairs(
+        frames.filter(col("asset_id") % 2 === 1),
+        frames.filter(col("asset_id") % 2 === 0)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(inc === full, "incremental must equal the restricted full face")
+    assert(inc.nonEmpty, "sf0.001 must plant at least one cross-parity video sibling")
+  }
+
   test("q159 synthetic corpus: every planted sibling pair within 3 bits is recovered, nothing else") {
     val docs = Tables.documents(spark, sf001)
     val hashes = ImageHash.imageHashes(ImageHash.syntheticPnm(docs))

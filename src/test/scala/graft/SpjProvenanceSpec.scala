@@ -158,6 +158,37 @@ class SpjProvenanceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(SpjProvenance.compactBuckets(spark, wh, "responses", 4) == ((0, 0)))
   }
 
+  test("a bucket stranded by a crashed compaction swap is restored before scan and compaction") {
+    val wh = java.nio.file.Files.createTempDirectory("spj").toString
+    (0 until 10).foreach { i =>
+      SpjProvenance.write(
+        responseRows(200).filter(col("id") >= i * 20 && col("id") < (i + 1) * 20),
+        wh, "responses", buckets)
+    }
+    val root = new java.io.File(s"$wh/spj/responses")
+    // a crash between the swap's two renames leaves bucket=<b> missing and
+    // its rows at bucket=<b>.compact-old
+    def strand(b: Int): Unit =
+      assert(new java.io.File(root, s"bucket=$b")
+        .renameTo(new java.io.File(root, s"bucket=$b.compact-old")))
+    def restored(b: Int): Boolean =
+      new java.io.File(root, s"bucket=$b").isDirectory &&
+        !new java.io.File(root, s"bucket=$b.compact-old").exists()
+    strand(3)
+    withSpjCatalog("spj_strand", wh) {
+      assert(spark.table("spj_strand.responses").count() == 200)
+    }
+    assert(restored(3))
+    strand(5)
+    val (compacted, _) = SpjProvenance.compactBuckets(spark, wh, "responses",
+      maxRunsPerBucket = 4)
+    assert(compacted == buckets, s"the stranded bucket must compact too: $compacted")
+    assert(restored(5))
+    withSpjCatalog("spj_strand2", wh) {
+      assert(spark.table("spj_strand2.responses").count() == 200)
+    }
+  }
+
   test("column pruning reaches the SPJ scan") {
     val wh = java.nio.file.Files.createTempDirectory("spj").toString
     SpjProvenance.write(responseRows(50), wh, "responses", buckets)

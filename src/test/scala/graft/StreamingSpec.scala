@@ -1142,6 +1142,22 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     } finally q.stop()
   }
 
+  test("watermark sync on a non-file: scheme: a replayed batch lands 0 rows") {
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${OtherSchemeLocalFileSystem.scheme}.impl", classOf[OtherSchemeLocalFileSystem].getName)
+    val state = s"${OtherSchemeLocalFileSystem.scheme}:" +
+      java.nio.file.Files.createTempDirectory("wm-scheme").toString
+    val batch = Seq((1L, "2024-01-10 00:00:00"), (2L, "2024-01-10 06:00:00"))
+      .toDF("key", "tss").select(col("key"), to_timestamp(col("tss")).as("ts"))
+    val sync = graft.streaming.WatermarkSync
+    assert(sync.syncBatch(spark, batch, state, "ts", Seq("key")).appended == 2)
+    assert(sync.syncBatch(spark, batch, state, "ts", Seq("key")).appended == 0,
+      "the landed table must be found through the path's FileSystem")
+    assert(sync.stored(spark, state).get.count() == 2)
+    assert(sync.readWatermark(state, spark) ===
+      Some(batch.agg(max(unix_micros(col("ts")))).head().getLong(0)))
+  }
+
   test("anomaly twin late-data gate: beyond-horizon rows dropped, never mis-scored") {
     val conf = spark.conf
     val prevProvider = conf.get("spark.sql.streaming.stateStore.providerClass",
@@ -1177,4 +1193,15 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
       } finally q.stop()
     } finally conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
   }
+}
+
+/** The local file system under a scheme of its own: a store on it is
+  * reachable only through Hadoop's FileSystem API, as on hdfs:// or s3a://. */
+class OtherSchemeLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${OtherSchemeLocalFileSystem.scheme}:///")
+  override def getScheme: String = OtherSchemeLocalFileSystem.scheme
+}
+
+object OtherSchemeLocalFileSystem {
+  val scheme = "graftlocal"
 }
